@@ -329,7 +329,7 @@ object FuncParity {
     "MAP" -> Ledger("SELECT MAP('s', symbol) AS m FROM t",
       "parity-verified",
       s"$FS 'MAP stringifies integer keys' (functions.rs:1352-1383)",
-      "keys route through velo_map_key: integer keys stringify (MAP(1,'x') = {\"1\":\"x\"} " +
+      "keys route through VeloMapKey: integer keys stringify (MAP(1,'x') = {\"1\":\"x\"} " +
         "— every reference map is string-keyed), any other key type is REJECTED at " +
         "analysis where the reference rejects it per record at run time; odd arg counts " +
         "error in both engines"),
@@ -395,6 +395,22 @@ object FuncParity {
       "parity-verified", s"$FS window surface; q9_rows_frame oracle exercises frames")
   )
 
+  /** The context every ledger probe runs in: the fixture table `t`
+    * (FunctionSurfaceSpec's shape) registered stream-like, so it carries
+    * the system columns and a 'source' header. */
+  private[graft] def probeContext(spark: SparkSession): graft.sql.VeloContext = {
+    val ctx = new graft.sql.VeloContext(spark, defaultTimeCol = "event_time")
+    import spark.implicits._
+    val t = Seq(
+      (1L, "AAPL", 100.0, 10L, "{\"k\": 7}", java.sql.Timestamp.valueOf("2024-03-05 10:00:00")),
+      (2L, "AAPL", 101.5, 12L, "{\"k\": 9}", java.sql.Timestamp.valueOf("2024-03-05 10:04:00")),
+      (3L, "MSFT", 55.0, 5L, "{\"k\": 1}", java.sql.Timestamp.valueOf("2024-03-05 11:00:00")),
+      (4L, "MSFT", 57.5, 6L, "{\"k\": 3}", java.sql.Timestamp.valueOf("2024-03-06 09:30:00"))
+    ).toDF("id", "symbol", "price", "volume", "props", "event_time")
+    ctx.registerStreamLike("t", t, "event_time", "id")
+    ctx
+  }
+
   // (r12 review) an earlier notFunctions suppression set filtered
   // EXTRACT-part names (YEAR, WEEK, …) out of the arm scrape — grep
   // shows NO such arm heads exist in either dispatch file, so the
@@ -451,15 +467,7 @@ object FuncParity {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val ctx = new graft.sql.VeloContext(spark, defaultTimeCol = "event_time")
-      import spark.implicits._
-      val t = Seq(
-        (1L, "AAPL", 100.0, 10L, "{\"k\": 7}", java.sql.Timestamp.valueOf("2024-03-05 10:00:00")),
-        (2L, "AAPL", 101.5, 12L, "{\"k\": 9}", java.sql.Timestamp.valueOf("2024-03-05 10:04:00")),
-        (3L, "MSFT", 55.0, 5L, "{\"k\": 1}", java.sql.Timestamp.valueOf("2024-03-05 11:00:00")),
-        (4L, "MSFT", 57.5, 6L, "{\"k\": 3}", java.sql.Timestamp.valueOf("2024-03-06 09:30:00"))
-      ).toDF("id", "symbol", "price", "volume", "props", "event_time")
-      ctx.registerStreamLike("t", t, "event_time", "id")
+      val ctx = probeContext(spark)
 
       val rows = byName.values.toSeq.sortBy(_.name).map { f =>
         val entry = ledger.get(f.name)

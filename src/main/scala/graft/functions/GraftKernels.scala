@@ -171,28 +171,11 @@ object GraftKernels {
       lit(nCentroids), lit(dim), lit(nprobe), lit(floatElems))
   }
 
-  /** Reference value→string rendering as a Column (VeloExprs.VeloStr):
-    * floats through the Rust-Display kernel, all else Spark cast. */
-  def veloStrCol(c: Column): Column =
-    GraftBridge.column(VeloExprs.VeloStr(GraftBridge.expression(c)))
-
-  /** Reference NULLIF as a Column (VeloExprs.VeloNullIf). */
-  def veloNullIfCol(a: Column, b: Column): Column =
-    GraftBridge.column(VeloExprs.VeloNullIf(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Reference REGEXP as a Column — the veloRegexpLike kernel (Unicode
-    * classes + (?P<…> spelling + shared pattern cache), so the Column
-    * API cannot diverge from the dialect's velo_regexp (r16 review). */
-  def veloRegexpCol(c: Column, pattern: Column): Column =
-    // through the shared invoke() (r17 review: a hand-spelled
-    // StaticInvoke twin here would miss a future null/type-policy
-    // change to the helper — the module's own drift hazard)
-    invoke(BooleanType, "veloRegexpLike", Seq(StringType, StringType), c, pattern)
-
   /** Register the kernels as SQL functions so dialect / spark.sql text
     * can call them directly: SIMHASH(text), FINGERPRINT(text),
     * MINHASH_SIG(text, k, numHashes), COSINE_SIM(a, b) on float arrays,
-    * SHINGLES(text, k). */
+    * SHINGLES(text, k) — and the dialect's function table
+    * (VeloExprs.dialectFunctions), each builder under its `velo_` name. */
   def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
@@ -208,13 +191,6 @@ object GraftKernels {
           inputTypes = inTypes, propagateNull = true, returnNullable = false),
         "scala_udf")
     reg("simhash", LongType, "simhash", Seq(StringType))
-    reg("velo_regexp_replace", StringType, "veloRegexpReplace",
-      Seq(StringType, StringType, StringType, StringType))
-    // REGEXP through the same cache/Unicode/named-group machinery —
-    // Spark's regexp_like compiled with Java defaults (ASCII \w/\s,
-    // no (?P<…> spelling), diverging from the Rust regex crate the
-    // reference uses (r16 review)
-    reg("velo_regexp", BooleanType, "veloRegexpLike", Seq(StringType, StringType))
     reg("fingerprint", LongType, "fingerprint", Seq(StringType))
     reg("minhash_sig", ArrayType(LongType, containsNull = false), "minhashSig",
       Seq(StringType, IntegerType, IntegerType))
@@ -228,93 +204,15 @@ object GraftKernels {
         inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType), BooleanType),
         propagateNull = true, returnNullable = false),
       "scala_udf")
-    // Reference-parity string functions the renames map routes to
-    // (functions.rs edge semantics Spark's built-ins diverge from —
-    // see VeloFunctions for the Column-API twins):
-    // SPLIT(str, delim) = FIRST part as a string
-    locally {
-      import org.apache.spark.sql.catalyst.expressions._
-      // arity gate for the expression-builder registrations (r17
-      // review): these build from fixed arg positions, so without the
-      // gate SPLIT(s, d, 2) silently DROPPED its third argument and
-      // returned part 1 (the Spark-split caller expected part 3), and
-      // a missing argument threw a raw IndexOutOfBoundsException —
-      // velo_position below had the fail-loud pattern, the rest
-      // lacked it. Errors name the DIALECT spelling the user typed.
-      def checked(dialectName: String, lo: Int, hi: Int)(
-          build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-        args => {
-          if (args.length < lo || args.length > hi) {
-            val want = if (lo == hi) s"$lo" else s"$lo to $hi"
-            throw new IllegalArgumentException(
-              s"$dialectName expects $want argument(s), got ${args.length}")
-          }
-          build(args)
-        }
-      registry.createOrReplaceTempFunction("velo_split",
-        checked("SPLIT", 2, 2)(args => SubstringIndex(args(0), args(1), Literal(1))),
-        "scala_udf")
-      // JOIN(delim, v1, v2, …) — variadic, delimiter first, NULL
-      // VALUE rendered as the literal 'NULL' (concat_ws would skip it);
-      // values stringify through the reference rendering (floats as
-      // Rust Display — functions.rs:1027 f.to_string()). The DELIMITER
-      // is strict: non-string type or null value errors, as the
-      // reference does (functions.rs:1011-1019; see VeloJoinDelim)
-      registry.createOrReplaceTempFunction("velo_join",
-        checked("JOIN", 2, Int.MaxValue)(args =>
-          ConcatWs(VeloExprs.VeloJoinDelim(args.head) +:
-            args.tail.map(a => Coalesce(Seq(VeloExprs.VeloStr(a), Literal("NULL")))))),
-        "scala_udf")
-      // reference value→string rendering (see VeloExprs.VeloStr) —
-      // CONCAT / STRING_AGG / SET_HEADER lowerings build on it
-      registry.createOrReplaceTempFunction("velo_str",
-        checked("STR", 1, 1)(args => VeloExprs.VeloStr(args(0))), "scala_udf")
-      // NULLIF through values_equal's type-dispatch (epsilon floats;
-      // timestamp/date/decimal pairs NEVER null — see VeloExprs)
-      registry.createOrReplaceTempFunction("velo_nullif",
-        checked("NULLIF", 2, 2)(args => VeloExprs.VeloNullIf(args(0), args(1))), "scala_udf")
-      // TRIM family strips ALL Unicode whitespace (Rust str::trim) —
-      // pattern constants shared with VeloFunctions' trim trio, which
-      // was a hand-kept copy (r16 review)
-      def utrim(name: String, pat: String): Seq[Expression] => Expression =
-        checked(name, 1, 1)(args => RegExpReplace(args.head, Literal(pat), Literal("")))
-      registry.createOrReplaceTempFunction("velo_trim", utrim("TRIM", TrimBothPat), "scala_udf")
-      registry.createOrReplaceTempFunction("velo_ltrim", utrim("LTRIM", TrimLeftPat), "scala_udf")
-      registry.createOrReplaceTempFunction("velo_rtrim", utrim("RTRIM", TrimRightPat), "scala_udf")
-      // POSITION is BYTE-based in the reference (str::find over UTF-8
-      // bytes — functions.rs:2489; the optional 3rd arg is a byte start
-      // offset, clamped to >= 1, NULL start → NULL). A latin1 round-trip
-      // makes chars == bytes, so the codegen'd StringLocate does the
-      // byte math; a valid-UTF-8 needle can only match on char
-      // boundaries, so the result is identical to Rust's byte find.
-      def lat1(e: Expression): Expression =
-        new StringDecode(new Encode(e, Literal("UTF-8")), Literal("ISO-8859-1"))
-      registry.createOrReplaceTempFunction("velo_position",
-        args => {
-          if (args.length < 2 || args.length > 3)
-            throw new IllegalArgumentException("POSITION expects (substring, string[, start])")
-          val loc = StringLocate(lat1(args(0)), lat1(args(1)),
-            if (args.length == 3) Greatest(Seq(Cast(args(2), IntegerType), Literal(1)))
-            else Literal(1))
-          if (args.length == 3) If(IsNull(args(2)), Literal(null, IntegerType), loc)
-          else loc
-        }, "scala_udf")
-      // type-dispatched reference-parity expressions (VeloExprs): the
-      // evaluator branches on runtime type; these branch ONCE at
-      // analysis via RuntimeReplaceable and lower to codegen'd builtins
-      registry.createOrReplaceTempFunction("velo_round",
-        checked("ROUND", 1, 2)(args => VeloExprs.VeloRound(args(0),
-          if (args.length > 1) args(1) else Literal(0))), "scala_udf")
-      registry.createOrReplaceTempFunction("velo_array_length",
-        checked("ARRAY_LENGTH", 1, 1)(args => VeloExprs.VeloArrayLength(args(0))), "scala_udf")
-      registry.createOrReplaceTempFunction("velo_map_keys",
-        checked("MAP_KEYS", 1, 1)(args => VeloExprs.VeloMapKeys(args(0))), "scala_udf")
-      registry.createOrReplaceTempFunction("velo_array_contains",
-        checked("ARRAY_CONTAINS", 2, 2)(args =>
-          VeloExprs.VeloArrayContains(args(0), args(1))), "scala_udf")
-      // MAP key gate + stringification (functions.rs:1369-1379)
-      registry.createOrReplaceTempFunction("velo_map_key",
-        checked("velo_map_key", 1, 1)(args => VeloExprs.VeloMapKey(args(0))), "scala_udf")
+    // the row's arity gate guards direct velo_ callers too (r17 review:
+    // builders read fixed arg positions, so without it SPLIT(s, d, 2)
+    // silently DROPPED its third argument and a missing argument threw
+    // a raw IndexOutOfBoundsException). Errors name the dialect spelling.
+    VeloExprs.dialectFunctions.foreach { f =>
+      registry.createOrReplaceTempFunction(f.veloName, args => {
+        f.arityError(f.names.head, args.length).foreach(m => throw new IllegalArgumentException(m))
+        f.build(args.toSeq)
+      }, "scala_udf")
     }
   }
 
@@ -410,9 +308,8 @@ object GraftKernels {
   private[graft] def regexCacheSize: Int = veloRegexCache.size
 
   /** The ONE spelling of the reference's Unicode trim patterns (Rust
-    * str::trim via (?U) \s), shared by the SQL registrations below and
-    * VeloFunctions' Column-API trim trio (r16 review: two hand-kept
-    * copies). */
+    * str::trim via (?U) \s), used by the TRIM family's builder
+    * (VeloExprs.trim) that both the dialect and VeloFunctions run. */
   private[functions] val TrimBothPat = "(?U)^\\s+|(?U)\\s+$"
   private[functions] val TrimLeftPat = "(?U)^\\s+"
   private[functions] val TrimRightPat = "(?U)\\s+$"

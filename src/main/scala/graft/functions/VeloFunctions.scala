@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 /** The reference engine's scalar/aggregate function surface, re-expressed
@@ -10,20 +12,20 @@ import org.apache.spark.sql.functions._
   * and src/velostream/sql/execution/expression/. Names follow the
   * reference (velostream is case-insensitive; we expose lowerCamel).
   *
+  * A function the dialect also spells calls the SAME VeloExprs builder
+  * the dialect's `velo_` registration runs, so the two spellings cannot
+  * drift; the semantics are documented there. The one intended
+  * difference is [[headerKeys]]: an array here, the reference's
+  * comma-joined string in SQL.
+  *
   * Everything here stays inside WholeStageCodegen — no Scala UDFs.
   */
 object VeloFunctions {
 
   // ---- Math (reference: FUNCTION_CATALOG.md "Math Functions") ----
   def veloAbs(c: Column): Column = abs(c)
-  // VeloExprs.VeloRound, not Spark's exact-decimal HALF_UP round: the
-  // Column API and the dialect's velo_round must answer identically
-  // (ROUND(8.835, 2) is 8.84 through the reference's f64 product but
-  // 8.83 exact-decimal; integers pass through at ANY precision;
-  // decimals keep their declared scale) (r16 review)
   def veloRound(c: Column, scale: Int = 0): Column =
-    GraftBridge.column(VeloExprs.VeloRound(
-      GraftBridge.expression(c), GraftBridge.expression(lit(scale))))
+    column(VeloExprs.VeloRound(expression(c), Literal(scale)))
   def veloCeil(c: Column): Column = ceil(c)
   def veloFloor(c: Column): Column = floor(c)
   def veloSqrt(c: Column): Column = sqrt(c)
@@ -51,44 +53,17 @@ object VeloFunctions {
   // quoted-pattern trip through the regex engine
   def veloReplace(c: Column, find: String, repl: String): Column =
     replace(c, lit(find), lit(repl))
-  /** TRIM family strips ALL Unicode whitespace (Rust str::trim /
-    * char::is_whitespace — functions.rs:740), not just ASCII space
-    * like Spark's trim: '\thello\n' must trim to 'hello' on both
-    * engines. (?U) = Java UNICODE_CHARACTER_CLASS, whose \s is the
-    * same White_Space property Rust uses. */
-  def veloTrim(c: Column): Column = regexp_replace(c, GraftKernels.TrimBothPat, "")
-  def veloLtrim(c: Column): Column = regexp_replace(c, GraftKernels.TrimLeftPat, "")
-  def veloRtrim(c: Column): Column = regexp_replace(c, GraftKernels.TrimRightPat, "")
-  /** LENGTH is BYTE length (reference: s.len() over UTF-8 bytes,
-    * functions.rs:915) — 'héllo' is 6, not 5. */
-  def veloLength(c: Column): Column = octet_length(c)
-  /** CONCAT skips NULL arguments and stringifies non-strings
-    * (functions.rs:1419 concat_function: `FieldValue::Null => {}`) —
-    * Spark's concat NULLs the whole result if ANY argument is NULL, a
-    * silent row-level divergence on ported queries. concat_ws with an
-    * empty separator has exactly the skip-NULLs semantics. */
-  def veloConcat(cs: Column*): Column =
-    concat_ws("", cs.map(GraftKernels.veloStrCol): _*)
-  /** SPLIT(str, delim) returns the FIRST part as a STRING — the
-    * reference's documented behavior (functions.rs split_function:
-    * 'Return first part for simplicity'); an array-returning split
-    * would change both type and value of ported queries. The full
-    * array remains available as [[veloSplitParts]]. */
-  def veloSplit(c: Column, sep: String): Column = substring_index(c, sep, 1)
+  def veloTrim(c: Column): Column = column(VeloExprs.trim(expression(c), GraftKernels.TrimBothPat))
+  def veloLtrim(c: Column): Column = column(VeloExprs.trim(expression(c), GraftKernels.TrimLeftPat))
+  def veloRtrim(c: Column): Column = column(VeloExprs.trim(expression(c), GraftKernels.TrimRightPat))
+  def veloLength(c: Column): Column = column(VeloExprs.length(expression(c)))
+  def veloConcat(cs: Column*): Column = column(VeloExprs.concat(cs.map(expression)))
+  def veloSplit(c: Column, sep: String): Column = column(VeloExprs.split(expression(c), Literal(sep)))
   /** All parts (Spark-native extension; not the reference's SPLIT). */
   def veloSplitParts(c: Column, sep: String): Column =
     split(c, java.util.regex.Pattern.quote(sep))
-  /** JOIN(delim, v1, v2, …) — the reference's VARIADIC scalar join
-    * (functions.rs join_function): delimiter FIRST, non-strings
-    * stringified, NULL rendered as the literal 'NULL' (concat_ws
-    * alone would silently SKIP nulls). */
   def veloJoin(sep: String, parts: Column*): Column =
-    // stringify through the SAME Rust-Display kernel CONCAT uses
-    // (functions.rs:1027 renders Float via f.to_string(): 1234567.0 →
-    // "1234567") — a plain cast("string") rendered the same value
-    // differently in JOIN vs CONCAT (r12 review)
-    concat_ws(sep, parts.map(p =>
-      coalesce(GraftKernels.veloStrCol(p), lit("NULL"))): _*)
+    column(VeloExprs.join(Literal(sep), parts.map(expression)))
   /** LEFT/RIGHT with a NEGATIVE n return the WHOLE string (reference:
     * `n as usize` wraps to take-everything — Spark returns empty). The
     * negative arm STRINGIFIES like left()/right() do for non-string
@@ -98,202 +73,25 @@ object VeloFunctions {
     if (n < 0) c.cast("string") else left(c, lit(n))
   def veloRight(c: Column, n: Int): Column =
     if (n < 0) c.cast("string") else right(c, lit(n))
-  /** 1-based BYTE position of needle (reference: str::find byte
-    * offsets, functions.rs:2517 — 'l' in 'héllo' is 4, not 3);
-    * 0 when absent. */
-  def veloPosition(needle: String, haystack: Column): Column = {
-    val charPos = instr(haystack, needle)
-    when(charPos === 0, lit(0))
-      .otherwise(octet_length(substring(haystack, lit(1), charPos - 1)) + 1)
-  }
-  /** REGEXP(str, pattern) — true when the pattern matches anywhere.
-    * Through the kernel, not rlike: Java-default classes (ASCII \w/\s,
-    * no (?P<…>) diverged from the Rust regex crate the reference
-    * compiles (r16 review). */
+  def veloPosition(needle: String, haystack: Column): Column =
+    column(VeloExprs.position(Literal(needle), expression(haystack), None))
   def veloRegexp(c: Column, pattern: String): Column =
-    GraftKernels.veloRegexpCol(c, lit(pattern))
+    column(VeloExprs.regexp(expression(c), Literal(pattern)))
 
   // ---- Date/Time (reference: date/time table) ----
-  def veloNow(): Column = current_timestamp()
-  def veloExtract(field: String, ts: Column): Column = field.toUpperCase(java.util.Locale.ROOT) match {
-    case "YEAR"   => year(ts)
-    case "MONTH"  => month(ts)
-    case "DAY"    => dayofmonth(ts)
-    case "HOUR"   => hour(ts)
-    case "MINUTE" => minute(ts)
-    case "SECOND" => second(ts)
-    case "DOW"    => dayofweek(ts) - lit(1) // 0=Sunday, matches DuckDB/postgres dow
-    case "DOY"    => dayofyear(ts)
-    case "WEEK"   => weekofyear(ts)
-    // the reference's EXTRACT supports these too (functions.rs:1910-1927).
-    // Sub-second fields are the 0-bounded FRACTION (functions.rs:1921-1923
-    // timestamp_subsec_*), NOT the postgres seconds-inclusive reading —
-    // EXTRACT(MILLISECOND FROM '…44.123') = 123, not 44123. pmod keeps
-    // the fraction non-negative pre-1970, matching chrono's accessors
-    // (Java % would yield -877 for 1969-12-31 23:59:59.123).
-    case "QUARTER"     => quarter(ts)
-    // cast-to-long, NOT unix_timestamp: the cast FLOORS (euclidean),
-    // unix_timestamp truncates toward zero — they disagree by one
-    // second on every pre-1970 fractional timestamp, and the floor is
-    // what the reference's chrono timestamp(), veloUnixTimestamp, and
-    // the dialect's EXTRACT(EPOCH) lowering all compute (r12 review).
-    // The timestamp hop keeps string time columns working.
-    case "EPOCH"       => ts.cast("timestamp").cast("long")
-    // the same timestamp hop as EPOCH: unix_millis/unix_micros are
-    // ExpectsInputTypes-only (no implicit string/date cast), so these
-    // three arms failed analysis on string time columns where every
-    // other field worked (r16 review)
-    case "MILLISECOND" => pmod(unix_millis(ts.cast("timestamp")), lit(1000L)).cast("int")
-    case "MICROSECOND" => pmod(unix_micros(ts.cast("timestamp")), lit(1000000L)).cast("int")
-    case "NANOSECOND"  =>
-      (pmod(unix_micros(ts.cast("timestamp")), lit(1000000L)) * 1000L).cast("long")
-    case other    => throw new IllegalArgumentException(s"EXTRACT field $other")
-  }
-  /** DATE_FORMAT accepts the reference's chrono/strftime patterns
-    * (functions.rs:2403 formats through `dt.format(&format)` — every
-    * reference demo/doc query writes '%Y-%m-%d'-style patterns, which
-    * Java's DateTimeFormatter would render as garbage: 'Y' and 'd' are
-    * pattern letters, '%' a literal). A '%' in the pattern selects
-    * strftime translation; otherwise the string is passed through as a
-    * Spark pattern, so both worlds work. */
+  def veloNow(): Column = column(VeloExprs.timestamp(None))
+  def veloExtract(field: String, ts: Column): Column =
+    column(VeloExprs.extract(field, expression(ts)))
+  /** A '%' in the pattern selects strftime translation; otherwise the
+    * string is a Spark pattern, so both worlds work. */
   def veloDateFormat(ts: Column, fmt: String): Column =
-    if (!fmt.contains('%')) date_format(ts, fmt)
-    else {
-      val p = strftimeToSpark(fmt)
-      val base = date_format(ts, p)
-      // %e (chrono: SPACE-padded day-of-month) has no Java pattern
-      // letter — strftimeToSpark emits a sentinel literal, replaced
-      // here with the padded day ("Jan  5", not "Jan 5"; r12 review)
-      if (p.indexOf(EDaySentinel) >= 0)
-        regexp_replace(base, lit(EDaySentinel.toString),
-          lpad(dayofmonth(ts.cast("timestamp")).cast("string"), 2, " "))
-      else base
-    }
-
-  /** Placeholder `strftimeToSpark` emits for chrono's %e (space-padded
-    * day-of-month, which Java's DateTimeFormatter cannot express) —
-    * callers must post-replace it with lpad(day, 2, ' '). A control
-    * char: never a pattern letter, never in real literal text. */
-  val EDaySentinel: Char = '\u0001'
-
-  /** chrono strftime → Spark DateTimeFormatter pattern. Supports the
-    * directives reference queries use; anything untranslatable fails AT
-    * PLAN TIME with the directive named (chrono would render an error
-    * marker per row — failing the build is the honest Spark analog).
-    * Literal runs containing letters or quotes are single-quoted. */
-  def strftimeToSpark(fmt: String): String = {
-    val out = new StringBuilder
-    val lit = new StringBuilder
-    def flushLit(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      // quote on '#'/'{'/'}' too: Java reserves them and throws
-      // IllegalArgumentException on an unquoted occurrence — a pattern
-      // chrono renders fine must not crash here (r12 review). '[' and
-      // ']' are ACTIVE syntax (optional sections): unquoted they either
-      // silently vanish from the output or throw on imbalance (r14
-      // review) — same quoting rule.
-      if (s.exists(c => c.isLetter || c == '\'' || c == '#' || c == '{' || c == '}'
-          || c == '[' || c == ']'))
-        out.append('\'').append(s.replace("'", "''")).append('\'')
-      else out.append(s)
-      lit.clear()
-    }
-    def dir(s: String): Unit = { flushLit(); out.append(s) }
-    var i = 0
-    while (i < fmt.length) {
-      if (fmt(i) == '%' && i + 1 < fmt.length) {
-        val (spec, w) = fmt(i + 1) match {
-          // %.3f / %.6f / %.9f — fraction with leading dot; %3f/%6f/%9f fixed
-          case '.' if i + 3 < fmt.length && fmt(i + 3) == 'f' && "369".contains(fmt(i + 2)) =>
-            ("." + "S" * (fmt(i + 2) - '0'), 4)
-          case d if "369".contains(d) && i + 2 < fmt.length && fmt(i + 2) == 'f' =>
-            ("S" * (d - '0'), 3)
-          case ':' if i + 2 < fmt.length && fmt(i + 2) == 'z' => ("xxx", 3)
-          case c =>
-            val s = c match {
-              case 'Y' => "yyyy"; case 'y' => "yy"
-              case 'm' => "MM"; case 'd' => "dd"
-              // chrono %e is SPACE-padded ("Jan  5"); Java has no such
-              // letter — emit the sentinel for the caller to post-fill
-              case 'e' => EDaySentinel.toString
-              case 'H' => "HH"; case 'I' => "hh"
-              case 'M' => "mm"; case 'S' => "ss"
-              case 'p' => "a"
-              case 'a' => "EEE"; case 'A' => "EEEE"
-              case 'b' | 'h' => "MMM"; case 'B' => "MMMM"
-              case 'j' => "DDD"
-              case 'F' => "yyyy-MM-dd"; case 'D' => "MM/dd/yy"
-              case 'T' => "HH:mm:ss"; case 'R' => "HH:mm"; case 'r' => "hh:mm:ss a"
-              case 'f' => "SSSSSSSSS"
-              case 'z' => "xx"; case 'Z' => "zzz"
-              case '%' => null // literal percent
-              case other => throw new IllegalArgumentException(
-                s"unsupported strftime directive %$other in DATE_FORMAT pattern '$fmt'")
-            }
-            (s, 2)
-        }
-        if (spec == null) lit.append('%') else dir(spec)
-        i += w
-      } else { lit.append(fmt(i)); i += 1 }
-    }
-    flushLit()
-    out.toString
-  }
-
-  /** DATEDIFF in whole days (b - a). */
-  def veloDateDiff(a: Column, b: Column): Column = datediff(b, a)
-
-  /** Three-arg DATEDIFF(unit, a, b) — the reference evaluator's
-    * semantics (functions.rs:1977-2005), which are calendar-COMPONENT
-    * diffs, not elapsed periods: years = year(b)-year(a) (Dec 31 → Jan 1
-    * is 1); months = 12·Δyear+Δmonth regardless of day-of-month;
-    * quarters likewise; weeks = 52·Δ(ISO week-year)+Δ(ISO week); days
-    * compares calendar DATES ignoring time-of-day; hours divides raw
-    * elapsed millis (truncating toward zero, Rust `/`). The docs/demos
-    * also use minutes/seconds/milliseconds (the evaluator rejects them —
-    * catalog drift): lowered as the natural extension of the hours arm. */
-  def veloDateDiffUnit(unit: String, a: Column, b: Column): Column = {
-    def millisDiv(d: Long): Column =
-      ((unix_millis(b.cast("timestamp")) - unix_millis(a.cast("timestamp")))
-        .cast("long") / lit(d)).cast("long") // Spark double-div then cast truncates toward zero like Rust /
-    val lower = unit.toLowerCase(java.util.Locale.ROOT)
-    // 'ms' must be caught BEFORE the plural strip ('ms'.stripSuffix("s")
-    // is 'm' — and a bare 'm' conventionally means month or minute, so
-    // it must ERROR like the reference's unsupported-unit arm, not
-    // silently read milliseconds)
-    val r = (if (lower == "ms") "millisecond" else lower.stripSuffix("s")) match {
-      case "year" => year(b) - year(a)
-      case "month" => (year(b) - year(a)) * lit(12) + (month(b) - month(a))
-      case "quarter" => (year(b) - year(a)) * lit(4) + (quarter(b) - quarter(a))
-      case "week" =>
-        (isoWeekYear(b) - isoWeekYear(a)) * lit(52) + (weekofyear(b) - weekofyear(a))
-      case "day" => datediff(b, a)
-      case "hour" => millisDiv(3600000L)
-      case "minute" => millisDiv(60000L)
-      case "second" => millisDiv(1000L)
-      case "millisecond" | "milli" => millisDiv(1L)
-      case other => throw new IllegalArgumentException(s"DATEDIFF unit $other")
-    }
-    r.cast("long")
-  }
-  /** ISO week-based year (chrono `iso_week().year()`): the year of the
-    * Thursday in the row's ISO week. weekday() is Monday=0, so Thursday
-    * of the week is d + (3 - weekday(d)) days. */
-  private def isoWeekYear(c: Column): Column =
-    year(date_add(c.cast("date"), lit(3) - weekday(c.cast("date"))))
-  // CAST, not Spark's unix_timestamp: the reference goes through
-  // chrono's timestamp() (functions.rs:2470 dt.and_utc().timestamp()),
-  // which is a EUCLIDEAN floor — cast-to-long is floorDiv on micros and
-  // matches it on pre-1970 fractional timestamps where unix_timestamp's
-  // truncation toward zero is off by one second (r11 oracle audit)
-  // The timestamp hop keeps STRING time columns working (the dialect
-  // parser's UNIX_TIMESTAMP lowering and EXTRACT(EPOCH) both carry it;
-  // a bare cast read a digit-string as a bogus epoch and NULLed/threw
-  // on '2024-03-01 …' — r14 review). Timestamp inputs are unchanged.
-  def veloUnixTimestamp(ts: Column): Column = ts.cast("timestamp").cast("long")
-  // timestamp_seconds: direct arithmetic cast — to_timestamp(from_unixtime(..))
-  // would pay a per-row format-then-parse string round-trip for the same value
-  def veloFromUnixtime(epoch: Column): Column = timestamp_seconds(epoch)
+    column(VeloExprs.dateFormat(expression(ts), Literal(fmt)))
+  /** DATEDIFF in whole calendar days (b - a): the 'days' unit. */
+  def veloDateDiff(a: Column, b: Column): Column = veloDateDiffUnit("days", a, b)
+  def veloDateDiffUnit(unit: String, a: Column, b: Column): Column =
+    column(VeloExprs.dateDiffUnit(unit, expression(a), expression(b)))
+  def veloUnixTimestamp(ts: Column): Column = column(VeloExprs.epochSeconds(expression(ts)))
+  def veloFromUnixtime(epoch: Column): Column = column(VeloExprs.fromUnixtime(expression(epoch)))
   /** TUMBLE_START: epoch-aligned bucket start (seconds). */
   def tumbleStart(ts: Column, sizeSeconds: Long): Column = {
     // size 0 would divide by zero → every row lands in one silent NULL
@@ -322,121 +120,39 @@ object VeloFunctions {
   def veloCoalesce(cs: Column*): Column = coalesce(cs: _*)
   /** NULLIF with values_equal's type dispatch (see VeloExprs.VeloNullIf:
     * epsilon float compare; timestamp/date/decimal pairs never NULL). */
-  def veloNullif(a: Column, b: Column): Column = GraftKernels.veloNullIfCol(a, b)
+  def veloNullif(a: Column, b: Column): Column =
+    column(VeloExprs.VeloNullIf(expression(a), expression(b)))
   def veloCast(c: Column, to: String): Column = c.cast(to)
 
   // ---- JSON (reference: JSON_EXTRACT / JSON_VALUE over payload strings) ----
-  /** The reference's path language (functions.rs:1215 parse_json_path)
-    * is dot-SEGMENTS only: array indices are dot-numeric (`$.arr.0.name`,
-    * never `$.arr[0].name`) and a bare path without `$.` is accepted
-    * (`k` ≡ `$.k`). Spark's get_json_object wants `$.arr[0].name` — a
-    * ported reference path silently returns NULL without translation. */
-  def jsonPathToSpark(path: String): String = jsonPathCandidates(path).head
-
-  /** All Spark-path readings of a reference path. The reference's
-    * walk_json_path (functions.rs:1192) decides each all-digit segment
-    * PER NODE at runtime: an array index on an array, an object KEY on
-    * an object (`$.2024` finds the key "2024"). Spark paths are static,
-    * but both readings are expressible (`$[n]` indexes only arrays,
-    * `$.n` keys only objects — verified on 4.1.2: the wrong reading
-    * returns NULL, never errors), so callers COALESCE over the
-    * combinations. Capped at 3 digit segments (8 paths); beyond that
-    * only the two uniform readings are probed — mixed index/key paths
-    * deeper than 3 numeric hops aren't seen in any reference query. */
-  def jsonPathCandidates(path: String): Seq[String] = {
-    val t = path.trim
-    if (t.isEmpty || t == "$") Seq("$")
-    else {
-      val stripped =
-        if (t.startsWith("$.")) t.drop(2)
-        else if (t.startsWith("$")) t.drop(1)
-        else t
-      val segs = stripped.split('.').filter(_.nonEmpty).toSeq
-      val digitIdx = segs.indices.filter(i => segs(i).forall(_.isDigit))
-      def render(asIndex: Set[Int]): String =
-        "$" + segs.zipWithIndex.map { case (s, i) =>
-          if (asIndex(i)) s"[$s]" else s".$s"
-        }.mkString
-      if (digitIdx.isEmpty) Seq(render(Set.empty))
-      else if (digitIdx.size <= 3)
-        // every index/key combination, all-index (the common case) first
-        digitIdx.foldLeft(Seq(Set.empty[Int])) { (acc, i) =>
-          acc.flatMap(s => Seq(s + i, s))
-        }.map(render)
-      else Seq(render(digitIdx.toSet), render(Set.empty))
-    }
-  }
-  /** JSON_EXTRACT(json, path) — JSON text of the matched node
-    * (functions.rs:1250 extract_json_value; invalid JSON → NULL). */
   def jsonExtract(c: Column, path: String): Column =
-    jsonPathCandidates(path).map(get_json_object(c, _)) match {
-      case Seq(one) => one
-      case many => coalesce(many: _*)
-    }
-  /** JSON_VALUE — the reference implements it as the SAME function as
-    * JSON_EXTRACT (functions.rs:1073 calls extract_json_value too). */
+    column(VeloExprs.jsonValue(expression(c), Literal(path)))
   def jsonValue(c: Column, path: String): Column = jsonExtract(c, path)
-  /** JSON_EXISTS — reference semantics (functions.rs:1099): NULL inputs
-    * → NULL; unparseable JSON → false; a key holding JSON null EXISTS
-    * (walk returns Some(Null)). get_json_object cannot tell a JSON null
-    * from a missing key — variant can: try_variant_get returns a
-    * non-NULL variant for a JSON null and SQL NULL for a missing path. */
-  def jsonExists(c: Column, path: String): Column = {
-    val parsed = try_parse_json(c)
-    val hit = jsonPathCandidates(path)
-      .map(p => try_variant_get(parsed, p, "variant").isNotNull)
-      .reduce(_ || _)
-    when(c.isNull, lit(null).cast("boolean"))
-      .when(parsed.isNull, lit(false))
-      .otherwise(hit)
-  }
+  def jsonExists(c: Column, path: String): Column =
+    column(VeloExprs.jsonExists(expression(c), Literal(path)))
 
   // ---- Array / Map ----
   def veloArray(cs: Column*): Column = array(cs: _*)
-  def veloStruct(cs: Column*): Column = struct(cs: _*)
-  def veloMap(cs: Column*): Column = map(cs: _*)
-  // the Velo expressions, not Spark's size/array_contains/map_keys:
-  // the Column API must answer exactly like the SQL dialect's
-  // velo_array_length/velo_array_contains/velo_map_keys — JSON-string
-  // payloads parse instead of failing analysis, ARRAY_CONTAINS is
-  // null-safe with the values_equal epsilon (Spark's returns NULL
-  // where the reference says false — a filter silently dropped the
-  // row), and MAP_KEYS accepts structs (r16 review)
-  def arrayLength(c: Column): Column =
-    GraftBridge.column(VeloExprs.VeloArrayLength(GraftBridge.expression(c)))
+  def veloStruct(cs: Column*): Column = column(VeloExprs.struct(cs.map(expression)))
+  def veloMap(cs: Column*): Column = column(VeloExprs.map(cs.map(expression)))
+  def arrayLength(c: Column): Column = column(VeloExprs.VeloArrayLength(expression(c)))
   def arrayContains(c: Column, v: Any): Column =
-    GraftBridge.column(VeloExprs.VeloArrayContains(
-      GraftBridge.expression(c), GraftBridge.expression(lit(v))))
-  def mapKeys(c: Column): Column =
-    GraftBridge.column(VeloExprs.VeloMapKeys(GraftBridge.expression(c)))
+    column(VeloExprs.VeloArrayContains(expression(c), expression(lit(v))))
+  def mapKeys(c: Column): Column = column(VeloExprs.VeloMapKeys(expression(c)))
   def mapValues(c: Column): Column = map_values(c)
 
-  // ---- Kafka-header analogs ----
-  // The reference reads Kafka record headers (HEADER('k'), HAS_HEADER...).
-  // Spark's kafka source exposes them as an array<struct<key,value>>; our
-  // canonical in-DataFrame shape is a map<string,string> column `_headers`.
-  // A headerless record carries a NULL map (Spark's kafka source emits
-  // null headers; Serde.headersToMap propagates it) — map_filter/
-  // map_concat/map_contains_key all return NULL on a null map, which
-  // would silently drop the first stamp and make HAS_HEADER three-valued.
-  // Normalize to the empty map once, here and in the dialect rendering.
-  private def orEmpty(headers: Column): Column = coalesce(headers, map())
-  def header(headers: Column, key: String): Column = element_at(headers, key)
-  // contains_key, NOT value-isNotNull: a header present with a NULL
-  // value (legal in Kafka) must report true — the reference checks key
-  // presence, and the SQL dialect path already maps HAS_HEADER to
-  // map_contains_key; the two API paths must agree
+  // ---- Kafka-header analogs over a map<string,string> headers column ----
+  def header(headers: Column, key: String): Column =
+    column(VeloExprs.header(expression(headers), Literal(key)))
   def hasHeader(headers: Column, key: String): Column =
-    map_contains_key(orEmpty(headers), lit(key))
-  def headerKeys(headers: Column): Column = map_keys(orEmpty(headers))
-  /** SET_HEADER is an UPSERT: the existing key is removed first —
-    * map_concat alone throws DUPLICATE_MAP_KEY at runtime (Spark's
-    * default mapKeyDedupPolicy=EXCEPTION) the moment the header is
-    * already present, which is the normal re-stamp case. */
+    column(VeloExprs.hasHeader(expression(headers), Literal(key)))
+  /** The header keys as an ARRAY — SQL's HEADER_KEYS() joins them with
+    * ',' (the reference's string form). */
+  def headerKeys(headers: Column): Column = column(VeloExprs.headerKeys(expression(headers)))
   def setHeader(headers: Column, key: String, value: Column): Column =
-    map_concat(map_filter(orEmpty(headers), (k, _) => k =!= key), map(lit(key), value))
+    column(VeloExprs.setHeader(expression(headers), Literal(key), expression(value)))
   def removeHeader(headers: Column, key: String): Column =
-    map_filter(orEmpty(headers), (k, _) => k =!= key)
+    column(VeloExprs.removeHeader(expression(headers), Literal(key)))
 
   // ---- Exact decimal (reference: ScaledInteger financial arithmetic) ----
   /** The reference stores money as scaled i128 for exact, fast arithmetic.

@@ -141,7 +141,7 @@ object Multimodal {
       override def read(): Int = {
         bitOffset = 0
         if (streamPos >= buf.length) -1
-        else { val b = buf(streamPos.toInt) & 0xFF; streamPos += 1; b }
+        else { val b = buf(Math.toIntExact(streamPos)) & 0xFF; streamPos += 1; b }
       }
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
         if (len == 0) return 0
@@ -149,7 +149,7 @@ object Multimodal {
         if (streamPos >= buf.length) -1
         else {
           val n = math.min(len.toLong, buf.length - streamPos).toInt
-          System.arraycopy(buf, streamPos.toInt, b, off, n)
+          System.arraycopy(buf, Math.toIntExact(streamPos), b, off, n)
           streamPos += n
           n
         }
@@ -172,24 +172,24 @@ object Multimodal {
           buf = java.util.Arrays.copyOf(buf, math.max(cap, buf.length * 2))
       override def write(b: Int): Unit = {
         flushBits()
-        val p = streamPos.toInt
+        val p = Math.toIntExact(streamPos)
         ensure(p + 1)
         buf(p) = b.toByte
         streamPos += 1
-        if (streamPos > count) count = streamPos.toInt
+        if (streamPos > count) count = Math.toIntExact(streamPos)
       }
       override def write(b: Array[Byte], off: Int, len: Int): Unit = {
         flushBits()
-        val p = streamPos.toInt
+        val p = Math.toIntExact(streamPos)
         ensure(p + len)
         System.arraycopy(b, off, buf, p, len)
         streamPos += len
-        if (streamPos > count) count = streamPos.toInt
+        if (streamPos > count) count = Math.toIntExact(streamPos)
       }
       override def read(): Int = {
         bitOffset = 0
         if (streamPos >= count) -1
-        else { val b = buf(streamPos.toInt) & 0xFF; streamPos += 1; b }
+        else { val b = buf(Math.toIntExact(streamPos)) & 0xFF; streamPos += 1; b }
       }
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
         if (len == 0) return 0
@@ -197,7 +197,7 @@ object Multimodal {
         if (streamPos >= count) -1
         else {
           val n = math.min(len.toLong, count - streamPos).toInt
-          System.arraycopy(buf, streamPos.toInt, b, off, n)
+          System.arraycopy(buf, Math.toIntExact(streamPos), b, off, n)
           streamPos += n
           n
         }
@@ -449,17 +449,18 @@ object Multimodal {
     * those re-walk the synchronized provider registry per record and
     * serialized this stage process-wide (see ImageSpi; first-accepting
     * SPI in registry order = ImageIO's reader pick, pinned byte-equal
-    * by ImageSpiParitySpec). canDecodeInput implementations mark/reset
-    * the stream, so probing SPIs in sequence leaves position intact. */
+    * by ImageSpiParitySpec). The probe replays ImageIO's
+    * CanDecodeInputFilter: a defensive mark/reset around each SPI's
+    * canDecodeInput, and an IOException from one SPI (a short payload
+    * hits EOF in the SPI's own readFully) means "cannot decode" — the
+    * next SPI is probed, and a payload no SPI accepts reads null. */
   private[operators] def boundedImageRead(bytes: Array[Byte]): java.awt.image.BufferedImage = {
     val iis = new ImageSpi.ByteArrayImageInputStream(bytes)
+    def canDecode(s: javax.imageio.spi.ImageReaderSpi): Boolean =
+      try { iis.mark(); val ok = s.canDecodeInput(iis); iis.reset(); ok }
+      catch { case _: java.io.IOException => false }
     try {
-      var spi: javax.imageio.spi.ImageReaderSpi = null
-      var i = 0
-      while (spi == null && i < ImageSpi.readerSpis.length) {
-        if (ImageSpi.readerSpis(i).canDecodeInput(iis)) spi = ImageSpi.readerSpis(i)
-        i += 1
-      }
+      val spi = ImageSpi.readerSpis.find(canDecode).orNull
       if (spi == null) return null
       val reader = spi.createReaderInstance()
       try {

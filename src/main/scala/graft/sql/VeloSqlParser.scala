@@ -2,6 +2,8 @@ package graft.sql
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.functions.VeloExprs
+
 /** Parser for the velostream SQL dialect
   * (reference: docs/sql/PARSER_GRAMMAR.md, docs/sql/FUNCTION_CATALOG.md,
   * docs/sql/comprehensive-sql-ctas-guide.md).
@@ -10,11 +12,13 @@ import scala.collection.mutable.ArrayBuffer
   * statement kinds (SELECT / CTAS / CSAS / INSERT / SHOW), clause
   * boundaries, `WINDOW TUMBLING|SLIDING|SESSION(...)` specs,
   * `OVER (ROWS WINDOW BUFFER n ROWS …)`, `EMIT CHANGES|FINAL`,
-  * `kafka://topic` sources, `PRIMARY KEY` annotations, `WITH` property
-  * maps, and the reference's function-name surface. Expression parsing
-  * inside clauses is DELEGATED to Catalyst: clauses are re-emitted as
-  * Spark SQL token streams after dialect rewrites. Spark-first — the
-  * optimizer sees one ordinary SQL plan; nothing is interpreted per row.
+  * `kafka://topic` sources, `PRIMARY KEY` annotations and `WITH` property
+  * maps. Expression parsing inside clauses is DELEGATED to Catalyst:
+  * clauses are re-emitted as Spark SQL token streams after dialect
+  * rewrites, and the reference's function names are renamed to their
+  * `velo_` Catalyst builders (graft.functions.VeloExprs). Spark-first —
+  * the optimizer sees one ordinary SQL plan; nothing is interpreted per
+  * row.
   */
 object VeloSqlParser {
 
@@ -1169,58 +1173,6 @@ object VeloSqlParser {
   }
 
   // ==================== dialect token rewrites ====================
-
-  /** Spark-native names for the reference's function surface
-    * (FUNCTION_CATALOG.md). Only names that differ are listed. */
-  private val renames: Map[String, String] = Map(
-    // JSON_EXTRACT / JSON_VALUE are lowered arg-aware in rewriteTokens
-    // (reference dot-numeric path translation), not by this map
-    // STRING_AGG/GROUP_CONCAT/LISTAGG/COLLECT are handled arg-aware in
-    // rewriteTokens (reference-default ',' separator, velo_str value
-    // rendering; COLLECT is a STRING_AGG alias in the reference —
-    // aggregation/functions.rs:46 — returning a joined STRING)
-    // NULLIF goes through values_equal's type dispatch (epsilon float
-    // compare; timestamp/date/decimal pairs NEVER null — VeloExprs)
-    "NULLIF" -> "velo_nullif",
-    // type-dispatched in VeloExprs: the evaluator accepts JSON STRINGS
-    // for array/map ops (functions.rs:1388,1611,1722), ROUND branches
-    // int-passthrough / f64-multiply / decimal (functions.rs:424), and
-    // ARRAY_CONTAINS compares null-safe (values_equal:1679)
-    "ARRAY_LENGTH" -> "velo_array_length",
-    "ARRAY_CONTAINS" -> "velo_array_contains",
-    "MAP_KEYS" -> "velo_map_keys",
-    "ROUND" -> "velo_round",
-    // LENGTH/LEN are BYTE length in the reference (s.len() over UTF-8);
-    // Spark's length counts characters — divergent on any multibyte text
-    "LEN" -> "octet_length",
-    "LENGTH" -> "octet_length",
-    // velo_regexp, not regexp_like: Spark compiles Java-default
-    // classes (ASCII \w/\s, no (?P<…> spelling) where the reference's
-    // Rust regex crate is Unicode-first — same kernel + pattern cache
-    // as REGEXP_REPLACE (r16 review)
-    "REGEXP" -> "velo_regexp",
-    // reference-parity functions registered by GraftKernels: SPLIT
-    // returns the FIRST part (functions.rs 'for simplicity'), JOIN is
-    // variadic delimiter-first with NULL rendered literally, TRIM
-    // family strips Unicode whitespace like Rust str::trim
-    "SPLIT" -> "velo_split",
-    "JOIN" -> "velo_join",
-    "TRIM" -> "velo_trim",
-    "LTRIM" -> "velo_ltrim",
-    "RTRIM" -> "velo_rtrim")
-
-  /** Rewrite one clause's token span to Spark SQL:
-    *  - function renames (see `renames`)
-    *  - COUNT_DISTINCT(e) → COUNT(DISTINCT e)
-    *  - TIMESTAMP() / NOW() → current_timestamp()
-    *  - TUMBLE_START/END(ts, dur) → epoch-aligned bucket bigint
-    *  - HEADER ops → map ops over the `_headers` column
-    *  - OVER (ROWS WINDOW BUFFER n ROWS …) → standard window spec with a
-    *    ROWS BETWEEN n-1 PRECEDING AND CURRENT ROW frame
-    */
-  /** `aggWrap`: the span sits in the SELECT/HAVING of a time-windowed
-    * aggregation — group-constant per-row rewrites (TUMBLE_START/END)
-    * must be wrapped in an aggregate to satisfy GROUP BY analysis. */
   /** Pop the trailing PRIMARY operand from the already-rewritten output
     * buffer (for infix-to-call rewrites like `~`): a literal/number, a
     * possibly-qualified identifier chain (a.b.c), a call with balanced
@@ -1293,19 +1245,23 @@ object VeloSqlParser {
     (toks.slice(j, end), end)
   }
 
+  /** Rewrite one clause's token span to Spark SQL. Only the dialect's
+    * syntax and context-dependent forms are rewritten here: quantified
+    * ALL/ANY comparisons, `OVER (ROWS WINDOW BUFFER n ROWS …)`, fixed-unit
+    * INTERVAL literals, TUMBLE/HOP/SESSION grouping calls,
+    * TUMBLE_START/END, the PERCENTILE OVER and WITHIN GROUP forms and the
+    * `~` operator. Every other dialect function is one row of
+    * [[graft.functions.VeloExprs.dialectFunctions]]: its call is renamed
+    * to the row's `velo_` registration and its arity checked here.
+    *
+    * `aggWrap`: the span sits in the SELECT/HAVING of a time-windowed
+    * aggregation — group-constant per-row rewrites (TUMBLE_START/END)
+    * must be wrapped in an aggregate to satisfy GROUP BY analysis. */
   def rewriteTokens(span: Vector[Tok], defaultTimeCol: String, aggWrap: Boolean = false): Vector[Tok] = {
     val out = ArrayBuffer[Tok]()
     var i = 0
     def sym(s: String) = Tok(TSymbol, s)
     def id(s: String) = Tok(TIdent, s)
-    // coalesce(_headers, map()): a headerless record carries a NULL map,
-    // and map_filter/map_concat/map_contains_key all return NULL on it —
-    // the first SET_HEADER stamp would silently vanish and HAS_HEADER
-    // would go three-valued (same normalization as VeloFunctions.orEmpty)
-    def emitHeadersOrEmpty(buf: ArrayBuffer[Tok]): Unit = {
-      buf += id("coalesce") += sym("(") += id("_headers") += sym(",")
-      buf += id("map") += sym("(") += sym(")") += sym(")")
-    }
     // Window-SIZE args must reject calendar units BEFORE the general
     // fixedIntervalRewrite runs (r17 review): the rewrite converts
     // INTERVAL '1' MONTH to 30 DAY for ordinary interval arithmetic
@@ -1314,16 +1270,6 @@ object VeloSqlParser {
     // d/w — GROUP BY TUMBLE(ts, INTERVAL '1' MONTH) must error like
     // WINDOW TUMBLING(INTERVAL '1' MONTH) does, not silently run with
     // 30-day windows.
-    // arity gate for the header rewrite arms (r17 review: the
-    // TIMESTAMP arm's own rule — 'silently dropping a second argument
-    // would…' — was never applied here, so SET_HEADER('k','v','x')
-    // dropped 'x' silently and HEADER() died as an opaque wrapped
-    // NoSuchElementException instead of a targeted message)
-    def arity(fn: String, args: Vector[Vector[Tok]], lo: Int, hi: Int): Unit =
-      if (args.length < lo || args.length > hi) {
-        val want = if (lo == hi) s"$lo" else s"$lo to $hi"
-        throw new ParseException(s"$fn expects $want argument(s), got ${args.length}")
-      }
     def rejectCalendarWindow(rawArgs: Vector[Vector[Tok]], fn: String): Unit =
       rawArgs.foreach { a =>
         if (a.nonEmpty && (a.head.kind == TNumber || a.head.isKw("INTERVAL")) &&
@@ -1370,33 +1316,11 @@ object VeloSqlParser {
       }
       throw new ParseException("unbalanced parens")
     }
-    // splice a Spark-SQL text template: __ARG1__/__ARG2__/… markers are
-    // replaced by already-rewritten token spans. Keeps multi-function
-    // lowerings (DATEDIFF calendar units, JSON_EXISTS) readable instead
-    // of 30 lines of token pushes each.
-    def emitTpl(template: String, argSpans: Vector[Tok]*): Unit =
-      VeloSqlParser.tokenize(template).foreach {
-        case tk @ Tok(TIdent, s) if s.startsWith("__ARG") && s.endsWith("__") =>
-          out ++= argSpans(s.stripPrefix("__ARG").stripSuffix("__").toInt - 1)
-        case tk => out += tk
-      }
-    // literal JSON paths get the reference dot-segment language
-    // translated to Spark JSONPath — ALL readings of it: walk_json_path
-    // (functions.rs:1192) decides digit segments per node at runtime
-    // (array index vs numeric object key), so a literal path expands to
-    // one candidate per static reading and the call site COALESCEs.
-    // Non-literal paths pass through as a single dynamic candidate.
-    def pathCandidateToks(arg: Vector[Tok]): Vector[Vector[Tok]] =
-      if (arg.length == 1 && arg.head.kind == TString) {
-        graft.functions.VeloFunctions.jsonPathCandidates(
-          unquoteString(arg.head.text)).toVector
-          .map(p => Vector(Tok(TString, quoteString(p))))
-      } else Vector(rewriteTokens(arg, defaultTimeCol))
     // split top-level comma args of the call whose '(' is at `open`.
     // One-slot memo: several rewrite branches scan the SAME call twice —
-    // once in the pattern guard, again in the body (DATEDIFF,
-    // DATE_FORMAT, UNIX_TIMESTAMP, the PERCENTILE_* guards) — and the
-    // balanced-paren walk is O(call length) each time (r14 review).
+    // once in the pattern guard, again in the body (DATEDIFF, the
+    // PERCENTILE_* guards) — and the balanced-paren walk is O(call
+    // length) each time (r14 review).
     // callArgsScan is pure over `span`, so caching by `open` is safe.
     var callArgsMemo: (Int, (Vector[Vector[Tok]], Int)) = (-1, null)
     def callArgs(open: Int): (Vector[Vector[Tok]], Int) = {
@@ -1418,6 +1342,41 @@ object VeloSqlParser {
       if (cur.nonEmpty || args.nonEmpty) args += cur.toVector
       (args.toVector, end)
     }
+    // index of the first token at paren depth 0, from `from`, matching `p`
+    def topLevel(toks: Vector[Tok], from: Int)(p: Tok => Boolean): Option[Int] = {
+      var d = 0; var j = 0
+      while (j < toks.length) {
+        if (d == 0 && j >= from && p(toks(j))) return Some(j)
+        if (toks(j).text == "(") d += 1 else if (toks(j).text == ")") d -= 1
+        j += 1
+      }
+      None
+    }
+    // the SQL-standard shapes POSITION(sub IN str) and EXTRACT(field
+    // FROM x) in plain call form: (sub, str) and ('FIELD', x)
+    def callForm(up: String, args: Vector[Vector[Tok]]): Vector[Vector[Tok]] = args match {
+      case Vector(a) if up == "POSITION" =>
+        topLevel(a, 0)(_.isKw("IN")).fold(args)(ix => Vector(a.take(ix), a.drop(ix + 1)))
+      case Vector(a) if up == "EXTRACT" && a.length >= 3 && a(1).isKw("FROM") =>
+        Vector(Vector(Tok(TString, quoteString(a.head.upper))), a.drop(2))
+      case _ => args
+    }
+    // EXTRACT(EPOCH FROM (a - b)) — the reference's epoch of a timestamp
+    // DIFFERENCE — is the difference of the two epochs, split on the
+    // top-level '-'. `ts - INTERVAL …` is a timestamp, not a difference.
+    def epochDifference(up: String, args: Vector[Vector[Tok]]): Option[(Vector[Tok], Vector[Tok])] =
+      args match {
+        case Vector(Vector(f), v) if up == "EXTRACT" && f.kind == TString &&
+            unquoteString(f.text).equalsIgnoreCase("EPOCH") =>
+          val inner =
+            if (v.headOption.exists(_.text == "(") && topLevel(v, 1)(_ => true).isEmpty)
+              v.slice(1, v.length - 1)
+            else v
+          topLevel(inner, 1)(_.text == "-")
+            .filterNot(ix => inner.lift(ix + 1).exists(_.isKw("INTERVAL")))
+            .map(ix => (inner.take(ix), inner.drop(ix + 1)))
+        case _ => None
+      }
 
     while (i < span.length) {
       val t = span(i)
@@ -1578,162 +1537,6 @@ object VeloSqlParser {
         }
       } else if (t.kind == TIdent && isCall(i)) {
         up match {
-          case "GROUP_CONCAT" | "STRING_AGG" | "LISTAGG" | "COLLECT" =>
-            // ONE aggregate behind four names (aggregation/functions.rs:46
-            // routes all of them to compute_string_agg_aggregate) — so
-            // COLLECT returns a JOINED STRING, not an array. The
-            // separator defaults to ',' (Spark's one-arg listagg joins
-            // with the EMPTY string), and a NON-LITERAL separator also
-            // falls back to ',' (the reference reads the literal out of
-            // the AST — aggregation/functions.rs:272 — and defaults
-            // otherwise). Values stringify through the reference
-            // rendering (accumulator.rs:294 field_value_to_string →
-            // velo_str; NULLs are skipped, which listagg does natively).
-            val (args, end) = callArgs(i + 1)
-            if (args.isEmpty || args.head.isEmpty)
-              throw new ParseException(s"$up expects (value[, separator])")
-            out += id("listagg") += sym("(")
-            val v0 = args(0)
-            val (distinctKw, vExpr) =
-              if (v0.nonEmpty && v0.head.isKw("DISTINCT")) (true, v0.tail) else (false, v0)
-            if (distinctKw) out += id("DISTINCT")
-            out += id("velo_str") += sym("(")
-            out ++= rewriteTokens(vExpr, defaultTimeCol)
-            out += sym(")") += sym(",")
-            out += (if (args.length >= 2 && args(1).length == 1 && args(1).head.kind == TString)
-              args(1).head else Tok(TString, "','"))
-            out += sym(")")
-            i = end
-          case "COUNT_DISTINCT" =>
-            val (args, end) = callArgs(i + 1)
-            out += id("count") += sym("(") += id("DISTINCT")
-            args.map(rewriteTokens(_, defaultTimeCol)).zipWithIndex.foreach { case (a, ix) =>
-              if (ix > 0) out += sym(",")
-              out ++= a
-            }
-            out += sym(")")
-            i = end
-          case "TIMESTAMP" | "NOW" =>
-            val (args, end) = callArgs(i + 1)
-            if (args.isEmpty) {
-              // zero-arg TIMESTAMP()/NOW() = wall clock (reference
-              // functions.rs). TIMESTAMP(col) is a CONVERSION — rewriting
-              // it to current_timestamp() would silently replace every
-              // row's event time with the query wall clock.
-              out += id("current_timestamp") += sym("(") += sym(")")
-            } else {
-              // no format form: silently dropping a second argument
-              // would cast with the DEFAULT format and NULL out every
-              // string the user's format was there to parse
-              if (args.length > 1)
-                throw new ParseException(
-                  s"$up(expr) takes one argument; format variants are not supported")
-              out += id("cast") += sym("(")
-              out ++= rewriteTokens(args.head, defaultTimeCol)
-              out += id("AS") += id("timestamp") += sym(")")
-            }
-            i = end
-          case "DELTA" =>
-            // DELTA(col): max-min spread aggregate
-            // (reference functions.rs:1807)
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 1) throw new ParseException("DELTA expects one argument")
-            val a = rewriteTokens(args.head, defaultTimeCol)
-            out += sym("(") += id("max") += sym("(")
-            out ++= a
-            out += sym(")") += sym("-") += id("min") += sym("(")
-            out ++= a
-            out += sym(")") += sym(")")
-            i = end
-          case "JSON_EXTRACT" | "JSON_VALUE" =>
-            // both are the SAME evaluator function in the reference
-            // (functions.rs:1073 json_value_function calls
-            // extract_json_value too). Literal paths get the reference's
-            // dot-segment language translated (`$.arr.0.b` → `$.arr[0].b`,
-            // bare `k` → `$.k` — functions.rs:1215 parse_json_path);
-            // non-literal paths pass through untouched.
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 2) throw new ParseException(s"$up expects (json, path)")
-            val j = rewriteTokens(args(0), defaultTimeCol)
-            val cands = pathCandidateToks(args(1))
-            def gjo(p: Vector[Tok]): Unit = {
-              out += id("get_json_object") += sym("(")
-              out ++= j
-              out += sym(",")
-              out ++= p
-              out += sym(")")
-            }
-            if (cands.length == 1) gjo(cands.head)
-            else {
-              out += id("coalesce") += sym("(")
-              cands.zipWithIndex.foreach { case (p, k) =>
-                if (k > 0) out += sym(",")
-                gjo(p)
-              }
-              out += sym(")")
-            }
-            i = end
-          case "JSON_EXISTS" =>
-            // reference semantics (functions.rs:1099): NULL json or path
-            // → NULL; unparseable JSON → false; a key holding JSON null
-            // EXISTS (the path walk returns Some(Null)). get_json_object
-            // cannot tell JSON null from a missing key — variant can:
-            // try_variant_get yields a non-NULL variant for JSON null
-            // and SQL NULL only for a missing path.
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 2) throw new ParseException("JSON_EXISTS expects (json, path)")
-            val j = rewriteTokens(args(0), defaultTimeCol)
-            val cands = pathCandidateToks(args(1))
-            if (cands.forall(p => p.length == 1 && p.head.kind == TString)) {
-              // any static reading of the path hitting = the node exists
-              val probes = cands.indices.map(k =>
-                s"try_variant_get(try_parse_json(__ARG1__), __ARG${k + 2}__) IS NOT NULL")
-                .mkString(" OR ")
-              emitTpl(
-                s"""(CASE WHEN __ARG1__ IS NULL THEN CAST(NULL AS BOOLEAN)
-                   WHEN try_parse_json(__ARG1__) IS NULL THEN false
-                   ELSE ($probes) END)""",
-                (j +: cands): _*)
-            } else {
-              // dynamic path: variant_get demands a LITERAL path, so the
-              // value probe via get_json_object is the fallback — but
-              // the reference NULL rules still apply where expressible:
-              // NULL json → NULL and NULL path → NULL (a bare IS NOT
-              // NULL probe read both as false, r12 review). The one
-              // corner get_json_object cannot express remains: a key
-              // holding JSON null reads false here, true in the
-              // reference (the static-path variant probe gets it right).
-              emitTpl(
-                """(CASE WHEN __ARG1__ IS NULL OR __ARG2__ IS NULL THEN CAST(NULL AS BOOLEAN)
-                   ELSE get_json_object(__ARG1__, __ARG2__) IS NOT NULL END)""",
-                j, cands.head)
-            }
-            i = end
-          case "JSON_QUERY" =>
-            // JSON_QUERY(json, path) → nested objects/arrays as JSON
-            // text; scalars → NULL (reference functions.rs:1138,1184)
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 2) throw new ParseException("JSON_QUERY expects (json, path)")
-            val jq = rewriteTokens(args(0), defaultTimeCol)
-            val jqCands = pathCandidateToks(args(1))
-            def extract(): Unit = {
-              if (jqCands.length > 1) out += id("coalesce") += sym("(")
-              jqCands.zipWithIndex.foreach { case (p, k) =>
-                if (k > 0) out += sym(",")
-                out += id("get_json_object") += sym("(")
-                out ++= jq
-                out += sym(",")
-                out ++= p
-                out += sym(")")
-              }
-              if (jqCands.length > 1) out += sym(")")
-            }
-            out += id("CASE") += id("WHEN")
-            extract()
-            out += id("RLIKE") += Tok(TString, "'^\\\\s*[\\\\[{]'") += id("THEN")
-            extract()
-            out += id("END")
-            i = end
           case "TUMBLE" =>
             // Flink-style grouping form (watermarks-time-semantics.md):
             // GROUP BY …, TUMBLE(ts, INTERVAL '5' MINUTE) → Spark's
@@ -1788,23 +1591,6 @@ object VeloSqlParser {
             out ++= tsArg
             out += sym(",") += Tok(TString, s"'$g seconds'") += sym(")")
             i = end
-          case "UNIX_TIMESTAMP" if span.lift(i + 1).exists(_.text == "(") &&
-              callArgs(i + 1)._1.nonEmpty =>
-            // one-arg form: CAST-to-BIGINT (floorDiv on micros), not
-            // Spark's unix_timestamp — the reference goes through
-            // chrono's timestamp(), a euclidean FLOOR (functions.rs:
-            // 2470), so a pre-1970 fractional timestamp must read one
-            // second LOWER than toward-zero truncation would give.
-            // Zero-arg UNIX_TIMESTAMP() (current time) passes through:
-            // "now" is positive, truncate == floor.
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 1)
-              throw new ParseException("UNIX_TIMESTAMP expects () or (timestamp)")
-            out += id("CAST") += sym("(") += id("CAST") += sym("(")
-            out ++= rewriteTokens(args(0), defaultTimeCol)
-            out += id("AS") += id("TIMESTAMP") += sym(")")
-            out += id("AS") += id("BIGINT") += sym(")")
-            i = end
           case "TUMBLE_START" | "TUMBLE_END" =>
             val (args0, end) = callArgs(i + 1)
             rejectCalendarWindow(args0, up)
@@ -1836,74 +1622,6 @@ object VeloSqlParser {
             if (up == "TUMBLE_END") { out += sym("+") += Tok(TNumber, s.toString) }
             out += id("AS") += id("BIGINT") += sym(")") += sym(")")
             if (aggWrap) { out += sym(")") }
-            i = end
-          // header ARG spans recurse through rewriteTokens: a dialect
-          // form nested in the key/value (LEN(k), TIMESTAMP()) must not
-          // reach Catalyst verbatim — same rule as the VALUES branch
-          case "HEADER" =>
-            val (args, end) = callArgs(i + 1)
-            arity("HEADER", args, 1, 1)
-            out += id("element_at") += sym("(") += id("_headers") += sym(",")
-            out ++= rewriteTokens(args.head, defaultTimeCol)
-            out += sym(")")
-            i = end
-          case "HAS_HEADER" =>
-            val (args, end) = callArgs(i + 1)
-            arity("HAS_HEADER", args, 1, 1)
-            out += id("map_contains_key") += sym("(")
-            emitHeadersOrEmpty(out)
-            out += sym(",")
-            out ++= rewriteTokens(args.head, defaultTimeCol)
-            out += sym(")")
-            i = end
-          case "HEADER_KEYS" =>
-            // a comma-joined STRING, not an array — functions.rs:375
-            // `keys.join(",")` (headers_test.rs asserts the joined
-            // form). The reference iterates a HashMap (arbitrary
-            // order); map insertion order here is deterministic.
-            val (hkArgs, end) = callArgs(i + 1)
-            arity("HEADER_KEYS", hkArgs, 0, 0)
-            out += id("array_join") += sym("(") += id("map_keys") += sym("(")
-            emitHeadersOrEmpty(out)
-            out += sym(")") += sym(",") += Tok(TString, "','") += sym(")")
-            i = end
-          case "SET_HEADER" =>
-            val (args, end) = callArgs(i + 1)
-            arity("SET_HEADER", args, 2, 2)
-            // UPSERT: drop the existing key before the concat — bare
-            // map_concat(_headers, map(k, v)) throws DUPLICATE_MAP_KEY on
-            // the normal re-stamp case (Spark's default
-            // mapKeyDedupPolicy=EXCEPTION); same form as
-            // VeloFunctions.setHeader
-            val k0 = rewriteTokens(args(0), defaultTimeCol)
-            val v0 = rewriteTokens(args(1), defaultTimeCol)
-            out += id("map_concat") += sym("(")
-            out += id("map_filter") += sym("(")
-            emitHeadersOrEmpty(out)
-            out += sym(",") += sym("(")
-            out += id("__hk") += sym(",") += id("__hv") += sym(")") += Tok(TSymbol, "->")
-            out += id("__hk") += sym("!=")
-            out ++= k0
-            out += sym(")") += sym(",") += id("map") += sym("(")
-            out ++= k0
-            // header VALUES are strings: the reference stringifies the
-            // value (functions.rs:2613 — Rust rendering, NULL → "null")
-            out += sym(",") += id("coalesce") += sym("(") += id("velo_str") += sym("(")
-            out ++= v0
-            out += sym(")") += sym(",") += Tok(TString, "'null'") += sym(")")
-            out += sym(")") += sym(")")
-            i = end
-          case "REMOVE_HEADER" =>
-            val (args, end) = callArgs(i + 1)
-            arity("REMOVE_HEADER", args, 1, 1)
-            // map_filter(coalesce(_headers, map()), (__hk, __hv) -> __hk != <key>)
-            out += id("map_filter") += sym("(")
-            emitHeadersOrEmpty(out)
-            out += sym(",") += sym("(")
-            out += id("__hk") += sym(",") += id("__hv") += sym(")") += Tok(TSymbol, "->")
-            out += id("__hk") += sym("!=")
-            out ++= rewriteTokens(args.head, defaultTimeCol)
-            out += sym(")")
             i = end
           case "PERCENTILE_CONT" | "PERCENTILE_DISC"
             if {
@@ -1996,377 +1714,46 @@ object VeloSqlParser {
             // stream the tokens through unchanged
             out += t
             i += 1
-          case "PERCENTILE_DISC" =>
-            // aggregate form: PERCENTILE_DISC(e, p) → WITHIN GROUP syntax
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 2) throw new ParseException("PERCENTILE_DISC(expr, p) expects two arguments")
-            out += id("percentile_disc") += sym("(")
-            out ++= args(1)
-            out += sym(")") += id("WITHIN") += id("GROUP") += sym("(") += id("ORDER") += id("BY")
-            out ++= rewriteTokens(args(0), defaultTimeCol)
-            out += sym(")")
-            i = end
-          case "PERCENTILE_CONT" =>
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 2) throw new ParseException("PERCENTILE_CONT(expr, p) expects two arguments")
-            out += id("percentile") += sym("(")
-            out ++= rewriteTokens(args(0), defaultTimeCol)
-            out += sym(",")
-            out ++= args(1)
-            out += sym(")")
-            i = end
+          // Spark's own DATEDIFF(end, start) and DATEDIFF(DAY, a, b)
+          // grammar pass through: only the reference's string-unit form
+          // DATEDIFF('days', a, b) is the dialect function
           case "DATEDIFF" if {
-            val (a, _) = callArgs(i + 1); a.length == 3 && a.head.length == 1 && a.head.head.kind == TString
-          } =>
-            // three-arg unit form: DATEDIFF('days', a, b). Reference
-            // EVALUATOR semantics (functions.rs:1977-2005) are calendar-
-            // COMPONENT diffs, not elapsed periods: years is
-            // year(b)-year(a) (Dec 31 → Jan 1 reads 1, where Spark's
-            // timestampdiff(YEAR,…) reads 0); months/quarters likewise
-            // ignore day-of-month; weeks is 52·Δ(ISO week-year)+Δ(ISO
-            // week); days compares calendar DATES ignoring time-of-day
-            // (timestampdiff(DAY,…) counts full 24 h periods); hours
-            // divides raw elapsed millis truncating toward zero. Docs
-            // and demos also use minutes/seconds/milliseconds (the
-            // evaluator rejects them — catalog drift): lowered as the
-            // natural extension of the hours arm.
-            val (args, end) = callArgs(i + 1)
-            val rawUnit = args.head.head.text.stripPrefix("'").stripSuffix("'")
-              .toLowerCase(java.util.Locale.ROOT)
-            val a = rewriteTokens(args(1), defaultTimeCol)
-            val b = rewriteTokens(args(2), defaultTimeCol)
-            // ISO week-based year = year of the Thursday in the row's
-            // ISO week; weekday() is Monday=0, so Thursday is +(3-wd).
-            def iwy(arg: String) =
-              s"year(date_add(CAST($arg AS DATE), 3 - weekday(CAST($arg AS DATE))))"
-            def millisDiv(d: Long) =
-              s"CAST((unix_millis(CAST(__ARG2__ AS TIMESTAMP)) - unix_millis(CAST(__ARG1__ AS TIMESTAMP))) div $d AS BIGINT)"
-            // 'ms' before the plural strip; a bare 'm' (month/minute by
-            // convention elsewhere) errors like the reference evaluator
-            val tpl = (if (rawUnit == "ms") "millisecond"
-                       else rawUnit.stripSuffix("s")) match {
-              case "year" => "CAST(year(__ARG2__) - year(__ARG1__) AS BIGINT)"
-              case "month" =>
-                "CAST((year(__ARG2__) - year(__ARG1__)) * 12 + (month(__ARG2__) - month(__ARG1__)) AS BIGINT)"
-              case "quarter" =>
-                "CAST((year(__ARG2__) - year(__ARG1__)) * 4 + (quarter(__ARG2__) - quarter(__ARG1__)) AS BIGINT)"
-              case "week" =>
-                s"CAST((${iwy("__ARG2__")} - ${iwy("__ARG1__")}) * 52 + (weekofyear(__ARG2__) - weekofyear(__ARG1__)) AS BIGINT)"
-              case "day" => "CAST(datediff(__ARG2__, __ARG1__) AS BIGINT)"
-              case "hour" => millisDiv(3600000L)
-              case "minute" => millisDiv(60000L)
-              case "second" => millisDiv(1000L)
-              case "millisecond" | "milli" => millisDiv(1L)
-              case "u" | "micro" | "microsecond" =>
-                "CAST(unix_micros(CAST(__ARG2__ AS TIMESTAMP)) - unix_micros(CAST(__ARG1__ AS TIMESTAMP)) AS BIGINT)"
-              case other => throw new ParseException(s"unsupported DATEDIFF unit: $rawUnit")
-            }
-            emitTpl(tpl, a, b)
-            i = end
-          case "DATE_FORMAT" if {
             val (a, _) = callArgs(i + 1)
-            a.length == 2 && a(1).length == 1 && a(1).head.kind == TString &&
-              a(1).head.text.contains("%")
+            !(a.length == 3 && a.head.length == 1 && a.head.head.kind == TString)
           } =>
-            // the reference formats through chrono strftime
-            // (functions.rs:2403 `dt.format(&format)`) — every demo/doc
-            // query writes '%Y-%m-%d'-style patterns, which Java's
-            // DateTimeFormatter would render as garbage ('Y'/'d' are
-            // pattern letters, '%' a literal). Translate the literal at
-            // plan time; non-% patterns pass through as Spark patterns.
-            val (args, end) = callArgs(i + 1)
-            val fmt = unquoteString(args(1).head.text)
-            val sparkFmt = graft.functions.VeloFunctions.strftimeToSpark(fmt)
-            val eDay = graft.functions.VeloFunctions.EDaySentinel.toString
-            // %e (chrono: SPACE-padded day) has no Java pattern letter —
-            // strftimeToSpark emits a sentinel, post-replaced here with
-            // lpad(day, 2, ' ') so 'Jan  5' renders like the reference
-            if (sparkFmt.contains(eDay)) {
-              out += id("regexp_replace") += sym("(")
-              out += id("date_format") += sym("(")
-              out ++= rewriteTokens(args(0), defaultTimeCol)
-              out += sym(",") += Tok(TString, quoteString(sparkFmt)) += sym(")")
-              out += sym(",") += Tok(TString, "'" + eDay + "'")
-              out += sym(",") += id("lpad") += sym("(")
-              out += id("cast") += sym("(") += id("day") += sym("(")
-              out ++= rewriteTokens(args(0), defaultTimeCol)
-              out += sym(")") += id("AS") += id("string") += sym(")")
-              out += sym(",") += Tok(TNumber, "2") += sym(",") += Tok(TString, "' '")
-              out += sym(")") += sym(")")
-            } else {
-              out += id("date_format") += sym("(")
-              out ++= rewriteTokens(args(0), defaultTimeCol)
-              out += sym(",") += Tok(TString, quoteString(sparkFmt)) += sym(")")
-            }
-            i = end
-          case "POSITION" =>
-            // byte-based with an optional byte start offset
-            // (functions.rs:2489) — Spark's builtin counts chars. Both
-            // the call form POSITION(sub, str[, start]) and the SQL
-            // standard POSITION(sub IN str) lower to velo_position.
-            val (args0, end) = callArgs(i + 1)
-            val args: Vector[Vector[Tok]] =
-              if (args0.length == 1) {
-                val a = args0.head
-                val inIx = {
-                  var d = 0; var f = -1
-                  a.zipWithIndex.foreach { case (x, ix) =>
-                    if (x.text == "(") d += 1
-                    if (x.text == ")") d -= 1
-                    if (d == 0 && x.isKw("IN") && f < 0) f = ix
-                  }
-                  f
-                }
-                if (inIx < 0) throw new ParseException("POSITION expects (sub, str[, start]) or (sub IN str)")
-                Vector(a.take(inIx), a.drop(inIx + 1))
-              } else args0
-            out += id("velo_position") += sym("(")
-            args.zipWithIndex.foreach { case (arg, ix) =>
-              if (ix > 0) out += sym(",")
-              out ++= rewriteTokens(arg, defaultTimeCol)
-            }
-            out += sym(")")
-            i = end
-          case "CONCAT" =>
-            // CONCAT skips NULL arguments and stringifies non-strings
-            // (functions.rs:1419 `FieldValue::Null => {}`) — Spark's
-            // concat NULLs the whole result on any NULL argument. The
-            // stringification is the reference rendering (velo_str):
-            // floats as Rust Display — "100", not cast's "100.0".
-            val (args, end) = callArgs(i + 1)
-            out += id("concat_ws") += sym("(") += Tok(TString, "''")
-            args.foreach { arg =>
-              out += sym(",") += id("velo_str") += sym("(")
-              out ++= rewriteTokens(arg, defaultTimeCol)
-              out += sym(")")
-            }
-            out += sym(")")
-            i = end
-          case "FROM_UNIXTIME" =>
-            // the reference returns a TIMESTAMP value (functions.rs:2413
-            // — chrono from_timestamp; a float argument keeps its
-            // sub-second precision); Spark's builtin returns a FORMATTED
-            // STRING. timestamp_seconds has exactly the reference shape
-            // for both integer and fractional inputs.
-            val (args, end) = callArgs(i + 1)
-            if (args.length != 1)
-              throw new ParseException("FROM_UNIXTIME expects exactly one argument")
-            out += id("timestamp_seconds") += sym("(")
-            out ++= rewriteTokens(args.head, defaultTimeCol)
-            out += sym(")")
-            i = end
-          case "REGEXP_REPLACE" =>
-            // the reference replaces only the FIRST match unless the 'g'
-            // flag is passed, and 'i' is case-insensitive
-            // (functions.rs:850-868 — Rust Regex::replace vs
-            // replace_all). Spark's builtin replaces every match and has
-            // no flags argument, so this routes to the parity kernel;
-            // a NULL flags argument reads as no-flags (functions.rs:840).
-            val (args, end) = callArgs(i + 1)
-            if (args.length < 3 || args.length > 4)
-              throw new ParseException(
-                "REGEXP_REPLACE expects (string, pattern, replacement[, flags])")
-            out += id("velo_regexp_replace") += sym("(")
-            args.take(3).zipWithIndex.foreach { case (a, ix) =>
-              if (ix > 0) out += sym(",")
-              out ++= rewriteTokens(a, defaultTimeCol)
-            }
-            out += sym(",")
-            if (args.length == 4) {
-              out += id("coalesce") += sym("(")
-              out ++= rewriteTokens(args(3), defaultTimeCol)
-              out += sym(",") += Tok(TString, "''") += sym(")")
-            } else out += Tok(TString, "''")
-            out += sym(")")
-            i = end
-          case "STRUCT" =>
-            // reference STRUCT (functions.rs:1316): an EVEN argument
-            // count is name/value pairs, an ODD count is positional
-            // field0..fieldN — both lower to named_struct. Even-count
-            // calls whose name positions are not string literals carry
-            // PER-RECORD field names in the reference (struct values are
-            // HashMaps there) — unrepresentable in a fixed relational
-            // schema, so those fall back to Spark's positional struct()
-            // (documented divergence, FuncParity ledger).
-            val (args, end) = callArgs(i + 1)
-            val namedPairs = args.nonEmpty && args.length % 2 == 0 &&
-              args.grouped(2).forall(p => p.head.length == 1 && p.head.head.kind == TString)
-            if (namedPairs) {
-              // duplicate names: the reference's HashMap keeps ONE field
-              // per name, last insert wins (first position kept here for
-              // a deterministic schema — the reference has no field
-              // order at all); un-deduped named_struct would emit
-              // struct<a:…,a:…> and make every later `.a` access an
-              // ambiguous-reference error
-              val deduped = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Tok]]
-              args.grouped(2).foreach { p =>
-                deduped(p.head.head.text) = p(1)
-              }
-              out += id("named_struct") += sym("(")
-              var first = true
-              deduped.foreach { case (name, value) =>
-                if (!first) out += sym(",")
-                first = false
-                out += Tok(TString, name) += sym(",")
-                out ++= rewriteTokens(value, defaultTimeCol)
-              }
-              out += sym(")")
-            } else if (args.length % 2 == 1) {
-              out += id("named_struct") += sym("(")
-              args.zipWithIndex.foreach { case (a, ix) =>
-                if (ix > 0) out += sym(",")
-                out += Tok(TString, s"'field$ix'") += sym(",")
-                out ++= rewriteTokens(a, defaultTimeCol)
-              }
-              out += sym(")")
-            } else {
-              out += id("struct") += sym("(")
-              args.zipWithIndex.foreach { case (a, ix) =>
-                if (ix > 0) out += sym(",")
-                out ++= rewriteTokens(a, defaultTimeCol)
-              }
-              out += sym(")")
-            }
-            i = end
-          case "MAP" =>
-            // reference MAP keys must be STRINGS or INTEGERS, and
-            // integer keys are STRINGIFIED (functions.rs:1352-1383) —
-            // every reference map is string-keyed. Keys route through
-            // velo_map_key, which stringifies integers (MAP(1,'x') =
-            // {"1":"x"}) and rejects any other key type at analysis
-            // (the reference rejects them per record at run time).
-            // Expression position only: the dialect's CAST grammar
-            // takes a single-identifier type, so MAP here is always the
-            // constructor call.
-            val (args, end) = callArgs(i + 1)
-            out += id("map") += sym("(")
-            args.zipWithIndex.foreach { case (a, ix) =>
-              if (ix > 0) out += sym(",")
-              if (ix % 2 == 0) {
-                out += id("velo_map_key") += sym("(")
-                out ++= rewriteTokens(a, defaultTimeCol)
-                out += sym(")")
-              } else out ++= rewriteTokens(a, defaultTimeCol)
-            }
-            out += sym(")")
-            i = end
-          case "EXTRACT" =>
-            // Three reference forms (FUNCTION_CATALOG.md, parser tests):
-            //  EXTRACT(FIELD FROM x)      — standard; DOW/EPOCH need mapping
-            //  EXTRACT('FIELD', x)        — legacy two-arg
-            //  EXTRACT(EPOCH FROM (a-b))  — epoch-seconds of a difference
-            val (args, end) = callArgs(i + 1)
-            // Option, not an empty-string sentinel: EXTRACT('', x) made
-            // the two-arg branch produce field = "" WITHOUT running the
-            // unknown-shape passthrough — neither arm emitted a token or
-            // advanced i, and the rewrite loop spun forever (one
-            // malformed statement hung the server thread; r16 review).
-            val parsedForm: Option[(String, Vector[Tok])] =
-              if (args.length == 2 && args(0).length == 1 && args(0).head.kind == TString)
-                Some((args(0).head.text.stripPrefix("'").stripSuffix("'")
-                  .toUpperCase(java.util.Locale.ROOT),
-                  rewriteTokens(args(1), defaultTimeCol)))
-              else if (args.length == 1 && args.head.length >= 3 && args.head(1).isKw("FROM"))
-                Some((args.head.head.upper, rewriteTokens(args.head.drop(2), defaultTimeCol)))
-              else None // unknown shape — pass through untouched
-            val (field, valueToks) = parsedForm.filter(_._1.nonEmpty)
-              .getOrElse { out += t; i += 1; ("", Vector.empty) }
-            if (field.nonEmpty) {
-              field match {
-                case "EPOCH" =>
-                  // strip one outer paren pair, then split on a top-level '-'
-                  val inner0 = valueToks
-                  val inner = if (inner0.headOption.exists(_.text == "(")) {
-                    var d = 0; var closeIx = -1
-                    inner0.zipWithIndex.foreach { case (x, ix) =>
-                      if (x.text == "(") d += 1
-                      else if (x.text == ")") { d -= 1; if (d == 0 && closeIx < 0) closeIx = ix }
-                    }
-                    if (closeIx == inner0.length - 1) inner0.slice(1, inner0.length - 1) else inner0
-                  } else inner0
-                  val minusIx = {
-                    var d = 0; var f = -1
-                    inner.zipWithIndex.foreach { case (x, ix) =>
-                      if (x.text == "(") d += 1
-                      if (x.text == ")") d -= 1
-                      if (d == 0 && x.text == "-" && ix > 0 && f < 0) f = ix
-                    }
-                    f
-                  }
-                  // `ts - INTERVAL …` is a TIMESTAMP, not a timestamp
-                  // difference: splitting it would emit
-                  // unix_timestamp(INTERVAL …) — an analysis error
-                  val rhsIsInterval =
-                    minusIx > 0 && inner.lift(minusIx + 1).exists(_.isKw("INTERVAL"))
-                  // CAST, not unix_timestamp: the reference's EPOCH is
-                  // chrono timestamp() — a euclidean FLOOR (functions.rs
-                  // :1919) — and cast-to-long floors micros where
-                  // unix_timestamp truncates toward zero (pre-1970
-                  // fractional seconds read one second apart). The inner
-                  // TIMESTAMP cast keeps string-typed ts columns working
-                  // (the UNIX_TIMESTAMP arm's rationale): without it a
-                  // string column casts '2024-…' straight to BIGINT —
-                  // NULL on every row, silently.
-                  def castLong(ts: Iterable[Tok]): Unit = {
-                    out += id("CAST") += sym("(") += id("CAST") += sym("(")
-                    out ++= ts
-                    out += id("AS") += id("TIMESTAMP") += sym(")")
-                    out += id("AS") += id("BIGINT") += sym(")")
-                  }
-                  if (minusIx > 0 && !rhsIsInterval) {
-                    // epoch of a timestamp difference, in seconds
-                    out += sym("(")
-                    castLong(inner.take(minusIx))
-                    out += Tok(TSymbol, "-")
-                    castLong(inner.drop(minusIx + 1))
-                    out += sym(")")
-                  } else {
-                    castLong(inner)
-                  }
-                case "DOW" =>
-                  // 0=Sunday (postgres/duckdb convention, VeloFunctions.veloExtract)
-                  out += sym("(") += id("dayofweek") += sym("(")
-                  out ++= valueToks
-                  out += sym(")") += Tok(TSymbol, "-") += Tok(TNumber, "1") += sym(")")
-                case "MILLISECOND" | "MICROSECOND" | "NANOSECOND" =>
-                  // sub-second components (reference functions.rs:1921-1923
-                  // timestamp_subsec_*: the 0-bounded fraction, NOT the
-                  // postgres seconds-inclusive reading) — Spark's own
-                  // extract() has no such fields, so passing them through
-                  // would AnalysisException on a reference-valid query.
-                  // pmod keeps the fraction non-negative pre-1970, like
-                  // chrono's accessors.
-                  val (unit, modulus, scale) = field match {
-                    case "MILLISECOND" => ("unix_millis", "1000", "")
-                    case "MICROSECOND" => ("unix_micros", "1000000", "")
-                    case _             => ("unix_micros", "1000000", " * 1000")
-                  }
-                  // the EPOCH arm's TIMESTAMP hop, here too: unix_millis/
-                  // unix_micros take no implicit string/date cast, so a
-                  // string time column failed analysis on exactly these
-                  // three fields (r16 review; VeloFunctions.veloExtract
-                  // shared the gap)
-                  out += sym("(") += id("pmod") += sym("(") += id(unit) += sym("(")
-                  out += id("CAST") += sym("(")
-                  out ++= valueToks
-                  out += id("AS") += id("TIMESTAMP") += sym(")")
-                  out += sym(")") += sym(",") += Tok(TNumber, modulus) += sym(")")
-                  if (scale.nonEmpty)
-                    out += Tok(TSymbol, "*") += Tok(TNumber, "1000")
-                  out += sym(")")
-                case f =>
-                  out += id("extract") += sym("(") += id(f) += id("FROM")
-                  out ++= valueToks
-                  out += sym(")")
-              }
-              i = end
-            }
-          case _ if renames.contains(up) =>
-            out += id(renames(up))
-            i += 1
-          case _ =>
             out += t
             i += 1
+          case _ => VeloExprs.dialectFunction(up) match {
+            case Some(f) =>
+              // a dialect function: renamed to its velo_ registration,
+              // whose builder holds the semantics (VeloExprs); arity is
+              // checked here so a bad call fails at parse time
+              val (raw, end) = callArgs(i + 1)
+              val args = callForm(up, raw)
+              f.arityError(up, args.length).foreach(m => throw new ParseException(m))
+              if (args.exists(_.isEmpty)) throw new ParseException(s"$up has an empty argument")
+              def call(as: Vector[Vector[Tok]]): Unit = {
+                out += id(f.veloName) += sym("(")
+                as.zipWithIndex.foreach { case (a, k) =>
+                  if (k > 0) out += sym(",")
+                  out ++= rewriteTokens(a, defaultTimeCol, aggWrap)
+                }
+                out += sym(")")
+              }
+              epochDifference(up, args) match {
+                case Some((l, r)) =>
+                  out += sym("(")
+                  call(Vector(args(0), l))
+                  out += Tok(TSymbol, "-")
+                  call(Vector(args(0), r))
+                  out += sym(")")
+                case None => call(args)
+              }
+              i = end
+            case None =>
+              out += t
+              i += 1
+          }
         }
       } else if (t.kind == TSymbol && t.text == "~") {
         // postgres-style regex-match operator — routed through the SAME

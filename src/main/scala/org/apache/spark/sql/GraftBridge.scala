@@ -10,7 +10,16 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A Column as an Expression. A literal is converted now rather than
+    * when the Column is analyzed, so an expression builder that
+    * dispatches on literal arguments (VeloExprs: STRUCT field names)
+    * sees the same Literal through the Column API as through SQL; every
+    * other node converts lazily. */
+  def expression(c: Column): Expression = c.node match {
+    case l: internal.Literal => classic.ColumnNodeToExpressionConverter(l)
+    case _ => classic.ExpressionUtils.expression(c)
+  }
 
   /** `SparkSession.cloneSession()` (private[sql]): a session with a
     * COPIED temp-view catalog over the same SparkContext/SharedState.

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The function-parity census (FuncParity) must stay CLOSED over the
@@ -10,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the FuncParity main, exit 1) instead of silently missing from
   * the round artifact.
   */
-class FuncParitySpec extends AnyFunSuite {
+class FuncParitySpec extends AnyFunSuite with SparkTestSession {
 
   private val refRoot = "/root/reference/src/velostream/sql/execution"
   private def available = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refRoot))
@@ -52,6 +54,16 @@ class FuncParitySpec extends AnyFunSuite {
         .contains(l.status) => s"$n=${l.status}"
     }
     assert(badStatus.isEmpty, s"unknown statuses: ${badStatus.mkString(", ")}")
+  }
+
+  test("every ledger probe executes through the dialect on the probe fixture") {
+    val ctx = FuncParity.probeContext(spark)
+    val failed = FuncParity.ledger.toSeq.sortBy(_._1).flatMap { case (name, l) =>
+      try { ctx.sql(l.probe).collect(); None }
+      catch { case NonFatal(e) => Some(s"$name: ${String.valueOf(e.getMessage).take(200)}") }
+    }
+    assert(failed.isEmpty, s"${failed.size}/${FuncParity.ledger.size} probes failed:\n" +
+      failed.mkString("\n"))
   }
 
   test("window dispatch scrape finds the OVER-clause families") {
