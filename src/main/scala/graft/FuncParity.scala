@@ -1,26 +1,15 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Dev tool + per-round artifact: the reference's FUNCTION REGISTRY,
-  * scraped from its sources at run time and swept through this
-  * library's dialect front-end with one executable probe per function.
-  *
-  * Sources scraped (reference paths relative to
-  * `/root/reference/src/velostream/sql/execution`):
-  *  - `expression/functions.rs` — the `register_sql_function!` inventory
-  *    (primary names, aliases, category, aggregate/window flags);
-  *  - `expression/window_functions.rs` — the OVER-clause evaluator's
-  *    dispatch arms (ROW_NUMBER/RANK/LAG/… — not in the inventory);
-  *  - `aggregation/functions.rs` — the GROUP BY accumulator dispatch.
-  *
-  * Every scraped name must have a LEDGER entry below carrying a status
-  * and evidence anchor; a registry name with no entry is an ERROR
-  * (exit 1) — a function the reference grows in a future version
-  * cannot slip past this census silently. Statuses:
+/** The function-parity ledger: one row per function of the reference's
+  * registry (the `register_sql_function!` inventory plus the names the
+  * OVER-clause evaluator and the GROUP BY accumulator dispatch), each
+  * with one executable probe through this library's dialect front-end,
+  * a status and an evidence anchor. The reference's inventory itself is
+  * committed as the test resource `reference_functions.tsv`;
+  * FuncParitySpec keeps the ledger closed over it and runs every probe.
+  * Statuses:
   *  - `parity-verified`: reference-evaluator semantics pinned by a
   *    dedicated spec and/or a DuckDB-oracled q-key re-checked every
   *    round;
@@ -28,79 +17,10 @@ import org.apache.spark.sql.functions._
   *    (rationale in the note);
   *  - `implemented`: executes through the dialect with standard
   *    Spark/SQL semantics; no dedicated cross-evaluator pin.
-  *
-  * Output: one JSON file (default `FUNCPARITY.json`) with a row per
-  * function and a summary; the driver-facing round artifact is a copy
-  * named `FUNCPARITY_r<N>.json`.
   */
 object FuncParity {
 
-  final case class RefFn(name: String, aliases: Seq[String], category: String,
-                         aggregate: Boolean, window: Boolean, sources: Set[String])
-
   final case class Ledger(probe: String, status: String, evidence: String, note: String = "")
-
-  /** `register_sql_function!` blocks → (name, aliases, category, flags).
-    * FAIL-LOUD sanity: the structured regex demands the macro's exact
-    * 5-field shape, so a future reference version that reorders or
-    * extends the fields would silently drop registrations — the scrape
-    * therefore cross-checks against a count of raw invocation heads
-    * (`register_sql_function!(`, which a doc-comment mention does not
-    * match) and aborts on any mismatch (r12 review). */
-  private[graft] def scrapeRegistry(path: String): Seq[RefFn] = {
-    val src = Files.readString(Paths.get(path))
-    val block = ("""register_sql_function!\s*\(\s*name:\s*"([^"]+)",\s*""" +
-      """aliases:\s*\[([^\]]*)\],\s*category:\s*FunctionCategory::(\w+),\s*""" +
-      """aggregate:\s*(\w+),\s*window:\s*(\w+)""").r
-    val out = block.findAllMatchIn(src).map { m =>
-      val aliases = m.group(2).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-      RefFn(m.group(1), aliases, m.group(3),
-        m.group(4) == "true", m.group(5) == "true", Set("expression/functions.rs"))
-    }.toSeq
-    val rawInvocations = """register_sql_function!\(""".r.findAllIn(src).length
-    if (rawInvocations != out.length) {
-      System.err.println(s"FUNCPARITY SCRAPE MISMATCH: $rawInvocations raw " +
-        s"register_sql_function!( invocations but only ${out.length} parsed — " +
-        "the macro shape changed; update the scrape regex")
-      sys.exit(1)
-    }
-    out
-  }
-
-  /** Match-arm heads of the form `"NAME" => …` or `"A" | "B" => …` —
-    * the dispatch style of window_functions.rs and
-    * aggregation/functions.rs. Only ALL-CAPS quoted names count;
-    * error-message strings are mixed case and never match. Character
-    * classes admit digits after the first letter (REGR_R2-style names
-    * were silently invisible to the old [A-Z_]-only classes), and
-    * rustfmt-wrapped multi-alternative arms are rejoined before the
-    * line match so a reformat cannot silently drop a whole arm
-    * (r12 review). */
-  private[graft] def scrapeArmNames(path: String): Seq[String] = {
-    val armHead = """^\s*(?:"[A-Z][A-Z0-9_]*"\s*\|\s*)*"[A-Z][A-Z0-9_]*"\s*=>""".r
-    // single-letter names admitted ([A-Z0-9_]* not +): armHead accepts
-    // them, so the extractor dropping them was a silent census short
-    // (r13 review)
-    val name = "\"([A-Z][A-Z0-9_]*)\"".r
-    val raw = Files.readAllLines(Paths.get(path)).toArray(Array.empty[String]).toSeq
-    // rejoin wrapped arms: a line ending in '|' continues, and a line
-    // starting with '|' continues the previous one
-    val joined = raw.foldLeft(Vector.empty[String]) { (acc, l) =>
-      val t = l.trim
-      if (acc.nonEmpty && (acc.last.trim.endsWith("|") || t.startsWith("|")))
-        acc.init :+ (acc.last + " " + t)
-      else acc :+ l
-    }
-    joined
-      // names scraped from the arm HEAD only (before '=>'): an
-      // ALL-CAPS string literal in the arm BODY would otherwise be
-      // censused as a function name — a wrong source/flag fold on an
-      // existing name or a spurious 'unknown' exit (r13 review)
-      .flatMap(l => armHead.findFirstIn(l))
-      .flatMap(h => name.findAllMatchIn(h).map(_.group(1)))
-      .distinct
-  }
 
   // evidence shorthands
   private val FS = "FunctionSurfaceSpec"
@@ -409,135 +329,5 @@ object FuncParity {
     ).toDF("id", "symbol", "price", "volume", "props", "event_time")
     ctx.registerStreamLike("t", t, "event_time", "id")
     ctx
-  }
-
-  // (r12 review) an earlier notFunctions suppression set filtered
-  // EXTRACT-part names (YEAR, WEEK, …) out of the arm scrape — grep
-  // shows NO such arm heads exist in either dispatch file, so the
-  // filter removed nothing today and would have silently swallowed a
-  // future real function with one of those names. Removed: an
-  // unexpected scraped name now surfaces as `unknown` → exit 1, and a
-  // human classifies it.
-
-  def main(args: Array[String]): Unit = {
-    val refRoot = args.headOption.getOrElse("/root/reference/src/velostream/sql/execution")
-    val outPath = args.lift(1).getOrElse("FUNCPARITY.json")
-
-    val registry = scrapeRegistry(s"$refRoot/expression/functions.rs")
-    val windowNames = scrapeArmNames(s"$refRoot/expression/window_functions.rs")
-    val aggNames = scrapeArmNames(s"$refRoot/aggregation/functions.rs")
-    // fail-loud for the arm scrape too (scrapeRegistry's raw-invocation
-    // cross-check precedent): a dispatch-style rewrite or reformat the
-    // regex misses would silently drop every window/agg-only row from
-    // the census with exit 0 (r13 review)
-    if (windowNames.isEmpty || aggNames.isEmpty) {
-      System.err.println(s"FUNCPARITY SCRAPE MISMATCH: arm scrape found " +
-        s"${windowNames.size} window + ${aggNames.size} aggregate dispatch names — " +
-        "the reference dispatch shape changed; update scrapeArmNames")
-      sys.exit(1)
-    }
-
-    val primaryOf: Map[String, String] =
-      registry.flatMap(f => (f.name +: f.aliases).map(_ -> f.name)).toMap
-    val byName = scala.collection.mutable.LinkedHashMap[String, RefFn]()
-    registry.foreach(f => byName(f.name) = f)
-    // registry rows keep their registry-declared flags (authoritative);
-    // a SYNTHESIZED row seen in both dispatch files must OR its flags —
-    // source-only folding left window=false on a row whose sources
-    // included window_functions.rs (r12 review)
-    val registryNames = registry.map(_.name).toSet
-    def fold(names: Seq[String], src: String, window: Boolean): Unit = names.foreach { n =>
-      val p = primaryOf.getOrElse(n, n)
-      byName.get(p) match {
-        case Some(f) if registryNames(p) => byName(p) = f.copy(sources = f.sources + src)
-        case Some(f) => byName(p) = f.copy(sources = f.sources + src,
-          aggregate = f.aggregate || !window, window = f.window || window)
-        case None => byName(p) = RefFn(p, Nil, if (window) "Window" else "Aggregate",
-          aggregate = !window, window = window, Set(src))
-      }
-    }
-    fold(aggNames, "aggregation/functions.rs", window = false)
-    fold(windowNames, "expression/window_functions.rs", window = true)
-
-    val unknown = byName.keys.filterNot(ledger.contains).toSeq.sorted
-    val spark = SparkSession.builder()
-      .appName("graft-funcparity").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val ctx = probeContext(spark)
-
-      val rows = byName.values.toSeq.sortBy(_.name).map { f =>
-        val entry = ledger.get(f.name)
-        val (probeOk, err) = entry match {
-          case None => (false, Some("no ledger entry"))
-          case Some(l) =>
-            try { ctx.sql(l.probe).collect(); (true, None) }
-            catch { case e: Throwable =>
-              (false, Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))) }
-        }
-        val status = entry.map(_.status).getOrElse("unknown")
-        (f, entry, probeOk, err, status)
-      }
-
-      val items = rows.map { case (f, entry, probeOk, err, status) =>
-        val fields = Seq(
-          "name" -> JsonOut.jstr(f.name),
-          "aliases" -> f.aliases.map(JsonOut.jstr).mkString("[", ",", "]"),
-          "category" -> JsonOut.jstr(f.category),
-          "aggregate" -> f.aggregate.toString,
-          "window" -> f.window.toString,
-          "sources" -> f.sources.toSeq.sorted.map(JsonOut.jstr).mkString("[", ",", "]"),
-          "status" -> JsonOut.jstr(status),
-          "probe_ok" -> probeOk.toString,
-          "evidence" -> JsonOut.jstr(entry.map(_.evidence).getOrElse("")),
-          "note" -> JsonOut.jstr(entry.map(_.note).getOrElse(err.getOrElse(""))))
-        val errField = err.filter(_ => entry.isDefined)
-          .map(e => Seq("probe_error" -> JsonOut.jstr(e))).getOrElse(Nil)
-        (fields ++ errField).map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-      }
-      val nVerified = rows.count(_._5 == "parity-verified")
-      val nDiverged = rows.count(_._5 == "divergence-documented")
-      val nImpl = rows.count(_._5 == "implemented")
-      val nUnknown = rows.count(_._5 == "unknown")
-      // "pinned" = evidence stronger than an execution probe: a
-      // cross-evaluator spec/oracle anchor (parity-verified) or a
-      // spec-pinned documented divergence. The driver diffs this count
-      // round-over-round; bare-'implemented' rows are the gap.
-      val nPinned = nVerified + nDiverged
-      val nProbeFail = rows.count(r => r._2.isDefined && !r._3)
-      // the ONE head-stamp implementation (no subprocess, packed-refs
-      // aware, "unknown" on failure) — a Runtime.exec copy here emitted
-      // "" outside a checkout and leaked process streams (r12 review)
-      val head = JsonOut.gitHead()
-      val json =
-        s"""{"head":${JsonOut.jstr(head)},
-           |"ref_root":${JsonOut.jstr(refRoot)},
-           |"total":${rows.size},
-           |"parity_verified":$nVerified,
-           |"divergence_documented":$nDiverged,
-           |"pinned":$nPinned,
-           |"implemented":$nImpl,
-           |"unknown":$nUnknown,
-           |"probe_failures":$nProbeFail,
-           |"functions":[
-           |${items.mkString(",\n")}
-           |]}""".stripMargin
-      Files.writeString(Paths.get(outPath), json)
-      println(s"FUNCPARITY: ${rows.size} functions, $nVerified verified, " +
-        s"$nDiverged documented divergences ($nPinned pinned), $nImpl implemented, " +
-        s"$nUnknown unknown, $nProbeFail probe failures -> $outPath")
-      if (unknown.nonEmpty) {
-        System.err.println(s"UNKNOWN (no ledger entry): ${unknown.mkString(", ")}")
-        sys.exit(1)
-      }
-      if (nProbeFail > 0) {
-        rows.filter(r => r._2.isDefined && !r._3).foreach(r =>
-          System.err.println(s"PROBE FAILED ${r._1.name}: ${r._4.getOrElse("")}"))
-        sys.exit(1)
-      }
-    } finally spark.stop()
   }
 }

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** file://-scheme FileSystem for local deployments: RawLocalFileSystem
   * minus client-side POSIX permission ENFORCEMENT.
   *
-  * Why it exists (r17 stack-sampled evidence, StreamProf deep mode):
+  * Why it exists (r17 full-stack samples of the streaming micro-batch):
   * without libhadoop.so, `RawLocalFileSystem.setPermission` falls back to
   * `Shell.execCommand` — a fork/exec of `chmod` PER FILE — whenever the
   * requested mode has group != other bits (Spark's streaming checkpoint

@@ -52,6 +52,8 @@ object GraftSession {
       // concat, versus negligible query compute. Threshold 1 routes
       // these exchanges to the serialized (Unsafe) writer: one spill
       // file per map task, no concat pass, bytes written once.
+      // Java-serialized RDD shuffles, whose serializer cannot relocate
+      // records, fall back to SortShuffleWriter instead.
       // Scale story: at 100 TB reduce counts exceed 200 and bypass
       // never fires either way — this only affects the small-R regime,
       // where the per-task R file creates + full extra write round are

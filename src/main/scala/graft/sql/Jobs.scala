@@ -54,7 +54,10 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
                        // each batch's records as JSON in addition to its
                        // internal epoch-dir write (reference:
                        // datasource/stdout_writer.rs:10).
-                       resolveStdoutSink: VeloStatement => Boolean = _ => false) {
+                       resolveStdoutSink: VeloStatement => Boolean = _ => false,
+                       // receives one `job.batch` span per micro-batch of
+                       // this manager's jobs (the owning context's tracer)
+                       tracer: Tracer = new Tracer()) {
 
   private case class Version(version: String, body: VeloStatement,
                              strategy: String, props: Map[String, String],
@@ -216,14 +219,9 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   private val counterState = scala.collection.mutable.Map[(String, String), Double]()
 
   /** Attach `@metric` specs to a job name BEFORE it starts; the next
-    * launch observes them on the streaming plan. The progress listener
-    * registers lazily here — a manager that never collects streaming
-    * metrics adds nothing to the session's listener bus. */
+    * launch observes them on the streaming plan. */
   def attachMetrics(name: String, specs: Vector[SqlApp.MetricSpec]): Unit = synchronized {
-    if (specs.nonEmpty) {
-      ensureListener()
-      metricSpecs.synchronized { metricSpecs(name) = specs }
-    }
+    if (specs.nonEmpty) metricSpecs.synchronized { metricSpecs(name) = specs }
   }
   /** Spec probe: is a metric spec / job config currently attached?
     * (the maps are private; the r15 granular-detach spec needs to
@@ -272,10 +270,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     if (metrics) metricSpecs.synchronized { metricSpecs.remove(name); () }
     if (config) { jobConfigs.remove(name); () }
   }
-
-  private var listenerRegistered = false
-  private def ensureListener(): Unit =
-    if (!listenerRegistered) { spark.streams.addListener(metricListener); listenerRegistered = true }
 
   private def observable(m: SqlApp.MetricSpec): Boolean =
     m.labels.isEmpty && (m.metricType match {
@@ -446,7 +440,12 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     resourceState.filterInPlace { case ((j, _), _) => j != jobName }
   }
 
-  private val metricListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+  /** The manager's one progress listener: per micro-batch it accounts
+    * resources, accumulates observed `@metric` values and records a
+    * `job.batch` span — purely driver-side bookkeeping, no extra pass
+    * over any data. Registered by the first streaming launch, removed by
+    * `detachListeners`. */
+  private val progressListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
@@ -466,6 +465,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       val owned: Set[String] = JobManager.this.synchronized {
         jobs.collect { case (n, j) if j.handle.exists(_.runId == e.progress.runId) => n }.toSet
       }
+      owned.foreach(recordBatchSpan(_, e.progress))
       // pushes buffered under the lock, sink invoked OUTSIDE it (lock
       // order JobManager → metricSpecs; an external sink must never run
       // under metricSpecs), and each push carries the COMPLETE per-name
@@ -524,6 +524,20 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     }
   }
 
+  /** One `job.batch` span per micro-batch of an owned job: the batch's
+    * trigger start and its `triggerExecution` duration. */
+  private def recordBatchSpan(job: String,
+                              p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = {
+    val startMs =
+      try java.time.Instant.parse(p.timestamp).toEpochMilli
+      catch { case scala.util.control.NonFatal(_) => System.currentTimeMillis() }
+    val dur = Option(p.durationMs.get("triggerExecution")).map(_.longValue()).getOrElse(0L)
+    tracer.recordSpan("job.batch", startMs, dur, Map(
+      "job" -> job,
+      "batch_id" -> p.batchId.toString,
+      "input_rows" -> p.numInputRows.toString))
+  }
+
   /** Resource accounting + hard enforcement from query progress
     * (reference resource_manager.rs `update_resource_usage` /
     * `check_resource_limit`): state rows = `aggregation_groups` (groups
@@ -552,7 +566,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
           // query may account/enforce — a same-named job in another
           // manager sharing the session must not be stopped for OUR
           // limits. runId, not the checkpoint-stable id (see the
-          // metricListener scope note): the stale-handle match would
+          // progressListener scope note): the stale-handle match would
           // otherwise enforce OUR limits against the successor's run
           jobs.get(name).filter(j => j.limits.monitorsProgress
             && j.handle.exists(_.runId == p.runId)).foreach { j =>
@@ -731,6 +745,11 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // partitioning applies AFTER observe so metrics see every record
     val df = jobConfigs.get(j.name).map(applyPartitioning(df1, v.body, _)).getOrElse(df1)
     if (df.isStreaming) {
+      // the progress listener registers once, before the first query
+      // that can emit progress starts (every launch holds the manager
+      // lock, so the check-then-add cannot race)
+      if (!spark.streams.listListeners().contains(progressListener))
+        spark.streams.addListener(progressListener)
       // INTO-sink contract for STREAMING bodies: the continuous
       // writeStream IS the sink write, so it targets the DECLARED sink
       // location (extension-derived format) when one resolves — batch
@@ -1216,7 +1235,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // against the dead statement's cap
     val priorLimits = j.limits
     j.limits = lims
-    if (lims.monitorsProgress) ensureListener()
     try guardedLaunch(j, v, newRecord = true)
     catch { case e: Throwable =>
       j.limits = priorLimits
@@ -1368,7 +1386,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     val v = j.current.getOrElse(throw new ParseException(s"job $name has no version to resume"))
     gateBreaker(j)
     gateConcurrency(name, j.limits) // re-admission counts against the limit too
-    if (j.limits.monitorsProgress) ensureListener()
     guardedLaunch(j, v) // same epoch → same checkpoint + sink → offset-exact resume
     statusDf(Some(name))
   }
@@ -1436,7 +1453,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     }
     val priorLimits = j.limits // speculative like the epoch (r17 review)
     j.limits = lims
-    if (lims.monitorsProgress) ensureListener()
     try guardedLaunch(j, v, newRecord = true)
     catch { case e: Throwable =>
       j.limits = priorLimits
@@ -1483,7 +1499,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     resetMetricState(name) // rollback epoch re-reads the source from scratch
     val priorLimits = j.limits // speculative like the epoch (r17 review)
     j.limits = lims
-    if (lims.monitorsProgress) ensureListener()
     try guardedLaunch(j, v)
     catch { case e: Throwable =>
       j.limits = priorLimits
@@ -1553,8 +1568,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   /** Manually close a job's breaker after fixing the root cause. */
   def resetBreaker(name: String): Unit = synchronized { job(name).breaker.reset() }
 
-  /** Whether this manager owns a job of that name (listener guards use
-    * it to scope shared-session events to their own context's jobs). */
+  /** Whether this manager owns a job of that name. */
   def hasJob(name: String): Boolean = synchronized(jobs.contains(name))
 
   /** Cheap per-job generation stamp — changes on every lifecycle
@@ -1572,12 +1586,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   /** Remove this manager's progress listener from the shared session
     * (VeloContext.close) — a discarded manager must not stay on the
     * session's listener bus. */
-  def detachListeners(): Unit = synchronized {
-    if (listenerRegistered) {
-      spark.streams.removeListener(metricListener)
-      listenerRegistered = false
-    }
-  }
+  def detachListeners(): Unit = synchronized(spark.streams.removeListener(progressListener))
 
   // ---- SHOW surfaces ----
 

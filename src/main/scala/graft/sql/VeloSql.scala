@@ -40,42 +40,11 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
     * them inspectable). Inspect via `SHOW TRACES [LIKE '...']`. */
   val tracer = new Tracer()
 
-  // Micro-batch spans for this context's jobs: the listener translates
-  // Spark's own progress events into `job.batch` spans — no extra pass
-  // over any data, purely driver-side bookkeeping. The guard checks the
-  // job is THIS context's (several contexts can share one session —
-  // context A must not record context B's batches), and `close()`
-  // removes the listener so a discarded context doesn't stay reachable
-  // from the session's listener bus forever.
-  private val batchSpanListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val p = e.progress
-      // jobManager null-guard: an event from ANOTHER context's job can
-      // arrive in the construction window before that field initializes
-      if (Option(p.name).exists(n => n.startsWith("graft-job-")
-        && jobManager != null && jobManager.hasJob(n.stripPrefix("graft-job-")))) {
-        val startMs =
-          try java.time.Instant.parse(p.timestamp).toEpochMilli
-          catch { case scala.util.control.NonFatal(_) => System.currentTimeMillis() }
-        val dur = Option(p.durationMs.get("triggerExecution")).map(_.longValue()).getOrElse(0L)
-        tracer.recordSpan("job.batch", startMs, dur, Map(
-          "job" -> p.name.stripPrefix("graft-job-"),
-          "batch_id" -> p.batchId.toString,
-          "input_rows" -> p.numInputRows.toString))
-      }
-    }
-  }
-  spark.streams.addListener(batchSpanListener)
-
-  /** Detach this context from the shared session: removes the listeners
-    * it registered (span + metric/resource) so a discarded context is
-    * collectable. Registered views and running jobs are left untouched —
-    * they belong to the session, not the context. */
+  /** Detach this context from the shared session: removes its job
+    * manager's progress listener so a discarded context is collectable.
+    * Registered views and running jobs are left untouched — they belong
+    * to the session, not the context. */
   def close(): Unit = {
-    spark.streams.removeListener(batchSpanListener)
     jobManager.detachListeners()
     // release this context's CTAS materializations: the views stay
     // registered (they belong to the session) but their cache blocks
@@ -253,7 +222,8 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
     // survive every micro-batch push (r17 review)
     (n, t, h, s) => recordMetricSlice(n, "streaming", t, h, s),
     resolveSinkPath = resolveIntoSinkPath,
-    resolveStdoutSink = resolveIntoStdoutSink)
+    resolveStdoutSink = resolveIntoStdoutSink,
+    tracer = tracer)
 
   /** First resolvable INTO-sink file path of a job body (CREATE SINK
     * declaration or the statement's own dotted props) — the streaming

@@ -4,42 +4,49 @@ import scala.util.control.NonFatal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The function-parity census (FuncParity) must stay CLOSED over the
-  * reference's registry: every function the reference dispatches —
-  * the register_sql_function! inventory, the window evaluator's arms,
-  * the aggregation dispatch — needs a ledger entry with a status and
-  * evidence. A new function appearing in the reference fails HERE (and
-  * in the FuncParity main, exit 1) instead of silently missing from
-  * the round artifact.
+/** The function-parity census must stay CLOSED over the reference's
+  * registry: every function the reference dispatches — the
+  * register_sql_function! inventory, the window evaluator's arms, the
+  * aggregation dispatch — needs a ledger entry with a status and
+  * evidence. The inventory is the committed resource
+  * `reference_functions.tsv` (one row per primary name: aliases,
+  * category, aggregate/window flags and the reference source files
+  * that register or dispatch it), so the census runs on every build.
   */
 class FuncParitySpec extends AnyFunSuite with SparkTestSession {
 
-  private val refRoot = "/root/reference/src/velostream/sql/execution"
-  private def available = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refRoot))
+  private final case class RefFn(name: String, aliases: Seq[String], category: String,
+                                 aggregate: Boolean, window: Boolean, sources: Seq[String])
 
-  test("reference registry scrape finds the full inventory") {
-    assume(available, s"reference sources not present at $refRoot")
-    val reg = FuncParity.scrapeRegistry(s"$refRoot/expression/functions.rs")
-    // 80 registered defs as of the pinned reference; a shrink means the
-    // scrape regex broke, a growth means new functions to cover
-    assert(reg.size >= 80, s"registry scrape found only ${reg.size} functions")
-    assert(reg.exists(f => f.name == "LISTAGG" && f.aliases.contains("COLLECT")))
-    assert(reg.exists(f => f.name == "STDDEV" && f.aliases.contains("STDDEV_SAMP")))
+  private lazy val inventory: Seq[RefFn] = {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/reference_functions.tsv"), "UTF-8")
+    try src.getLines().drop(1).filter(_.nonEmpty).map { line =>
+      val Array(name, aliases, category, aggregate, window, sources) = line.split("\t", -1)
+      def list(s: String) = s.split(",").toSeq.filter(_.nonEmpty)
+      RefFn(name, list(aliases), category, aggregate.toBoolean, window.toBoolean, list(sources))
+    }.toVector
+    finally src.close()
   }
 
-  test("every scraped function name has a ledger entry (no unknown rows)") {
-    assume(available, s"reference sources not present at $refRoot")
-    val reg = FuncParity.scrapeRegistry(s"$refRoot/expression/functions.rs")
-    val primaryOf = reg.flatMap(f => (f.name +: f.aliases).map(_ -> f.name)).toMap
-    val win = FuncParity.scrapeArmNames(s"$refRoot/expression/window_functions.rs")
-    val agg = FuncParity.scrapeArmNames(s"$refRoot/aggregation/functions.rs")
-    // NO suppression filter (r12): grep shows no EXTRACT-part arm heads
-    // exist in either dispatch file, so any unexpected scraped name is
-    // a real census gap that must fail here, not be silently dropped
-    val all = (reg.map(_.name) ++ (win ++ agg).map(n => primaryOf.getOrElse(n, n)))
-      .distinct
-    val missing = all.filterNot(FuncParity.ledger.contains).sorted
+  test("reference inventory holds the full 89-function census") {
+    assert(inventory.size == 89, s"inventory has ${inventory.size} rows")
+    assert(inventory.map(_.name).distinct.size == inventory.size, "duplicate primary names")
+    assert(inventory.exists(f => f.name == "LISTAGG" && f.aliases.contains("COLLECT")))
+    assert(inventory.exists(f => f.name == "STDDEV" && f.aliases.contains("STDDEV_SAMP")))
+    assert(inventory.forall(_.sources.nonEmpty))
+  }
+
+  test("inventory and ledger are closed over each other (no unknown rows)") {
+    // every inventory name or alias resolves to a ledger row ...
+    val primaryOf = inventory.flatMap(f => (f.name +: f.aliases).map(_ -> f.name)).toMap
+    val missing = primaryOf.toSeq.collect {
+      case (n, p) if !FuncParity.ledger.contains(p) => n
+    }.sorted
     assert(missing.isEmpty, s"functions with no ledger entry: ${missing.mkString(", ")}")
+    // ... and every ledger key is an inventory primary name
+    val extra = FuncParity.ledger.keys.toSeq.filterNot(inventory.map(_.name).toSet).sorted
+    assert(extra.isEmpty, s"ledger rows with no inventory function: ${extra.mkString(", ")}")
   }
 
   test("every ledger row is PINNED: no bare-'implemented' evidence remains (r12)") {
@@ -66,11 +73,12 @@ class FuncParitySpec extends AnyFunSuite with SparkTestSession {
       failed.mkString("\n"))
   }
 
-  test("window dispatch scrape finds the OVER-clause families") {
-    assume(available, s"reference sources not present at $refRoot")
-    val win = FuncParity.scrapeArmNames(s"$refRoot/expression/window_functions.rs")
+  test("the OVER-clause families are window rows of the inventory") {
+    val byName = inventory.map(f => f.name -> f).toMap
     Seq("ROW_NUMBER", "RANK", "DENSE_RANK", "LAG", "LEAD", "NTILE",
-      "PERCENT_RANK", "CUME_DIST", "NTH_VALUE").foreach(n =>
-      assert(win.contains(n), s"window scrape lost $n"))
+      "PERCENT_RANK", "CUME_DIST", "NTH_VALUE").foreach { n =>
+      assert(byName.get(n).exists(f => f.window && f.category == "Window" &&
+        f.sources.contains("expression/window_functions.rs")), s"$n is not a window row")
+    }
   }
 }

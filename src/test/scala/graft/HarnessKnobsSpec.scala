@@ -1,9 +1,26 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Entry-point knob parsing (no Spark session needed). */
+/** Entry-point knob parsing (no Spark session needed in this JVM). */
 class HarnessKnobsSpec extends AnyFunSuite {
+
+  test("GraftSession pins the serialized shuffle writer: bypassMergeThreshold=1") {
+    // core confs apply only where GraftSession creates the SparkContext,
+    // and this JVM's tests share one pre-built session — so the session
+    // is built in a child JVM on this JVM's classpath and module opens
+    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens")).toSeq
+    val cmd = Seq(javaBin, "-Xmx512m") ++ jvmArgs ++
+      Seq("-cp", sys.props("java.class.path"), GraftSessionConfProbe.getClass.getName.stripSuffix("$"))
+    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 0, out)
+    assert(out.linesIterator.contains("spark.shuffle.sort.bypassMergeThreshold=1"), out)
+  }
 
   test("r17 review: cpusFromEnv is the ONE positive-integer gate for SPARK_GRAFT_CPUS") {
     // pre-fix: Verify and Bench kept drifted copies, and 0/-2 passed
@@ -35,5 +52,17 @@ class HarnessKnobsSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](
       SparkEntry.querySubsetFromEnv(Some("q1_agg,zz_bogus")))
       .getMessage.contains("zz_bogus"))
+  }
+}
+
+/** Child-JVM half of the shuffle-writer case above: builds a
+  * GraftSession and prints the SparkContext's writer setting. */
+object GraftSessionConfProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = graft.api.GraftSession("local[1]", shufflePartitions = 1)
+    try {
+      val k = "spark.shuffle.sort.bypassMergeThreshold"
+      println(s"$k=${spark.sparkContext.getConf.get(k, "unset")}")
+    } finally spark.stop()
   }
 }

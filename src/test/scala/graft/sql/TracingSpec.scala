@@ -108,6 +108,59 @@ class TracingSpec extends AnyFunSuite with SparkTestSession {
     assert(batches.forall(_.attrs.contains("batch_id")))
   }
 
+  test("job.batch spans belong to the launching context, not to a same-named job elsewhere") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val inA = MemoryStream[(Long, Double)]
+    val inB = MemoryStream[(Long, Double)]
+    val a = new VeloContext(spark)
+    val b = new VeloContext(spark)
+    try {
+      a.register("own_a", inA.toDF().toDF("id", "v"))
+      b.register("own_b", inB.toDF().toDF("id", "v"))
+      // context A runs and stops its job `x`: A's registry keeps the name
+      inA.addData(Seq((1L, 1.0), (2L, 2.0)))
+      a.sql("START JOB x AS SELECT id, v FROM own_a")
+      a.jobManager.awaitIdle("x")
+      a.sql("STOP JOB x")
+      // context B runs its OWN job `x`, three rows per batch
+      inB.addData(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
+      b.sql("START JOB x AS SELECT id, v FROM own_b")
+      b.jobManager.awaitIdle("x")
+      def bBatches(ctx: VeloContext) = ctx.tracer.spans.filter(s =>
+        s.name == "job.batch" && s.attrs.get("input_rows").contains("3"))
+      val deadline = System.nanoTime() + 15L * 1000000000L
+      while (bBatches(b).isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      b.sql("STOP JOB x")
+      assert(bBatches(b).nonEmpty)
+      // A's listener was registered first, so the bus delivered B's
+      // batch to it before B recorded the span
+      assert(bBatches(a).isEmpty, s"A recorded B's batches: ${bBatches(a)}")
+    } finally { a.close(); b.close() }
+  }
+
+  test("VeloContext.close() removes the one progress listener its jobs registered") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val before = spark.streams.listListeners().length
+    val in = MemoryStream[(Long, Double)]
+    val ctx = new VeloContext(spark)
+    ctx.register("closing_events", in.toDF().toDF("id", "v"))
+    in.addData(Seq((1L, 1.0)))
+    ctx.sql("START JOB closing1 AS SELECT id, v FROM closing_events")
+    ctx.sql("START JOB closing2 AS SELECT id, v FROM closing_events")
+    ctx.sql("PAUSE JOB closing1")
+    ctx.sql("RESUME JOB closing1")
+    // one listener per context, however many launches
+    assert(spark.streams.listListeners().length == before + 1)
+    ctx.sql("STOP JOB closing1")
+    ctx.sql("STOP JOB closing2")
+    ctx.close()
+    assert(spark.streams.listListeners().length == before)
+  }
+
   test("Tracer capacity must be positive — a 0-capacity tracer would silently drop every span (r14 review)") {
     intercept[IllegalArgumentException](new Tracer(capacity = 0))
     intercept[IllegalArgumentException](new Tracer(capacity = -3))
