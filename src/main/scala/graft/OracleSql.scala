@@ -77,7 +77,7 @@ object OracleSql {
     s"((epoch_us($ts) - ${pmod(s"epoch_us($ts)", 1000L)}) // 1000)"
 
   /** floor(epoch_s / step) * step — the oracle twin of
-    * TimeWindows.epochBucket (epoch-aligned bucket start, seconds).
+    * VeloExprs.epochBucket (epoch-aligned bucket start, seconds).
     * us-based for the same sub-millisecond reason as epochS. */
   private def bucketS(ts: String, stepSeconds: Long): String = {
     val us = stepSeconds * 1000000L

@@ -77,7 +77,7 @@ object SparkEntry {
     sum(money(price) * (lit(1).cast("decimal(18,4)") - money(discount))).cast("double")
   /** Epoch seconds via CAST (floorDiv on micros), not unix_timestamp
     * (truncates toward zero): keeps q5/q7's bucketing consistent with
-    * TimeWindows.epochBucket for pre-1970 fractional timestamps. */
+    * VeloExprs.epochBucket for pre-1970 fractional timestamps. */
   private def epochS(c: Column): Column = c.cast("long")
 
   /** The near-dup verified-pair pipeline shared by q57/q60/q69/q70:

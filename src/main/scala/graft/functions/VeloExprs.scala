@@ -516,6 +516,11 @@ object VeloExprs {
     DialectFn(Seq("DATEDIFF"), 3, 3)(a =>
       dateDiffUnit(literalArg("DATEDIFF unit", a(0)), a(1), a(2))),
     DialectFn(Seq("DATE_FORMAT"), 2, 2)(a => dateFormat(a(0), a(1))),
+    // (ts, step seconds): the parser's TUMBLE_START/END arm parses the
+    // duration, supplies the default time column and MIN-wraps the call
+    // inside a windowed aggregation before calling these rows
+    DialectFn(Seq("TUMBLE_START"), 2, 2)(a => epochBucket(a(0), a(1))),
+    DialectFn(Seq("TUMBLE_END"), 2, 2)(a => epochBucket(a(0), a(1), end = true)),
     // ---- JSON ----
     DialectFn(Seq("JSON_VALUE", "JSON_EXTRACT"), 2, 2)(a => jsonValue(a(0), a(1))),
     DialectFn(Seq("JSON_EXISTS"), 2, 2)(a => jsonExists(a(0), a(1))),
@@ -686,6 +691,20 @@ object VeloExprs {
     * string time columns working; without it '2024-…' casts straight to
     * BIGINT — NULL on every row. */
   def epochSeconds(x: Expression): Expression = cast(cast(x, TimestampType), LongType)
+
+  /** TUMBLE_START/END: the epoch-aligned bucket of `ts`, `step` seconds
+    * wide, as epoch seconds — `floor(epochSeconds(ts) / step) * step`,
+    * plus one step for the bucket's end. Flooring through
+    * [[epochSeconds]] puts a pre-1970 fractional-second event in its
+    * own bucket, as the DuckDB oracle does (OracleSql.epochS/bucketS);
+    * truncation would place it one window late — and a NUMERIC ts cast
+    * straight to BIGINT truncates too (-0.5 → 0), which the TIMESTAMP
+    * hop avoids. The one definition of the dialect's TUMBLE_START/END,
+    * the Column API's tumbleStart/End and TimeWindows' buckets. */
+  def epochBucket(ts: Expression, step: Expression, end: Boolean = false): Expression = {
+    val start = Multiply(fn("floor", Divide(epochSeconds(ts), step)), step)
+    cast(if (end) Add(start, step) else start, LongType)
+  }
 
   /** FROM_UNIXTIME returns a TIMESTAMP value (functions.rs:2413 — chrono
     * from_timestamp; a float keeps its sub-second precision); Spark's

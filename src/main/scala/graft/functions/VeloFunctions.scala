@@ -93,21 +93,14 @@ object VeloFunctions {
   def veloUnixTimestamp(ts: Column): Column = column(VeloExprs.epochSeconds(expression(ts)))
   def veloFromUnixtime(epoch: Column): Column = column(VeloExprs.fromUnixtime(expression(epoch)))
   /** TUMBLE_START: epoch-aligned bucket start (seconds). */
-  def tumbleStart(ts: Column, sizeSeconds: Long): Column = {
+  def tumbleStart(ts: Column, sizeSeconds: Long): Column = tumble(ts, sizeSeconds, end = false)
+  def tumbleEnd(ts: Column, sizeSeconds: Long): Column = tumble(ts, sizeSeconds, end = true)
+  private def tumble(ts: Column, sizeSeconds: Long, end: Boolean): Column = {
     // size 0 would divide by zero → every row lands in one silent NULL
     // bucket (non-ANSI) or throws mid-job (ANSI); reject at plan build
     require(sizeSeconds >= 1, s"window size must be >= 1 second, got $sizeSeconds")
-    // cast-to-long (floorDiv on micros), not unix_timestamp: the
-    // dialect parser's TUMBLE_START lowering already made this switch
-    // (VeloSqlParser) — this is the other copy, and a pre-1970
-    // fractional ts would bucket one second apart between the two
-    // timestamp hop like veloUnixTimestamp (r14 review): string time
-    // columns must bucket, not NULL/throw; the dialect's TUMBLE_START
-    // lowering and TimeWindows.epochBucket both carry it already
-    (floor(ts.cast("timestamp").cast("long") / sizeSeconds) * sizeSeconds).cast("long")
+    column(VeloExprs.epochBucket(expression(ts), Literal(sizeSeconds), end))
   }
-  def tumbleEnd(ts: Column, sizeSeconds: Long): Column =
-    tumbleStart(ts, sizeSeconds) + lit(sizeSeconds)
 
   // ---- Conditional ----
   /** COALESCE — functions.rs:1447: first non-NULL, returned AS-IS. The

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VeloFunctions.tumbleStart
+
 /** Time-window operators: the reference's `WINDOW TUMBLING / SLIDING /
   * SESSION` clauses (reference: docs/sql/PARSER_GRAMMAR.md "Time-Based
   * Windows"; src/velostream/sql/execution/window_v2/).
@@ -46,23 +48,6 @@ object TimeWindows {
       s"$op key/aggregate aliases must not use the reserved name window_start")
   }
 
-  /** The ONE epoch-bucket rule (floor to a step multiple, epoch
-    * seconds) — shared by tumbling and sliding so their bucket
-    * alignment cannot drift apart on a future timestamp-handling fix.
-    * Seconds come from cast(ts AS TIMESTAMP AS LONG) — a floorDiv on
-    * the micros — NOT unix_timestamp, which truncates toward zero: a
-    * pre-1970 event with a fractional second (-0.5s) would bucket one
-    * window late. The inner TIMESTAMP cast matters for NUMERIC ts
-    * columns too: cast(DOUBLE AS LONG) truncates toward zero directly
-    * (-0.5 → 0, one window late again), while DOUBLE → TIMESTAMP →
-    * LONG floors — the same guard the SQL-translation path inserts
-    * (VeloSqlParser TUMBLE_START rewrite), so the Column API and the
-    * dialect cannot disagree on a bucket (r13 review). The DuckDB
-    * oracle floors through OracleSql.epochS/bucketS (bare `//` there
-    * TRUNCATES too — both sides pin flooring explicitly). */
-  private def epochBucket(tsCol: String, stepSeconds: Long): Column =
-    (floor(col(tsCol).cast("timestamp").cast("long") / stepSeconds) * stepSeconds).cast("long")
-
   /** TUMBLING(size): non-overlapping epoch-aligned buckets.
     * Emits `window_start`/`window_end` as epoch seconds (BIGINT) —
     * oracle-stable across engines/timezones.
@@ -73,7 +58,7 @@ object TimeWindows {
     require(sizeSeconds > 0, s"window size must be positive, got $sizeSeconds")
     require(aggs.nonEmpty, "tumbling needs at least one aggregate expression")
     requireNoReserved(df, "tumbling")
-    val agged = df.groupBy(epochBucket(tsCol, sizeSeconds).as("window_start") +: keys: _*)
+    val agged = df.groupBy(tumbleStart(col(tsCol), sizeSeconds).as("window_start") +: keys: _*)
       .agg(aggs.head, aggs.tail: _*)
     requireNoReservedAliases(agged, "tumbling")
     agged.withColumn("window_end", col("window_start") + lit(sizeSeconds))
@@ -110,7 +95,7 @@ object TimeWindows {
         "size/advance units, or tumble + roll up instead")
     require(aggs.nonEmpty, "sliding needs at least one aggregate expression")
     requireNoReserved(df, "sliding")
-    val lastStart = epochBucket(tsCol, advanceSeconds)
+    val lastStart = tumbleStart(col(tsCol), advanceSeconds)
     // covering starts: lastStart, lastStart-advance, ... (n of them).
     // Negative starts are legitimate (pre-1970 events) — filtering them
     // would silently drop those events and diverge from tumbling().

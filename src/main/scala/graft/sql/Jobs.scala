@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryException}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import VeloSqlParser._
 
@@ -14,10 +14,10 @@ import VeloSqlParser._
   * A job is a named, versioned statement. Its lifecycle maps onto
   * Structured Streaming primitives:
   *
-  *  - START → `writeStream.start()` with a PER-JOB checkpoint dir and a
-  *    parquet/changelog sink (executors write shards; nothing lands on
-  *    the driver). A batch body instead materializes a standing view
-  *    `<job>_out`.
+  *  - START → `writeStream.start()` with a PER-JOB checkpoint dir and
+  *    the sink StreamOps.emission/sinkWriter choose, as for sqlStream
+  *    (executors write shards; nothing lands on the driver). A batch
+  *    body instead materializes a standing view `<job>_out`.
   *  - PAUSE → `query.stop()` with the checkpoint RETAINED. Spark's
   *    checkpoint holds source offsets + state-store snapshots, so
   *  - RESUME → a fresh `start()` on the SAME checkpoint + sink continues
@@ -278,11 +278,18 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       case _ => false
     })
 
+  /** A labeled spec the changelog sink's per-batch hook collects: a
+    * counter or a field-bearing gauge (a labeled gauge collected by
+    * nothing was accepted and then silently never appeared; r12/r14
+    * review). */
+  private def labeledCollectable(m: SqlApp.MetricSpec): Boolean =
+    m.labels.nonEmpty && (m.metricType == "counter" || (m.metricType == "gauge" && m.field.isDefined))
+
   /** LABELED streaming counters: observe() cannot express a groupBy, so
-    * these are aggregated per micro-batch inside the EMIT CHANGES job's
+    * these are aggregated per micro-batch inside a changelog job's
     * own foreachBatch (one extra agg on the already-materialized batch
     * — only label-combo totals reach the driver) and accumulated across
-    * batches. Append-sink jobs keep the exactly-once file sink and
+    * batches. Final-row jobs keep the exactly-once file sink and
     * collect only unlabeled metrics via observe(). */
   private val labeledState = scala.collection.mutable.Map[(String, String, Map[String, String]), Double]()
 
@@ -310,14 +317,10 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // idempotent sink write effectively does (r14 review)
     val seen = metricSpecs.synchronized(labeledSeenBatch.getOrElse(jobName, -1L))
     if (batchId <= seen) return
-    // counters AND field-bearing gauges: a labeled gauge on a streaming
-    // job was accepted by attachMetrics but collected by NOTHING
-    // (observable() excludes labeled specs, and this path kept only
-    // counters) — the metric silently never appeared (r12 review).
-    // Gauge semantics are last-write-wins per label combo.
+    // counters AND field-bearing gauges (labeledCollectable); gauge
+    // semantics are last-write-wins per label combo
     val specs = metricSpecs.synchronized(metricSpecs.getOrElse(jobName, Vector.empty))
-      .filter(m => m.labels.nonEmpty &&
-        (m.metricType == "counter" || (m.metricType == "gauge" && m.field.isDefined)))
+      .filter(labeledCollectable)
     // PHASE 1 — every Spark action runs BEFORE any state mutates: a
     // transient collect() failure (executor loss) aborts with the
     // high-water mark UNMOVED and the totals untouched, so Spark's
@@ -656,17 +659,14 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     case CreateStreamAs(_, s, _, _) => s.emit
     case CreateTableAs(_, s, _, _) => s.emit
     // recurse like liftProps does: EMIT CHANGES inside a CTE/UNION job
-    // body otherwise silently falls to the append-sink branch (wrong
-    // output mode — AnalysisException at start, or final-only rows
-    // with no changelog)
+    // body otherwise silently reads as no EMIT (final rows, no
+    // changelog)
     case WithCtes(_, body, _) => emitOf(body)
     // ALL branches, not just the last (the asInsertBody/liftProps
     // hoist rule): the parser attaches a trailing EMIT to the branch
-    // it just read, so `… EMIT CHANGES UNION ALL …` landed the mode on
-    // branch 0 and a last-branch read silently fell to the append-sink
-    // arm (AnalysisException on an aggregating body, or lost changelog
-    // semantics on a non-aggregating one); conflicting branch modes
-    // reject like asInsertBody does (r16 review)
+    // it just read, so `… EMIT CHANGES UNION ALL …` lands the mode on
+    // branch 0; conflicting branch modes reject like asInsertBody does
+    // (r16 review)
     case u: Union =>
       val emits = u.selects.flatMap(_.emit).distinct
       if (emits.length > 1)
@@ -839,93 +839,34 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
           catch { case scala.util.control.NonFatal(_) => () }
         }
       }
-      // a spec NO streaming path collects must be named, not silently
-      // dropped (the r11/r12 class, still open for two shapes):
-      // histograms exist only on the batch-collection path, and labeled
-      // specs are collected solely by the EMIT CHANGES foreachBatch —
-      // an append-sink job's labeled specs and any job's histograms
-      // were accepted by attachMetrics and then never appeared in
+      // the one emission rule and sink writer (StreamOps), called where
+      // start() runs: after the sink reset and the epoch stamps, so a
+      // rejected emission takes the same revert path as a failed start
+      val emission = graft.streaming.StreamOps.emission(df, emitOf(v.body))
+      val changelog = emission == graft.streaming.StreamOps.Changelog
+      // labeled specs are collected by the changelog sink's per-batch
+      // hook; histograms exist only on the batch-collection path. A
+      // spec NO streaming path collects must be named, not silently
+      // dropped: accepted by attachMetrics, it would never appear in
       // /metrics with no signal (r17 review)
-      val emit = emitOf(v.body)
-      locally {
-        val specs = metricSpecs.synchronized(metricSpecs.getOrElse(j.name, Vector.empty))
-        val isEmitChanges = emit.contains(EmitChanges)
-        val uncollected = specs.filterNot(m => observable(m) ||
-          (isEmitChanges && m.labels.nonEmpty &&
-            (m.metricType == "counter" || (m.metricType == "gauge" && m.field.isDefined))))
-        if (uncollected.nonEmpty)
-          System.err.println(s"[jobs] WARNING: metric spec(s) " +
-            s"${uncollected.map(_.name).mkString(", ")} on streaming job '${j.name}' " +
-            "will not be collected: histograms are batch-only, and labeled " +
-            "counters/gauges require EMIT CHANGES (append-sink jobs collect only " +
-            "unlabeled counter / field-gauge specs via observe())")
-      }
-      val q = emit match {
-        case Some(EmitChanges) =>
-          val out = sinkLoc
-          val jobName = j.name
-          // the gate must match collectLabeled's OWN filter (counter OR
-          // field-bearing gauge): checking counters only re-created the
-          // r12 bug for a job whose sole labeled metric is a gauge —
-          // accepted by attachMetrics, collected by nothing (r14 review)
-          val hasLabeled = metricSpecs.synchronized(metricSpecs.getOrElse(jobName, Vector.empty))
-            .exists(m => m.labels.nonEmpty &&
-              (m.metricType == "counter" || (m.metricType == "gauge" && m.field.isDefined)))
-          df.writeStream
-            .outputMode(OutputMode.Update())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              // IDEMPOTENT per-batch write: a crash between this write
-              // and the checkpoint commit makes Spark RE-RUN the batch
-              // on restart — a blind append would duplicate its rows in
-              // the sink (breaking the recovered path's exactly-once
-              // claim); dynamic partition overwrite on _batch_id
-              // replaces exactly the re-run batch's partition instead
-              def sink(): Unit = batch.withColumn("_batch_id", lit(batchId))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .options(sinkOpts).format(sinkFmt).save(out)
-              // persist whenever MORE THAN ONE action reads the batch
-              // (labeled metric collection and/or the console print) —
-              // each extra action otherwise re-reads source offsets and
-              // state per trigger; the print sits INSIDE the persisted
-              // scope so the cache actually serves it (r15 review)
-              if (hasLabeled || console.isDefined)
-                graft.streaming.StreamOps.withPersistedBatch(batch) {
-                  console.foreach(graft.streaming.StreamOps.printJsonRows(batch, _))
-                  sink()
-                  if (hasLabeled) collectLabeled(jobName, batch, batchId)
-                }
-              else sink()
-            }
-            .option("checkpointLocation", j.ckptDir)
-            .queryName(s"graft-job-${j.name}")
-            .start()
-        case _ =>
-          val base = df.writeStream.outputMode(OutputMode.Append())
-          val sunk = console match {
-            // a debug-sink job trades the file sink's exactly-once
-            // commit log for the console write (one query cannot serve
-            // both a file sink and foreachBatch): a crash-re-run batch
-            // re-appends alongside its re-print — at-least-once in the
-            // INTERNAL mirror dir only, for a sink whose primary output
-            // (the console) is at-least-once by nature anyway.
-            case Some(o) =>
-              base.foreachBatch { (batch: DataFrame, _: Long) =>
-                // persist across print + write (the StreamOps rule)
-                graft.streaming.StreamOps.withPersistedBatch(batch) {
-                  graft.streaming.StreamOps.printJsonRows(batch, o)
-                  batch.write.mode("append").options(sinkOpts).format(sinkFmt).save(sinkLoc)
-                }
-              }
-            case None =>
-              base.format(sinkFmt).options(sinkOpts).option("path", sinkLoc)
-          }
-          sunk
-            .option("checkpointLocation", j.ckptDir)
-            .queryName(s"graft-job-${j.name}")
-            .start()
-      }
+      val specs = metricSpecs.synchronized(metricSpecs.getOrElse(j.name, Vector.empty))
+      val uncollected = specs.filterNot(m => observable(m) || (changelog && labeledCollectable(m)))
+      if (uncollected.nonEmpty)
+        System.err.println(s"[jobs] WARNING: metric spec(s) " +
+          s"${uncollected.map(_.name).mkString(", ")} on streaming job '${j.name}' " +
+          "will not be collected: histograms are batch-only, and labeled " +
+          "counters/gauges require a changelog emission (final-row jobs collect " +
+          "only unlabeled counter / field-gauge specs via observe())")
+      val jobName = j.name
+      val onBatch =
+        if (changelog && specs.exists(labeledCollectable))
+          Some((batch: DataFrame, batchId: Long) => collectLabeled(jobName, batch, batchId))
+        else None
+      val q = graft.streaming.StreamOps
+        .sinkWriter(df, emission, sinkLoc, sinkFmt, sinkOpts, console, onBatch)
+        .option("checkpointLocation", j.ckptDir)
+        .queryName(s"graft-job-${j.name}")
+        .start()
       j.handle = Some(q)
       // a PREVIOUS batch launch of this job may have left a cached
       // materialization and a <job>_out view: release the cache (the

@@ -204,7 +204,6 @@ object SqlValidator {
         if (props.isEmpty) warnings :+= "source/sink declaration has no properties"
       case StartJob(_, body, props) =>
         validateBody(body)
-        warnAppendModeAgg(body)
         checkJobProps(props)
       case DeployJob(_, _, body, props, strategy) =>
         strategy match {
@@ -213,36 +212,12 @@ object SqlValidator {
           case _ =>
         }
         validateBody(body)
-        warnAppendModeAgg(body)
         checkJobProps(props)
       case StopJob(name, _) => warnIfUnknownJob(name)
       case PauseJob(name) => warnIfUnknownJob(name)
       case ResumeJob(name) => warnIfUnknownJob(name)
       case RollbackJob(name, _) => warnIfUnknownJob(name)
       case Show(_, _) | Describe(_) => ()
-    }
-
-    /** A non-windowed STREAMING aggregate job body with default/FINAL
-      * emission is guaranteed to die at writeStream.start() — the job
-      * path routes by EMIT only (append mode needs a watermark-evicted
-      * window), unlike sqlStream's changelog rescue. A WARNING, not an
-      * error: launch-time failure semantics are load-bearing (the
-      * revert/stash machinery is tested through exactly such bodies),
-      * but the author should hear about it pre-deploy (r17 review). */
-    def warnAppendModeAgg(body: VeloStatement): Unit = body match {
-      case Select(s) if !s.emit.contains(EmitChanges) && s.window.isEmpty =>
-        try {
-          val df = sess.sql(toSparkSql(s, ctx.defaultTimeCol, ctx.streamTimeCol))
-          val streamingAgg = df.queryExecution.analyzed.exists {
-            case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.isStreaming
-            case _ => false
-          }
-          if (streamingAgg)
-            warnings :+= "job body is a non-windowed streaming aggregate " +
-              "without EMIT CHANGES — append mode will fail at launch " +
-              "(add EMIT CHANGES or a WINDOW clause)"
-        } catch { case scala.util.control.NonFatal(_) => () }
-      case _ => ()
     }
 
     def warnIfUnknownJob(name: String): Unit =

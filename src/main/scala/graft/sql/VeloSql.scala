@@ -23,8 +23,9 @@ import VeloSqlParser._
   *  - INSERT INTO t SELECT|VALUES → appends to a registered table.
   *  - SHOW STREAMS|TABLES|JOBS → catalog listing.
   *  - EMIT CHANGES|FINAL is recorded on the plan; in batch both read the
-  *    complete input (a final emission). The streaming runner maps them
-  *    to Update/Append output modes (graft.streaming.StreamOps).
+  *    complete input (a final emission). On a stream,
+  *    graft.streaming.StreamOps.emission maps them, with the plan's
+  *    shape, to a changelog or final-rows sink.
   *
   * At scale nothing here adds overhead: the translation is one string →
   * one Catalyst plan; pushdown/pruning/AQE all apply as if the user had
@@ -108,10 +109,11 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
     streamTsCols.put(name.toLowerCase(java.util.Locale.ROOT), tsCol)
   }
 
-  /** Execute a dialect SELECT with streaming semantics: EMIT CHANGES →
-    * update-mode changelog sink, EMIT FINAL (default for windowed aggs)
-    * → append-mode parquet file sink. Returns the sink directory —
-    * executors write shards directly, nothing lands on the driver. */
+  /** Execute a dialect SELECT with streaming semantics, emitting as
+    * StreamOps.emission decides (the rule START JOB follows too): a
+    * changelog sink or the final-rows file sink. Returns the sink
+    * directory — executors write shards directly, nothing lands on the
+    * driver. */
   def sqlStream(text: String): String = parseStatement(text) match {
     case Select(s) =>
       var df = spark.sql(toSparkSql(s, defaultTimeCol, streamTimeCol))
@@ -138,48 +140,12 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
       // console output. Resolution is the batch arms' exact rule via
       // the SHARED helper: file path wins, then catalog-aware stdout.
       val toStdout = intoStdout(s)
-      s.emit match {
-        case Some(EmitChanges) => s.window match {
-          // Spark rejects update-mode session_window aggregation
-          // outright — route to the append/watermark-final path, which
-          // emits each session exactly once at close (a valid changelog
-          // of FINALIZED sessions; documented approximation, not a crash)
-          case Some(_: VeloSqlParser.Session) =>
-            graft.streaming.StreamOps.runToParquet(df, "velo_sql", sink, stdout = toStdout)
-          case _ => graft.streaming.StreamOps.runChangelog(df, "velo_sql", sink, stdout = toStdout)
-        }
-        case _ =>
-          // a NON-windowed continuous aggregate cannot run in append
-          // mode (no event-time window ever closes its groups — Spark
-          // throws); the reference's default emission for it is
-          // changelog-style updates, so route it there instead of dying.
-          // Judged from the ANALYZED PLAN, not just s.groupBy: a GLOBAL
-          // aggregate (SELECT COUNT(*) FROM stream — no GROUP BY) and
-          // SELECT DISTINCT lower to a streaming Aggregate too, and the
-          // groupBy-only guard sent exactly those to the append arm it
-          // exists to rescue them from (r14 review). Only STREAMING
-          // aggregates force update mode: a windowless stream-static
-          // join whose STATIC side contains an Aggregate (an aggregating
-          // view/CTAS) is append-safe, and matching any Aggregate sent
-          // exactly that query to the changelog sink — its output
-          // silently gained a _batch_id column (r14 advice).
-          val aggregates = df.queryExecution.analyzed.exists {
-            case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.isStreaming
-            case _ => false
-          }
-          if (s.window.isEmpty && aggregates) {
-            // the changelog reroute is the DEFAULT-emission rescue; a
-            // user who EXPLICITLY asked for FINAL emission on a
-            // windowless streaming aggregate would silently receive
-            // update-mode changelog rows with an extra _batch_id column
-            // — a dialect error beats a silently different sink shape
-            // (r15 review)
-            if (s.emit.contains(EmitFinal)) throw new ParseException(
-              "EMIT FINAL on a non-windowed streaming aggregate never " +
-                "finalizes (no event-time window closes its groups) — " +
-                "use EMIT CHANGES or add a WINDOW clause")
-            graft.streaming.StreamOps.runChangelog(df, "velo_sql", sink, stdout = toStdout)
-          } else graft.streaming.StreamOps.runToParquet(df, "velo_sql", sink, stdout = toStdout)
+      // the one emission rule (StreamOps.emission), shared with START JOB
+      graft.streaming.StreamOps.emission(df, s.emit) match {
+        case graft.streaming.StreamOps.Changelog =>
+          graft.streaming.StreamOps.runChangelog(df, "velo_sql", sink, stdout = toStdout)
+        case graft.streaming.StreamOps.Final =>
+          graft.streaming.StreamOps.runToParquet(df, "velo_sql", sink, stdout = toStdout)
       }
     case other => throw new ParseException(s"sqlStream expects a SELECT, got $other")
   }

@@ -1602,25 +1602,13 @@ object VeloSqlParser {
               case _ => throw new ParseException(s"$up expects (ts, duration)")
             }
             val s = dur.getOrElse(throw new ParseException(s"$up needs a duration"))
-            // (floor(CAST(CAST(ts AS TIMESTAMP) AS BIGINT) / S) * S)
-            // [+ S]; group-constant inside a windowed aggregation →
-            // MIN-wrapped there. CAST-to-BIGINT floors the epoch
-            // (floorDiv on micros) where unix_timestamp truncates
-            // toward zero — a pre-1970 fractional-second event would
-            // bucket one window late and disagree with BOTH the DuckDB
-            // oracle and TimeWindows.epochBucket (same rule, one fix).
-            // The inner TIMESTAMP cast keeps string-typed ts columns
-            // working, which unix_timestamp used to parse implicitly.
+            // the bucket itself is the dialectFunctions row
+            // (VeloExprs.epochBucket); group-constant inside a windowed
+            // aggregation → MIN-wrapped there
             if (aggWrap) { out += id("MIN") += sym("(") }
-            out += sym("(") += id("CAST") += sym("(") += id("floor") += sym("(")
-            out += id("CAST") += sym("(") += id("CAST") += sym("(")
+            out += id(VeloExprs.dialectFunction(up).get.veloName) += sym("(")
             out ++= tsArg
-            out += id("AS") += id("TIMESTAMP") += sym(")")
-            out += id("AS") += id("BIGINT") += sym(")")
-            out += Tok(TSymbol, "/") += Tok(TNumber, s.toString) += sym(")")
-            out += sym("*") += Tok(TNumber, s.toString)
-            if (up == "TUMBLE_END") { out += sym("+") += Tok(TNumber, s.toString) }
-            out += id("AS") += id("BIGINT") += sym(")") += sym(")")
+            out += sym(",") += Tok(TNumber, s.toString) += sym(")")
             if (aggWrap) { out += sym(")") }
             i = end
           case "PERCENTILE_CONT" | "PERCENTILE_DISC"

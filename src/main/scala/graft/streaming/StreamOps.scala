@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SessionWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, EventTimeWatermark}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+
+import graft.sql.VeloSqlParser.{EmitChanges, EmitFinal, EmitMode, ParseException}
 
 /** Structured-Streaming realization of the reference's streaming jobs:
   * continuous queries over an unbounded source with watermarks, time
@@ -12,17 +16,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (reference: src/velostream/sql/execution/{engine.rs,watermarks.rs};
   * EMIT CHANGES|FINAL in docs/sql/PARSER_GRAMMAR.md).
   *
-  * Mapping:
-  *  - EMIT CHANGES → `outputMode(Update)` — every trigger emits changed
+  * Mapping (the rule is `emission`, the one sink is `sinkWriter`):
+  *  - Changelog → `outputMode(Update)` — every trigger emits changed
   *    aggregates (the reference's per-record continuous emission,
   *    batched by trigger). Production emission = a changelog sink
-  *    (Kafka/Delta); here `runChangelog` appends each trigger's updates
-  *    to parquet with the batch id — NOTHING is materialized on the
-  *    driver.
-  *  - EMIT FINAL → `outputMode(Append)` + watermark — a window emits
-  *    once, when the watermark passes window end (reference's
-  *    window-close emission with grace period). Production emission =
-  *    the parquet file sink (`runToParquet`).
+  *    (Kafka/Delta); here each trigger's updates land in parquet under
+  *    `_batch_id=N/` — NOTHING is materialized on the driver.
+  *  - Final → `outputMode(Append)` + watermark — a window emits once,
+  *    when the watermark passes window end (reference's window-close
+  *    emission with grace period). Production emission = the parquet
+  *    file sink.
   *  - ROWS WINDOW BUFFER n ROWS … EMIT CHANGES → per-key ring-buffer
   *    state via `flatMapGroupsWithState` (`rowsBufferAgg`).
   *  - Kafka topic → any streaming source; tests drive files/memory.
@@ -337,13 +340,16 @@ object StreamOps {
                              extra: Seq[(String, org.apache.spark.sql.Column)] = Nil,
                              fmt: String = "parquet",
                              opts: Map[String, String] = Map.empty): Unit = {
-    // "data file" = any non-hidden, non-metadata file: the sink format
-    // follows the declared path's extension, so .parquet-only matching
-    // would re-write the fallback part into a json/csv sink that
-    // already holds data
+    // "data" = any non-hidden, non-metadata file, or a changelog's
+    // `_batch_id=N/` partition directory: the sink format follows the
+    // declared path's extension, so .parquet-only matching would
+    // re-write the fallback part into a json/csv sink that already
+    // holds data, and a fallback part beside the partition directories
+    // would conflict with their inferred `_batch_id` column
     val hasData = Option(new java.io.File(out).listFiles())
-      .exists(_.exists(f => f.isFile &&
-        !f.getName.startsWith("_") && !f.getName.startsWith(".")))
+      .exists(_.exists(f =>
+        if (f.isDirectory) f.getName.startsWith("_batch_id=")
+        else !f.getName.startsWith("_") && !f.getName.startsWith(".")))
     if (!hasData) {
       // a zero-BATCH run leaves a _spark_metadata log with no committed
       // files; readers then use MetadataLogFileIndex, which cannot see
@@ -474,123 +480,153 @@ object StreamOps {
     * IS the driver's console — but streamed partition-at-a-time via
     * toLocalIterator, never a full collect: a debug surface pointed at
     * a big result degrades to slow printing, not an OOM. Shared by the
-    * batch INTO-stdout arms (VeloSql) and the streaming foreachBatch
-    * writers below so the sink semantics cannot drift between them. */
+    * batch INTO-stdout arms (VeloSql) and the streaming sinkWriter so
+    * the sink semantics cannot drift between them. */
   def printJsonRows(df: DataFrame, out: java.io.PrintStream): Unit = {
     df.toJSON.toLocalIterator().forEachRemaining(s => out.println(s))
     out.flush()
   }
 
-  /** The ONE persist-for-multiple-actions scope every foreachBatch
-    * writer shares (r17 review: four hand-rolled persist/try/unpersist
-    * copies across StreamOps and Jobs had begun to drift): whenever
-    * more than one action reads a streaming batch (console print +
-    * file write, metric collection), each extra action otherwise
-    * re-reads the batch's source offsets and state per trigger. */
-  def withPersistedBatch(batch: DataFrame)(body: => Unit): Unit = {
-    batch.persist()
-    try body finally { batch.unpersist(); () }
+  /** How a streaming statement's sink emits: a changelog of updated
+    * rows per trigger (update mode, tagged `_batch_id`) or each row once,
+    * final (append mode). */
+  sealed trait Emission
+  case object Changelog extends Emission
+  case object Final extends Emission
+
+  /** The one emission rule of the dialect (EMIT CHANGES | FINAL), read
+    * from the ANALYZED plan the way Spark decides which output modes a
+    * streaming query supports (Structured Streaming, SIGMOD 2018):
+    *  - the plan AGGREGATES when it holds a streaming Aggregate or a
+    *    streaming Distinct (a STATIC-side aggregate of a stream-static
+    *    join does not count: it never updates);
+    *  - it is EVENT-TIME KEYED when every such node groups on an
+    *    attribute carrying the watermark — Spark's own append-mode
+    *    condition, which TUMBLE/HOP/SESSION windows and a Flink-style
+    *    `GROUP BY TUMBLE(...)` meet, and a windowless, global or
+    *    DISTINCT aggregate does not.
+    *
+    * EMIT CHANGES is a changelog, except over a session window (Spark
+    * rejects update-mode session windows outright; each session is
+    * emitted once, final, at close). Without EMIT CHANGES a plan that
+    * does not aggregate, or is event-time keyed, emits final rows; an
+    * aggregate nothing ever closes emits its changelog — unless EMIT
+    * FINAL was asked for explicitly, which is a dialect error rather
+    * than a silently different sink shape. */
+  def emission(df: DataFrame, emit: Option[EmitMode]): Emission = {
+    val groupings: Seq[Seq[Attribute]] = df.queryExecution.analyzed.collect {
+      case a: Aggregate if a.isStreaming => a.groupingExpressions.collect { case r: Attribute => r }
+      case d: Distinct if d.isStreaming => d.output
+    }
+    def carries(key: String)(as: Seq[Attribute]) = as.exists(_.metadata.contains(key))
+    emit match {
+      case Some(EmitChanges) =>
+        if (groupings.exists(carries(SessionWindow.marker))) Final else Changelog
+      case _ if groupings.forall(carries(EventTimeWatermark.delayKey)) => Final
+      case Some(EmitFinal) => throw new ParseException(
+        "EMIT FINAL on a non-windowed streaming aggregate never " +
+          "finalizes (no event-time window closes its groups) — " +
+          "use EMIT CHANGES or add a WINDOW clause")
+      case _ => Changelog
+    }
   }
 
-  /** EMIT FINAL production path: parquet FILE sink (append mode +
-    * watermark). Returns the output directory to read results from.
-    * Scale: executors write shards directly; the driver only tracks
-    * file-sink metadata.
+  /** The one `writeStream` of the engine: the sink of a streaming
+    * statement, from sqlStream's runners and JobManager's jobs alike.
+    * The caller adds the checkpoint, the trigger and the query name.
     *
-    * `stdout=true` declares the reference's stdout debug sink
-    * (MutationChecks.isStdoutSink resolved by the caller): each batch
-    * prints its records as JSON in ADDITION to the file write, which
-    * then runs through foreachBatch (a file sink cannot share its query
-    * with a console writer). The console stream is captured on the
-    * CALLER's thread — foreachBatch runs on the stream-execution thread
-    * where Console.withOut redirection (tests, embedding apps) would
-    * not be visible. Printing is at-least-once by nature: a batch
-    * re-run after a crash re-prints, because console lines cannot be
-    * retracted — the same semantics as the reference's stdout writer
-    * replaying from its input. */
+    * Changelog: each trigger's updated rows are written through
+    * foreachBatch, tagged with the trigger's `_batch_id` (a reserved
+    * column: an input column of that name is rejected, since tagging
+    * would silently overwrite it and every latest-state reader would
+    * dedup on the wrong values). The write is IDEMPOTENT per batch: a
+    * crash between the write and the checkpoint commit makes Spark
+    * re-run the batch on restart, and a dynamic partition overwrite on
+    * `_batch_id` replaces exactly that batch's `_batch_id=N/` directory
+    * where a blind append would duplicate its rows.
+    *
+    * Final: Spark's append-mode file sink (exactly-once through its
+    * `_spark_metadata` log), or foreachBatch appends when a console or
+    * a hook also reads the batch (one query cannot serve both a file
+    * sink and foreachBatch).
+    *
+    * `console` is the stdout debug sink (reference:
+    * datasource/stdout_writer.rs:10): each batch's raw records print as
+    * JSON lines. The stream is captured by the CALLER, on its own
+    * thread — foreachBatch runs on the stream-execution thread, where
+    * Console redirection (tests, embedding apps) is invisible. Printing
+    * is at-least-once: a re-run batch re-prints, as console lines cannot
+    * be retracted. `onBatch` runs after the write (JobManager's labeled
+    * metrics). When more than one action reads a batch, it is persisted
+    * for all of them: each extra action would otherwise re-read the
+    * batch's source offsets and state. */
+  def sinkWriter(df: DataFrame, emission: Emission, loc: String, fmt: String,
+                 opts: Map[String, String], console: Option[java.io.PrintStream],
+                 onBatch: Option[(DataFrame, Long) => Unit]): DataStreamWriter[Row] = {
+    val changelog = emission == Changelog
+    if (changelog) require(!graft.operators.Cols.has(df, "_batch_id"),
+      "input must not carry the reserved _batch_id changelog column")
+    val w = df.writeStream.outputMode(if (changelog) OutputMode.Update() else OutputMode.Append())
+    if (!changelog && console.isEmpty && onBatch.isEmpty)
+      w.format(fmt).options(opts).option("path", loc)
+    else w.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      def write(): Unit =
+        if (changelog) batch.withColumn("_batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("_batch_id")
+          .options(opts).format(fmt).save(loc)
+        else batch.write.mode("append").options(opts).format(fmt).save(loc)
+      val shared = console.isDefined || onBatch.isDefined
+      if (shared) batch.persist()
+      try {
+        console.foreach(printJsonRows(batch, _))
+        write()
+        onBatch.foreach(_(batch, batchId))
+      } finally if (shared) batch.unpersist()
+    }
+  }
+
+  /** Run `df` to completion as final rows (see sinkWriter); returns the
+    * directory to read them from. `stdout=true` declares the stdout
+    * debug sink (MutationChecks.isStdoutSink, resolved by the caller). */
   def runToParquet(df: DataFrame, prefix: String = "graft_stream",
                    sinkPath: Option[String] = None,
-                   stdout: Boolean = false): String = {
+                   stdout: Boolean = false): String =
+    runOnce(df, Final, prefix, sinkPath, stdout)
+
+  /** Run `df` to completion as a changelog (see sinkWriter). */
+  def runChangelog(df: DataFrame, prefix: String = "graft_changelog",
+                   sinkPath: Option[String] = None,
+                   stdout: Boolean = false): String =
+    runOnce(df, Changelog, prefix, sinkPath, stdout)
+
+  /** One run of a streaming statement to completion (AvailableNow), into
+    * a temp dir or a staged declared sink (sinkOr), published on
+    * success. */
+  private def runOnce(df: DataFrame, emission: Emission, prefix: String,
+                      sinkPath: Option[String], stdout: Boolean): String = {
     val (out, fmt, opts, declared) = sinkOr(prefix, sinkPath)
-    val console = if (stdout) Some(Console.out) else None
     val ckpt = tmp(prefix + "_ckpt")
     var ok = false
     try {
-      val base = df.writeStream.outputMode(OutputMode.Append())
-      val sunk = console match {
-        case Some(o) => base.foreachBatch { (batch: DataFrame, _: Long) =>
-          // persist across the two actions (withPersistedBatch; r15):
-          // print + write would otherwise each re-read the batch's
-          // source offsets and state, doubling per-trigger work
-          withPersistedBatch(batch) {
-            printJsonRows(batch, o)
-            batch.write.mode("append").options(opts).format(fmt).save(out)
-          }
-        }
-        case None => base.format(fmt).options(opts).option("path", out)
-      }
-      val q = sunk
+      sinkWriter(df, emission, out, fmt, opts, if (stdout) Some(Console.out) else None, None)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      ensureReadable(df, out, fmt = fmt, opts = opts)
+        .awaitTermination()
+      ensureReadable(df, out,
+        if (emission == Changelog) Seq("_batch_id" -> lit(0)) else Nil, fmt, opts)
       ok = true
       publish(out, declared)
     } finally {
-      // a FAILING query (bad emit-mode routing, source gone) must still
+      // a FAILING query (a rejected emission, source gone) must still
       // clean its checkpoint AND its output dir — staging OR temp, both
       // leak into /tmp per failed run otherwise — and must NOT touch
       // the declared sink, whose previous contents stay exactly as they
       // were (the swap in publish only runs on success; a publish
       // failure sets ok=true first, so the staging dir survives for the
       // error message to point at)
-      deleteRecursively(ckpt)
-      if (!ok) deleteRecursively(out)
-    }
-  }
-
-  /** EMIT CHANGES production path: per-trigger changelog appended to
-    * parquet via foreachBatch (the Kafka/Delta-changelog analog), tagged
-    * with the trigger's batch id. Each batch write is a distributed
-    * executor-side write — the driver never materializes rows. */
-  def runChangelog(df: DataFrame, prefix: String = "graft_changelog",
-                   sinkPath: Option[String] = None,
-                   stdout: Boolean = false): String = {
-    // _batch_id is the changelog's OWN tag column: withColumn would
-    // silently overwrite a same-named input column and every
-    // latest-state reader (row_number over _batch_id) would dedup on
-    // the wrong values
-    require(!graft.operators.Cols.has(df, "_batch_id"),
-      "input must not carry the reserved _batch_id changelog column")
-    val (out, fmt, opts, declared) = sinkOr(prefix, sinkPath)
-    // stdout debug sink: caller-thread capture + at-least-once print
-    // semantics, exactly as documented on runToParquet. The RAW batch
-    // records print (what the query emitted), not the engine's internal
-    // _batch_id tag column.
-    val console = if (stdout) Some(Console.out) else None
-    val ckpt = tmp(prefix + "_ckpt")
-    var ok = false
-    try {
-      val q = df.writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          def write(): Unit = batch.withColumn("_batch_id", lit(batchId))
-            .write.mode("append").options(opts).format(fmt).save(out)
-          console match {
-            // persist only when BOTH actions run (the runToParquet rule)
-            case Some(o) => withPersistedBatch(batch) { printJsonRows(batch, o); write() }
-            case None => write()
-          }
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ensureReadable(df, out, Seq("_batch_id" -> lit(0L)), fmt = fmt, opts = opts)
-      ok = true
-      publish(out, declared)
-    } finally {
       deleteRecursively(ckpt)
       if (!ok) deleteRecursively(out)
     }

@@ -296,13 +296,13 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     assert(java.nio.file.Files.exists(ownerFile), "successful launch must stamp ownership")
     val ownerA = new String(java.nio.file.Files.readAllBytes(ownerFile))
     // manager B recovers the same root and STARTs a DIFFERENT body that
-    // dies at writeStream.start() (append-mode agg, no watermark).
+    // dies at writeStream.start() (a streaming ORDER BY).
     // Pre-fix the owner stamp was written BEFORE start(), and
     // revertEpochBump does not restore it — B's doomed launch
     // permanently fenced the live owner A out of auto-restart.
     val (_, ctx2) = newServer()
     intercept[Exception](ctx2.sql(
-      "START JOB ownfence AS SELECT v, COUNT(*) AS c FROM own_events GROUP BY v"))
+      "START JOB ownfence AS SELECT id, v FROM own_events ORDER BY v"))
     assert(new String(java.nio.file.Files.readAllBytes(ownerFile)) == ownerA,
       "a FAILED launch overwrote the live manager's ownership stamp")
     // and A really does keep supervision rights: kill its query out
@@ -828,13 +828,13 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     assert(spark.read.parquet(s"$dir/out.parquet").count() == 2)
     ctx.sql("STOP JOB stash_job")
     // DEPLOY of a body that analyzes but dies at writeStream.start()
-    // (append-mode streaming aggregation with no watermark) — AFTER the
+    // (a streaming ORDER BY) — AFTER the
     // declared dir was reset for the new epoch: the delete-form reset
     // destroyed the last-good epoch's committed output and the epoch
     // revert could not bring it back; the stash form restores it
     intercept[Exception](ctx.sql(
       "DEPLOY JOB stash_job VERSION '2.0.0' AS " +
-        "SELECT v, COUNT(*) AS c FROM live_events GROUP BY v INTO stash_out"))
+        "SELECT id, v FROM live_events ORDER BY v INTO stash_out"))
     val back = spark.read.parquet(s"$dir/out.parquet")
     assert(back.count() == 2, "failed DEPLOY destroyed the declared sink's output")
     // the revert also cleans its hidden trash dir back out
@@ -859,11 +859,11 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     ctx.sql(s"CREATE SINK first_out WITH (path = 'file://$dir/out.parquet')")
     // brand-new job, first START: no epoch bump happens, yet the launch
     // RESETS the declared dir — the body dies at writeStream.start()
-    // (append-mode agg, no watermark). Pre-fix the failure path only
+    // (a streaming ORDER BY). Pre-fix the failure path only
     // ran revertEpochBump when bumped, so the stash was never restored
     // and the next successful launch's dropSinkTrash deleted it.
     intercept[Exception](ctx.sql(
-      "START JOB firststash AS SELECT v, COUNT(*) AS c FROM live_events GROUP BY v INTO first_out"))
+      "START JOB firststash AS SELECT id, v FROM live_events ORDER BY v INTO first_out"))
     val restored = spark.read.parquet(s"$dir/out.parquet")
     assert(restored.columns.toSeq == Seq("legacy") && restored.count() == 2,
       "failed first START lost the pre-existing sink data")
@@ -955,10 +955,10 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     ctx.jobManager.awaitIdle("limrst")
     val healthy = ctx.jobManager.limitsOf("limrst")
     // doomed DEPLOY carrying a 1-group limit; the body fails AT LAUNCH
-    // (append-mode streaming aggregation with no watermark), past the
-    // stamp machinery like the stash/revert tests
+    // (a streaming ORDER BY), past the stamp machinery like the
+    // stash/revert tests
     intercept[Exception](ctx.sql(
-      "DEPLOY JOB limrst AS SELECT id, COUNT(*) AS n FROM live_events GROUP BY id " +
+      "DEPLOY JOB limrst AS SELECT id, v FROM live_events ORDER BY v " +
         "WITH ('max_aggregation_groups' = '1')"))
     // limits are speculative like the epoch: the doomed statement's
     // 1-group cap must not stay attached to the last-good version
