@@ -8,7 +8,8 @@ package graft
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.api.GraftSession("local[8]", shufflePartitions = 8)
+    val cpus = SparkEntry.cpusFromEnv()
+    val spark = graft.api.GraftSession(s"local[$cpus]", shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // the ONE subset parser (SparkEntry.querySubsetFromEnv, r14): the

@@ -146,8 +146,11 @@ object ScaleProbe {
     // the ONE session builder (Verify.scala's convention): the probe
     // must measure under the SAME config the engine ships — a
     // hand-rolled builder here had already drifted (missing adaptive
-    // coalesce/skew flags and kernel SQL registration; r11 review)
-    val spark = graft.api.GraftSession("local[32]", 32)
+    // coalesce/skew flags and kernel SQL registration; r11 review) — on
+    // the host's core count (SPARK_GRAFT_CPUS, as Verify/Bench/PlanDump),
+    // recorded in the artifact with every scaling number
+    val cpus = SparkEntry.cpusFromEnv()
+    val spark = graft.api.GraftSession(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs1 = graft.api.Tables.load(spark, sfDir, "documents")
@@ -701,7 +704,7 @@ object ScaleProbe {
     // only in SURVEY prose). One tier object per multiplier, each with
     // per-pipeline 1x/Mx walls + row counts, plus the trainer-cap probe.
     val json =
-      s"""{"sf":${jstr(sfDir)},"head":${jstr(JsonOut.gitHead())},"generated_utc":${
+      s"""{"sf":${jstr(sfDir)},"cpus":$cpus,"head":${jstr(JsonOut.gitHead())},"generated_utc":${
         jstr(java.time.Instant.now().toString)},"tiers":[${
         tierJson.mkString(",")}],$streamJson,$trainerJson,$adaptedJson}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALEPROBE_OUT",

@@ -138,12 +138,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // there `current` IS the version that just died, and relaunching
     // it would reverse the rollback's whole purpose.
     var launchFailed: Boolean = false
-    // the epoch whose STREAMING launch already succeeded with NO
-    // declared sink (internal out-dir): a sink declared between pause
-    // and resume must not bind mid-epoch — the r14 recovered-epoch
-    // rule (absent durable stamp = internal), applied to the
-    // in-process twin the stamp cannot express (r17 review)
-    var internalEpoch: Option[Int] = None
     val breaker = new CircuitBreaker(breakerConfig, breakerClock)
     var limits: Resources.Limits = defaultLimits
     val root: String = stateRoot match {
@@ -163,9 +157,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // Spark writes the checkpoint to (see rootFs).
     var epoch: Int = {
       val re = "ckpt-(\\d+)".r
-      val entries: Seq[String] =
-        if (stateRoot.isEmpty) Option(new java.io.File(root).list()).toSeq.flatten.toSeq
-        else try { val (fs, p) = rootFs(root); fs.listStatus(p).toSeq.map(_.getPath.getName) }
+      val entries =
+        try { val (fs, p) = rootFs(root); fs.listStatus(p).toSeq.map(_.getPath.getName) }
         catch { case scala.util.control.NonFatal(_) => Seq.empty }
       entries.collect { case re(n) => n.toInt }.foldLeft(0)(math.max)
     }
@@ -181,21 +174,17 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     }
     def ckptDir: String = s"$root/ckpt-$epoch"
     def sinkDir: String = s"$root/out-$epoch"
-    // declared INTO-sink location (re-resolved at every launch); the
-    // job's output reads route here when set
-    var sinkPath: Option[String] = None
-    // (epoch, path) whose query last wrote the declared location — a
-    // NEW epoch must reset it before launch (see launch), and so must a
-    // RE-DECLARED path within an epoch (a reused dir's stale
-    // _spark_metadata would claim the resumed batch ids committed and
-    // Spark would silently drop them); a resume re-entering the same
-    // (epoch, path) keeps sink + metadata for exactly-once. For a
-    // RECOVERED epoch the pin is reloaded from its durable stamp: an
-    // INTO declaration re-pointed while the process was down must not
-    // split the resumed epoch's output across two directories —
-    // re-declarations take effect at the next epoch, like in-process
-    var sinkStamp: Option[(Int, String)] =
-      if (recovered) readMeta(s"$root/sink-$epoch.path").map(p => (epoch, p)) else None
+    // the per-epoch sink binding: (epoch, Some(declared INTO path)) or
+    // (epoch, None) = the internal sinkDir. An epoch's first streaming
+    // launch binds it (see launch) and every later launch of that epoch
+    // reuses it, so a sink re-declared, dropped or newly declared
+    // between pause and resume cannot split the epoch's output across
+    // two directories, nor have its pre-existing contents stashed and
+    // then dropped (r17 review) — re-declarations take effect at the
+    // next epoch. A RECOVERED epoch is bound from its durable stamp; no
+    // stamp means it ran to the internal dir (r14 review).
+    var sink: Option[(Int, Option[String])] =
+      if (recovered) Some((epoch, readMeta(s"$root/sink-$epoch.path"))) else None
     // highest micro-batch id supervision has credited as a breaker
     // success — liveness alone is NOT success (see superviseOnce)
     var lastSeenBatch: Long = -1L
@@ -753,33 +742,12 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       // INTO-sink contract for STREAMING bodies: the continuous
       // writeStream IS the sink write, so it targets the DECLARED sink
       // location (extension-derived format) when one resolves — batch
-      // bodies write theirs in execStatement. The location is BOUND per
-      // epoch at its first launch: a sink re-declared (or dropped)
-      // between pause and resume must not switch the output mid-epoch —
-      // the resumed query would continue from batch N into a fresh dir,
-      // silently splitting the epoch's output across two locations
-      // (consumers at the new path would see only post-pause batches).
-      // Re-declarations take effect at the next epoch (DEPLOY/ROLLBACK/
-      // fresh START).
-      j.sinkPath = j.sinkStamp match {
-        case Some((ep, p)) if ep == j.epoch => Some(p)
-        // a RECOVERED epoch's location comes ONLY from its durable
-        // stamp: no stamp means the epoch ran to the INTERNAL dir, and
-        // resolving a sink declared while the process was down would
-        // split the epoch's output across two directories mid-epoch —
-        // the exact violation the per-epoch binding rule above forbids
-        // (r14 review). The new declaration takes effect at the next
-        // epoch, like an in-process re-declaration.
-        case _ if j.recovered => None
-        // the IN-PROCESS twin of the recovered rule (r17 review): an
-        // epoch that already launched with no declared sink stays on
-        // the internal dir at resume — without this, a sink declared
-        // between pause and resume bound mid-epoch, stashed (then on
-        // success permanently dropped) the declared dir's pre-existing
-        // contents, and split the epoch's output across two dirs
-        case _ if j.internalEpoch.contains(j.epoch) => None
-        case _ => resolveSinkPath(v.body).map(_.stripPrefix("file://"))
-      }
+      // bodies write theirs in execStatement. The epoch's binding (see
+      // Job.sink) wins over the current declaration: the resumed query
+      // would otherwise continue from batch N into a fresh dir, and
+      // consumers at the new path would see only post-pause batches.
+      val bound = j.sink.filter(_._1 == j.epoch)
+      val declared = bound.fold(resolveSinkPath(v.body).map(_.stripPrefix("file://")))(_._2)
       // A declared location is FIXED across epochs while the checkpoint
       // is not: an epoch bump restarts batchIds at 0, and the declared
       // dir's _spark_metadata (written by the PREVIOUS epoch's
@@ -790,16 +758,16 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       // declared location therefore RESET it on epoch entry — the new
       // version's query rewrites its complete output, exactly like the
       // internal out-$epoch dir starting empty. A resume re-enters the
-      // SAME epoch: sink + metadata are kept and the same checkpoint
-      // continues offset-exact.
-      // a RECOVERED epoch (durable root, checkpoint from a previous
-      // manager) skips the reset like a resume does: its sink already
-      // holds this epoch's committed batches and the checkpoint
-      // continues on top of them
-      j.sinkPath.filter(p => !j.recovered && !j.sinkStamp.contains((j.epoch, p)))
-        .foreach(stashSinkDir(_, j.epoch))
-      j.sinkPath.foreach(p => j.sinkStamp = Some((j.epoch, p)))
-      val (sinkLoc, sinkFmt, sinkOpts) = j.sinkPath match {
+      // SAME epoch — bound, so sink + metadata are kept and the same
+      // checkpoint continues offset-exact; so does a RECOVERED epoch
+      // (its sink already holds the epoch's committed batches). The
+      // declared path binds BEFORE start(); the internal dir binds only
+      // after a successful start, so a retry may still bind a sink.
+      if (bound.isEmpty) declared.foreach { p =>
+        stashSinkDir(p, j.epoch)
+        j.sink = Some((j.epoch, Some(p)))
+      }
+      val (sinkLoc, sinkFmt, sinkOpts) = declared match {
         case Some(p) => val (f, o) = graft.sources.Serde.fileFormat(p); (p, f, o)
         case None => (j.sinkDir, "parquet", Map.empty[String, String])
       }
@@ -819,9 +787,10 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       // routed the resumed query to the internal out-$epoch dir,
       // permanently splitting the epoch's output across two directories
       // (the exact split the stamp exists to prevent). A FAILED start is
-      // safe the other way round: revertEpochBump deletes both
-      // epoch-scoped stamps. The OWNER stamp is NOT part of this
-      // crash-window fix and is written only after start() succeeds (see
+      // safe the other way round: revert deletes the stamps of the fresh
+      // epoch or new binding the attempt opened. The OWNER stamp is NOT
+      // part of this crash-window fix and is written only after start()
+      // succeeds (see
       // the known-good tail below): it has no epoch to scope it, so a
       // revert cannot delete it — a pre-start write by a doomed launch
       // OVERWROTE another manager's ownership and permanently fenced the
@@ -833,8 +802,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
         // recovered-mismatch bump)
         try writeMeta(s"${j.root}/body-${j.epoch}.fp", bodyFingerprint(v.body))
         catch { case scala.util.control.NonFatal(_) => () }
-        // durable twin of sinkStamp (see Job.sinkStamp preload)
-        j.sinkPath.foreach { p =>
+        // durable twin of the sink binding (see the Job.sink preload)
+        declared.foreach { p =>
           try writeMeta(s"${j.root}/sink-${j.epoch}.path", p)
           catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -868,6 +837,13 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
         .queryName(s"graft-job-${j.name}")
         .start()
       j.handle = Some(q)
+      // the launch is known-good: commit the declared-sink reset (the
+      // stash was only insurance against a failed start — see
+      // stashSinkDir), or bind the epoch to the internal dir
+      declared match {
+        case Some(p) => dropSinkTrash(p, j.epoch)
+        case None => j.sink = Some((j.epoch, None))
+      }
       // a PREVIOUS batch launch of this job may have left a cached
       // materialization and a <job>_out view: release the cache (the
       // "at most one cached frame per job" contract) and drop the view
@@ -911,19 +887,10 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     j.current = Some(v)
     j.status = "RUNNING"
     j.lastError = None
-    // record a STREAMING epoch that ran without a declared sink: the
-    // binding arm above pins later resumes of this epoch to the
-    // internal dir (set only on SUCCESS — a failed first launch never
-    // produced output, so a retry may still bind a declared sink)
-    if (j.handle.isDefined && j.sinkPath.isEmpty) j.internalEpoch = Some(j.epoch)
-    // the launch is known-good: commit the declared-sink reset (the
-    // stash was only insurance against a failed start — see
-    // stashSinkDir)
-    j.sinkPath.foreach(dropSinkTrash(_, j.epoch))
     // ownership stamp for restart fencing (see superviseOnce): the last
     // manager to SUCCESSFULLY launch under this root owns the job.
     // Written only now — a failed launch must not take ownership
-    // (revertEpochBump cannot restore the prior owner, so a pre-start
+    // (revert cannot restore the prior owner, so a pre-start
     // write by manager B's doomed DEPLOY permanently fenced the live
     // owner A out of auto-restart; r16 advice). A crash between start()
     // and this write leaves the PREVIOUS owner stamped — harmless: the
@@ -939,8 +906,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     * circuit_breaker.rs — a crash-looping job trips open and fails fast
     * instead of hot-looping restarts). A launch that throws records a
     * failure; health while running is recorded by `halt` (clean drain =
-    * success, died-with-error = failure) and by `superviseOnce`. */
-  /** `newRecord`: v was just appended by record() for this launch (a
+    * success, died-with-error = failure) and by `superviseOnce`.
+    * `newRecord`: v was just appended by record() for this launch (a
     * START/DEPLOY), as opposed to relaunching an entry that already ran
     * (rollback/resume/supervision restart). */
   private def guardedLaunch(j: Job, v: Version, newRecord: Boolean = false): Unit = {
@@ -1008,14 +975,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   private def gateBreaker(j: Job): Unit =
     if (!j.breaker.allowsLaunch) throw breakerRejection(j)
 
-  /** Stop the job's streaming query. Only the EXPECTED termination
-    * exception is caught; whatever error actually killed the query is
-    * surfaced into the job status (`q.exception`) instead of being
-    * silently discarded — a job that died with an error must not be
-    * reported as a clean PAUSED/STOPPED and blindly RESUMEd. */
-  // draining happens OUTSIDE the monitor via preDrain (holding the
-  // lock through processAllAvailable would hang every status scrape) —
-  // halt itself only stops; it has no in-lock drain mode
   /** The error a dead query carried, root cause surfaced — ONE copy,
     * shared by halt() and superviseOnce() (r14 review: the two verbatim
     * copies had to change in lockstep). */
@@ -1024,6 +983,14 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       Option(e.cause).map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}")
         .getOrElse(e.getMessage))
 
+  /** Stop the job's streaming query. Only the EXPECTED termination
+    * exception is caught; whatever error actually killed the query is
+    * surfaced into the job status (`q.exception`) instead of being
+    * silently discarded — a job that died with an error must not be
+    * reported as a clean PAUSED/STOPPED and blindly RESUMEd. */
+  // draining happens OUTSIDE the monitor via preDrain (holding the
+  // lock through processAllAvailable would hang every status scrape) —
+  // halt itself only stops; it has no in-lock drain mode
   private def halt(j: Job): Unit = {
     j.handle.foreach { q =>
       // stop() runs first so whatever error killed the query surfaces
@@ -1123,150 +1090,119 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     stamp.contains(bodyFingerprint(body)) || stamp.contains(legacyFingerprint(body))
   }
 
-  def start(name: String, body: VeloStatement, props: Map[String, String]): DataFrame = synchronized {
-    // every gate runs BEFORE the job registers (deploy's ordering): a
-    // rejected START must not leave a phantom job in the registry —
-    // SHOW JOBS would list it, hasJob would suppress the validator's
-    // unknown-job warnings, and each rejection would leak the Job's
-    // temp directory
-    val existing = jobs.get(name)
-    if (existing.exists(_.status == "RUNNING"))
-      throw new ParseException(s"job $name is already running")
-    gate("START", name, body)
-    existing.foreach(gateBreaker)
-    // limit props parse + admission BEFORE any state change: a malformed
-    // limit or a full cluster rejects the statement, not the job state
+  /** Every gate a START or DEPLOY runs, all BEFORE the job registers:
+    * a rejected statement must not leave a phantom job in the registry
+    * — SHOW JOBS would list it, hasJob would suppress the validator's
+    * unknown-job warnings, and each rejection would leak the Job's temp
+    * directory. The limit props parse and the admission run before any
+    * state change too: a malformed limit or a full cluster rejects the
+    * statement, not the job state (and never stops a running version).
+    * Returns the (possibly new) job and the statement's limits. */
+  private def admit(verb: String, name: String, body: VeloStatement,
+                    props: Map[String, String]): (Job, Resources.Limits) = {
+    gate(verb, name, body)
+    jobs.get(name).foreach(gateBreaker)
     val lims = Resources.Limits.fromProps(props, defaultLimits)
     gateConcurrency(name, lims)
-    val j = jobs.getOrElseUpdate(name, new Job(name))
-    // The epoch bump is SPECULATIVE until the launch succeeds (r14
-    // review): bumping eagerly and then failing the launch abandoned
-    // the old body's INTACT checkpoint — a re-START of the ORIGINAL
-    // body (j.current is unchanged on failure, so no further bump)
-    // would run on the failed epoch's empty/part-written checkpoint and
-    // re-read the source from scratch, real data loss on a source whose
-    // retention expired. On failure the bump reverts and the failed
-    // epoch's part-written dirs/stamps are deleted so the next bump
-    // (same number) starts clean. Metric state is wiped at bump time
-    // and not restorable — epoch-scoped telemetry restarts; offsets
-    // must not.
-    val prior = priorEpochState(j)
-    var bumped = false
-    def bumpEpoch(): Unit = {
-      j.epoch += 1; j.recovered = false; j.lastSeenBatch = -1L
-      resetMetricState(name); bumped = true
-    }
+    (jobs.getOrElseUpdate(name, new Job(name)), lims)
+  }
+
+  def start(name: String, body: VeloStatement, props: Map[String, String]): DataFrame = synchronized {
+    if (jobs.get(name).exists(_.status == "RUNNING"))
+      throw new ParseException(s"job $name is already running")
+    val (j, lims) = admit("START", name, body, props)
     // Restarting a stopped job with a DIFFERENT body must not reuse the
     // old checkpoint (offsets/state belong to the old query — resuming a
-    // new query on them is unsupported) or append into the old sink dir.
-    // A fresh epoch gives it clean checkpoint + sink, like deploy().
-    if (j.current.exists(_.body != body)) bumpEpoch()
-    // same rule across RESTARTS (durable root, no in-process history):
-    // the recovered epoch's fingerprint names the body its checkpoint
-    // belongs to — a different body gets a fresh epoch instead of
-    // resuming foreign offsets/state
-    if (j.current.isEmpty && j.recovered && !recoveredBodyMatches(j, body)) bumpEpoch()
+    // new query on them is unsupported) or append into the old sink dir:
+    // a fresh epoch gives it clean checkpoint + sink, like deploy(). The
+    // same rule holds across RESTARTS (durable root, no in-process
+    // history): the recovered epoch's fingerprint names the body its
+    // checkpoint belongs to — a different body gets a fresh epoch
+    // instead of resuming foreign offsets/state.
+    val fresh = j.current.exists(_.body != body) ||
+      (j.current.isEmpty && j.recovered && !recoveredBodyMatches(j, body))
     val v = record(j, j.current.map(_.version).getOrElse("1.0.0"), body, props,
       j.current.map(_.strategy).getOrElse("NONE"))
-    // limits are speculative like the epoch (r17 review): a failed
-    // launch restores them, or the doomed statement's limits would
-    // stay attached to the last-good version — a 1 MB total_memory on
-    // a failed DEPLOY would kill the subsequent RESUME of the healthy
-    // body via recordResources, and gateConcurrency would admit
-    // against the dead statement's cap
-    val priorLimits = j.limits
-    j.limits = lims
-    try guardedLaunch(j, v, newRecord = true)
-    catch { case e: Throwable =>
-      j.limits = priorLimits
-      if (bumped) revertEpochBump(j, prior)
-      // a brand-new job's FIRST START never bumps, yet it DOES reset a
-      // pre-existing declared sink dir — without this arm the stash was
-      // neither restored nor surfaced, and the next successful launch's
-      // dropSinkTrash silently deleted the user's pre-existing data
-      // (r16 advice)
-      else revertSinkReset(j, prior)
-      throw e
-    }
+    transition(j, v, lims, freshEpoch = fresh, newRecord = true)
     statusDf(Some(name))
   }
 
-  /** The job state a speculative epoch bump must be able to restore. */
-  private def priorEpochState(j: Job)
-      : (Int, Boolean, Long, Option[String], Option[(Int, String)]) =
-    (j.epoch, j.recovered, j.lastSeenBatch, j.sinkPath, j.sinkStamp)
+  /** The one lifecycle transition START, DEPLOY, ROLLBACK and RESUME
+    * launch through: optionally enter a fresh checkpoint/sink epoch,
+    * install the statement's limits, and launch. All of it is
+    * SPECULATIVE until the launch succeeds; a failed launch reverts it
+    * and rethrows, so the job keeps its last-good checkpoint, sink and
+    * limits:
+    *  - the epoch (r14 review): a bump left in place abandoned the old
+    *    body's INTACT checkpoint — a re-START of the original body
+    *    (j.current is unchanged on failure) ran on the failed epoch's
+    *    empty checkpoint and re-read the source from scratch, real data
+    *    loss on a source whose retention expired;
+    *  - the limits (r17 review): the doomed statement's limits stayed
+    *    attached to the last-good version — a 1 MB total_memory on a
+    *    failed DEPLOY killed the subsequent RESUME of the healthy body
+    *    via recordResources, and gateConcurrency admitted against the
+    *    dead statement's cap.
+    * Metric state is wiped on epoch entry and not restorable —
+    * epoch-scoped telemetry restarts; offsets must not. */
+  private def transition(j: Job, v: Version, lims: Resources.Limits,
+                         freshEpoch: Boolean, newRecord: Boolean): Unit = {
+    val prior = JobManager.EpochState(j.epoch, j.recovered, j.lastSeenBatch, j.sink, j.limits)
+    if (freshEpoch) {
+      j.epoch += 1
+      j.recovered = false
+      // the fresh checkpoint restarts batchIds at 0 — a stale high-water
+      // mark would starve breaker successes for the whole new epoch and
+      // let intermittent crashes trip the breaker on a healthy job
+      j.lastSeenBatch = -1L
+      resetMetricState(j.name) // the new epoch re-reads the source — drop old totals
+    }
+    j.limits = lims
+    try guardedLaunch(j, v, newRecord)
+    catch { case e: Throwable => revert(j, prior); throw e }
+  }
 
-  /** Revert a speculative epoch bump after a FAILED launch: delete the
-    * failed epoch's part-written checkpoint/sink dirs and stamps, then
-    * restore the prior epoch state — so restarting the ORIGINAL body
-    * resumes its own intact checkpoint instead of an empty one (source
-    * re-read from scratch, real data loss once retention expired).
-    * Shared by start()/deploy()/rollback(): the r14 review fixed
-    * start() and left the identical eager-bump hazard reachable via a
-    * failed DEPLOY or ROLLBACK. Metric state was wiped at bump time and
-    * is not restorable — epoch-scoped telemetry restarts; offsets must
-    * not. */
-  private def revertEpochBump(j: Job,
-      prior: (Int, Boolean, Long, Option[String], Option[(Int, String)])): Unit = {
-    // restore a stashed declared-sink reset FIRST (j.sinkPath/j.epoch
-    // still carry the failed attempt's values here): the stash holds
-    // the LAST-GOOD epoch's committed output — launch moves it aside
-    // instead of deleting precisely so this revert can bring it back
-    // (r16 review). Guarded on THIS attempt's own stamp, the
-    // revertSinkReset rule (r17 review): launch stamps (epoch, path)
-    // right after a successful stash, so an unstamped failure means
-    // this attempt never moved anything — restoring unconditionally
-    // could move an ORPHANED crash stash (same epoch number, left by
-    // a previous process) over the path's CURRENT committed contents,
-    // destroying data on a failure path that never touched the sink.
-    // Orphans stay in place for manual recovery by design; the one
-    // narrowed case is a mid-stash rename failure (entries moved,
-    // stamp never written), which the stash's own loud IOException
-    // already surfaces with the trash path named.
-    j.sinkPath.filter(p => !j.recovered && j.sinkStamp.contains((j.epoch, p)))
-      .foreach(p => try restoreSinkTrash(p, j.epoch)
-        catch { case scala.util.control.NonFatal(_) => () })
+  /** Undo a failed transition, then restore the `prior` state. */
+  private def revert(j: Job, prior: JobManager.EpochState): Unit = {
     def dropPath(p: String): Unit =
       try { val (fs, hp) = rootFs(p); if (fs.exists(hp)) { fs.delete(hp, true); () } }
       catch { case scala.util.control.NonFatal(_) => () }
-    Seq(j.ckptDir, j.sinkDir,
-      s"${j.root}/body-${j.epoch}.fp", s"${j.root}/sink-${j.epoch}.path")
-      .foreach(dropPath)
-    val (ep, rec, lsb, sp, ss) = prior
-    j.epoch = ep; j.recovered = rec; j.lastSeenBatch = lsb
-    j.sinkPath = sp; j.sinkStamp = ss
-  }
-
-  /** Undo a declared-sink reset after a failed launch that did NOT bump
-    * the epoch (a brand-new job's first START — the only non-bumped
-    * path that can stash: a same-body re-START's sink stamp already
-    * matches and skips the reset). Restores the stashed pre-existing
-    * sink entries and reverts the launch's in-memory + durable sink
-    * binding so a RETRY stashes again instead of starting over
-    * pre-existing files (the sink stamp set by the failed attempt would
-    * have skipped the reset). The durable stamp is dropped only when
-    * the same (epoch, path) binding did not predate this launch — a
-    * failed re-START of a body that already ran this epoch must keep
-    * its real stamp for crash recovery. */
-  private def revertSinkReset(j: Job,
-      prior: (Int, Boolean, Long, Option[String], Option[(Int, String)])): Unit = {
-    val (_, _, _, sp, ss) = prior
-    // restore ONLY when THIS launch could have stashed — the exact
-    // mirror of launch's stash condition against the PRE-launch stamp.
-    // A failure that never reached the reset (breaker rejection) or a
-    // recovered epoch (never stashes) must not move an ORPHANED crash
-    // stash back over the epoch's committed batches; orphans stay in
-    // place for manual recovery by design.
-    val stashed = j.sinkPath.filter(p => !j.recovered && !ss.contains((j.epoch, p)))
-    stashed.foreach(p => try restoreSinkTrash(p, j.epoch)
-      catch { case scala.util.control.NonFatal(_) => () })
-    stashed.foreach { _ =>
-      try {
-        val (fs, hp) = rootFs(s"${j.root}/sink-${j.epoch}.path")
-        if (fs.exists(hp)) { fs.delete(hp, false); () }
-      } catch { case scala.util.control.NonFatal(_) => () }
+    // restore a stashed declared-sink reset FIRST (j.sink/j.epoch still
+    // carry the failed attempt's values here): the stash holds the
+    // LAST-GOOD output — launch moves it aside instead of deleting
+    // precisely so this revert can bring it back (r16 review). Only
+    // when THIS attempt bound the path: launch binds right after a
+    // successful stash, so an unchanged binding means this attempt
+    // never moved anything — restoring anyway could move an ORPHANED
+    // crash stash (same epoch number, left by a previous process) over
+    // the path's CURRENT committed contents, destroying data on a
+    // failure path that never touched the sink (r17 review). Orphans
+    // stay in place for manual recovery by design; the one narrowed case
+    // is a mid-stash rename failure (entries moved, never bound), which
+    // the stash's own loud IOException surfaces with the trash path
+    // named. This holds without an epoch bump too: a brand-new job's
+    // first START stashes a pre-existing declared dir, and an
+    // unrestored stash was deleted by the next successful launch's
+    // dropSinkTrash (r16 advice). The attempt's durable sink stamp goes
+    // with it, so a RETRY stashes again instead of starting over
+    // pre-existing files; a binding that predates the attempt keeps its
+    // real stamp for crash recovery.
+    if (j.sink != prior.sink) j.sink.foreach {
+      case (ep, Some(p)) =>
+        try restoreSinkTrash(p, ep) catch { case scala.util.control.NonFatal(_) => () }
+        dropPath(s"${j.root}/sink-$ep.path")
+      case _ => ()
     }
-    j.sinkPath = sp; j.sinkStamp = ss
+    // a fresh epoch's part-written checkpoint/sink dirs and stamps go,
+    // so the next bump (same number) starts clean
+    if (j.epoch != prior.epoch)
+      Seq(j.ckptDir, j.sinkDir, s"${j.root}/body-${j.epoch}.fp", s"${j.root}/sink-${j.epoch}.path")
+        .foreach(dropPath)
+    j.epoch = prior.epoch
+    j.recovered = prior.recovered
+    j.lastSeenBatch = prior.lastSeenBatch
+    j.sink = prior.sink
+    j.limits = prior.limits
   }
 
   /** Best-effort drain OUTSIDE the JobManager monitor:
@@ -1327,7 +1263,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     val v = j.current.getOrElse(throw new ParseException(s"job $name has no version to resume"))
     gateBreaker(j)
     gateConcurrency(name, j.limits) // re-admission counts against the limit too
-    guardedLaunch(j, v) // same epoch → same checkpoint + sink → offset-exact resume
+    // same epoch → same checkpoint + sink → offset-exact resume
+    transition(j, v, j.limits, freshEpoch = false, newRecord = false)
     statusDf(Some(name))
   }
 
@@ -1344,11 +1281,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // never touches job state.
     if (strategy != Replace) preDrain(name)
     synchronized {
-    gate("DEPLOY", name, body) // reject BEFORE stopping the running version
-    val j = jobs.getOrElseUpdate(name, new Job(name))
-    gateBreaker(j) // likewise: an OPEN breaker rejects before any stop
-    val lims = Resources.Limits.fromProps(props, defaultLimits)
-    gateConcurrency(name, lims) // a full cluster rejects before any stop too
+    val (j, lims) = admit("DEPLOY", name, body, props)
     val stratStr = strategy match {
       case BlueGreen => "BLUE_GREEN"
       case Canary(p) => s"CANARY($p)"
@@ -1378,28 +1311,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       j.versions = j.versions.filterNot(_.seq == v.seq)
       throw e
     }
-    // the bump is SPECULATIVE like start()'s (r14 review follow-up): a
-    // failed launch of the new body reverts it, so the job's last-good
-    // body can re-START/RESUME on its own intact checkpoint instead of
-    // the failed epoch's empty one
-    val prior = priorEpochState(j)
-    if (!resumesRecovered) {
-      j.epoch += 1 // fresh sink+checkpoint epoch; old sink survives for rollback
-      j.recovered = false
-      // the fresh checkpoint restarts batchIds at 0 — a stale high-water
-      // mark would starve breaker successes for the whole new epoch and
-      // let intermittent crashes trip the breaker on a healthy job
-      j.lastSeenBatch = -1L
-      resetMetricState(name) // new epoch re-reads the source — drop old totals
-    }
-    val priorLimits = j.limits // speculative like the epoch (r17 review)
-    j.limits = lims
-    try guardedLaunch(j, v, newRecord = true)
-    catch { case e: Throwable =>
-      j.limits = priorLimits
-      if (!resumesRecovered) revertEpochBump(j, prior)
-      throw e
-    }
+    // fresh sink+checkpoint epoch; the old sink survives for rollback
+    transition(j, v, lims, freshEpoch = !resumesRecovered, newRecord = true)
     statusDf(Some(name))
     }
   }
@@ -1431,21 +1344,8 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     val lims = Resources.Limits.fromProps(v.props, defaultLimits)
     gateConcurrency(name, lims)
     halt(j)
-    // speculative bump, like start()/deploy(): a failed relaunch of the
-    // rollback target must not strand the job on an empty epoch
-    val prior = priorEpochState(j)
-    j.epoch += 1
-    j.recovered = false
-    j.lastSeenBatch = -1L // fresh epoch, fresh batchId namespace
-    resetMetricState(name) // rollback epoch re-reads the source from scratch
-    val priorLimits = j.limits // speculative like the epoch (r17 review)
-    j.limits = lims
-    try guardedLaunch(j, v)
-    catch { case e: Throwable =>
-      j.limits = priorLimits
-      revertEpochBump(j, prior)
-      throw e
-    }
+    // the rollback epoch re-reads the source from scratch
+    transition(j, v, lims, freshEpoch = true, newRecord = false)
     statusDf(Some(name))
     }
   }
@@ -1589,22 +1489,14 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
             case Some(p) => (p.batchId, p.numInputRows)
             case None => (-1L, 0L)
           }
-          (j.name, j.status, batches, inRows, j.batchView, j.sinkPath, j.sinkDir)
+          (j.name, j.status, batches, inRows, output(j))
         }
     }
-    snaps.map { case (n, st, batches, inRows, view, sinkPath, sinkDir) =>
-        // the batch-view count runs OUTSIDE the lock like the sink read
-        // below it, and needs the same degradation: a concurrent deploy
-        // that swaps the job to a streaming body drops the view, and an
-        // unguarded count would crash the whole metrics scrape
-        val outRows = view.map(v => try spark.table(v).count()
-            catch { case _: Throwable => 0L })
-          .getOrElse(
-          try {
-            sinkPath.map(p => graft.sources.Serde.readFileUri(spark, p))
-              .getOrElse(spark.read.parquet(sinkDir)).count()
-          } catch { case _: Throwable => 0L })
-        (n, st, batches, inRows, outRows)
+    snaps.map { case (n, st, batches, inRows, out) =>
+        // the count runs OUTSIDE the lock and degrades to 0: a concurrent
+        // deploy that swaps the job to a streaming body drops the view,
+        // and an unguarded count would crash the whole metrics scrape
+        (n, st, batches, inRows, try out().count() catch { case _: Throwable => 0L })
       }
       .toDF("job_name", "status", "last_batch_id", "last_batch_input_rows", "sink_rows")
   }
@@ -1664,20 +1556,22 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   }
 
   /** The job's current output: batch view or executor-written sink
-    * (the declared INTO location when one resolved, else the epoch dir). */
-  def sinkDf(name: String): DataFrame = {
-    // snapshot under the lock, ANALYZE outside it (the metricsDf/
-    // statusRows rule): spark.read schema inference lists files and
-    // reads footers — seconds on object stores — and holding the
-    // monitor through it stalled the listener-bus callbacks and every
-    // START/STOP/status call for the duration (r16 review)
-    val (view, sinkPath, sinkDir) = synchronized {
-      val j = job(name)
-      (j.batchView, j.sinkPath, j.sinkDir)
-    }
-    view.map(spark.table).getOrElse(sinkPath match {
+    * (the epoch's declared INTO location when one is bound, else the
+    * epoch dir). */
+  def sinkDf(name: String): DataFrame = synchronized(output(job(name)))()
+
+  /** The job's output reader, resolved from a snapshot taken under the
+    * lock (call this inside it) and run OUTSIDE it (the statusRows
+    * rule): spark.read schema inference lists files and reads footers
+    * — seconds on object stores — and holding the monitor through it
+    * stalled the listener-bus callbacks and every START/STOP/status call
+    * for the duration (r16 review). */
+  private def output(j: Job): () => DataFrame = {
+    val (view, dir) = (j.batchView, j.sinkDir)
+    val declared = j.sink.collect { case (e, Some(p)) if e == j.epoch => p }
+    () => view.map(spark.table).getOrElse(declared match {
       case Some(p) => graft.sources.Serde.readFileUri(spark, p)
-      case None => spark.read.parquet(sinkDir)
+      case None => spark.read.parquet(dir)
     })
   }
 
@@ -1693,11 +1587,11 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     * The reset MOVES entries
     * aside into a dot-prefixed trash child (hidden from Spark/Hadoop
     * readers) rather than deleting them: launch can still fail AFTER
-    * the reset (start() analysis errors), and revertEpochBump cannot
+    * the reset (start() analysis errors), and revert cannot
     * restore deleted data — the delete form meant a failed DEPLOY
     * permanently destroyed the last-good epoch's committed output at
     * the declared location (r16 review). The stash is dropped once the
-    * launch succeeds and restored by revertEpochBump on failure. A
+    * launch succeeds and restored by revert on failure. A
     * stash orphaned by a crash between reset and stamp is left in
     * place (hidden, manual recovery) — deleting it on the next launch
     * would re-create the unrecoverable-loss window. */
@@ -1787,6 +1681,12 @@ object JobManager {
       p.productPrefix + p.productIterator.map(canonical).mkString("(", ";", ")")
     case other => String.valueOf(other)
   }
+
+  /** The epoch-scoped job state a failed transition restores (see
+    * JobManager.transition). */
+  private final case class EpochState(epoch: Int, recovered: Boolean, lastSeenBatch: Long,
+                                      sink: Option[(Int, Option[String])],
+                                      limits: Resources.Limits)
 
   /** Driver-side status snapshot row (see JobManager.statusRows). */
   final case class JobStatusRow(name: String, status: String, version: String,

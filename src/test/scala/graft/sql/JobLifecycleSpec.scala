@@ -400,6 +400,16 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     assert(!ctx.sql("SHOW JOBS").collect().exists(_.getAs[String]("job_name") == "ghost"))
   }
 
+  test("a rejected DEPLOY of a new job name leaves no phantom job in the registry") {
+    val (_, ctx) = memInput()
+    // the malformed limit rejects the statement; DEPLOY used to register
+    // the Job before its limit parse and admission gate ran
+    intercept[Exception](ctx.sql("DEPLOY JOB ghost2 VERSION '1' AS SELECT id, v FROM live_events " +
+      "WITH ('max_total_memory' = 'lots')"))
+    assert(!ctx.jobManager.hasJob("ghost2"))
+    assert(!ctx.sql("SHOW JOBS").collect().exists(_.getAs[String]("job_name") == "ghost2"))
+  }
+
   test("DEPLOY new version switches the pipeline; ROLLBACK returns to the previous one") {
     val (in, ctx) = memInput()
     in.addData(Seq((1L, 1.0), (2L, 2.0)))
@@ -1029,5 +1039,62 @@ class JobLifecycleSpec extends AnyFunSuite with SparkTestSession {
     for (ep <- 0 to 6)
       assert(java.nio.file.Files.exists(declared.resolve(s".graft-trash-$ep").resolve("stale.txt")),
         s"orphan $ep must stay in place for manual recovery")
+  }
+
+  test("failed-transition table: a failed START, DEPLOY or ROLLBACK leaves checkpoint, sink, limits and versions") {
+    import spark.implicits._
+    val good = "WITH ('max_aggregation_groups' = '1000')"
+    val doomedLimits = "WITH ('max_aggregation_groups' = '1')"
+    // per verb: the last-good statements, then one that dies inside
+    // writeStream.start() — after its fresh epoch stashed the declared
+    // sink — carrying other limits. START and DEPLOY die on a streaming
+    // ORDER BY; the ROLLBACK target reads ft_src, which is re-registered
+    // sorted just before the rollback.
+    val table = Seq(
+      ("START", Seq(s"START JOB ft_start AS SELECT id, v FROM live_events INTO ft_start_out $good",
+          "STOP JOB ft_start"),
+        s"START JOB ft_start AS SELECT id, v FROM live_events ORDER BY v INTO ft_start_out $doomedLimits"),
+      ("DEPLOY", Seq(
+          s"DEPLOY JOB ft_deploy VERSION '1' AS SELECT id, v FROM live_events INTO ft_deploy_out $good"),
+        s"DEPLOY JOB ft_deploy VERSION '2' AS SELECT id, v FROM live_events ORDER BY v " +
+          s"INTO ft_deploy_out $doomedLimits"),
+      ("ROLLBACK", Seq(
+          s"DEPLOY JOB ft_rollback VERSION '1' AS SELECT id, v FROM ft_src INTO ft_rollback_out $doomedLimits",
+          s"DEPLOY JOB ft_rollback VERSION '2' AS SELECT id, v * 2 AS v FROM live_events " +
+            s"INTO ft_rollback_out $good"),
+        "ROLLBACK JOB ft_rollback"))
+    table.foreach { case (verb, lastGood, doomed) =>
+      val job = s"ft_${verb.toLowerCase}"
+      val s = spark.newSession()
+      val stateRoot = java.nio.file.Files.createTempDirectory(s"graft_${job}_root").toString
+      s.conf.set("graft.jobs.stateRoot", stateRoot)
+      implicit val sq: org.apache.spark.sql.classic.SQLContext =
+        s.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+      val in = MemoryStream[(Long, Double)]
+      val events = in.toDF().toDF("id", "v")
+      val ctx = new VeloContext(s)
+      ctx.register("live_events", events)
+      ctx.register("ft_src", events)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_${job}_sink").toString
+      ctx.sql(s"CREATE SINK ${job}_out WITH (path = 'file://$dir/out.parquet')")
+      in.addData(Seq((1L, 1.0), (2L, 2.0)))
+      lastGood.foreach { st => ctx.sql(st); ctx.jobManager.awaitIdle(job) }
+      def sinkRows = s.read.parquet(s"$dir/out.parquet").collect().map(_.toString).sorted.toSeq
+      def versions = ctx.jobManager.versionsDf(job).collect().toSeq
+      val (rows, ckpts, vers, lims) =
+        (sinkRows, ckptEpochs(stateRoot, job), versions, ctx.jobManager.limitsOf(job))
+      assert(rows.length == 2 && lims.maxAggregationGroups.contains(1000L), s"$verb: $rows $lims")
+
+      if (verb == "ROLLBACK") ctx.register("ft_src", events.orderBy("v"))
+      intercept[Exception](ctx.sql(doomed))
+      assert(sinkRows == rows, s"$verb: the declared sink's last-good rows are not back")
+      val trash = new java.io.File(s"$dir/out.parquet").listFiles()
+        .map(_.getName).filter(_.startsWith(".graft-trash"))
+      assert(trash.isEmpty, s"$verb: ${trash.mkString(",")}")
+      assert(ckptEpochs(stateRoot, job) == ckpts, s"$verb: the failed epoch's checkpoint stayed")
+      assert(versions == vers, s"$verb: version history changed")
+      assert(ctx.jobManager.limitsOf(job) == lims, s"$verb: limits ${ctx.jobManager.limitsOf(job)}")
+      ctx.sql(s"STOP JOB $job")
+    }
   }
 }
