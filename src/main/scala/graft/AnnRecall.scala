@@ -59,9 +59,8 @@ object AnnRecall {
     * the hard end is what makes the recall floor sensitive to banding
     * regressions. Deterministic (xxhash64 of (id, dim index)): the same
     * twins every round, so the measurement is comparable across rounds.
-    * `idOffset` must clear every id in the target corpus — ScaleProbe's
-    * adapted-plan tier plants into a MULTIPLIED corpus whose replica
-    * offsets already occupy the default TwinOffset range (r14).
+    * `idOffset` must clear every id in the target corpus: a corpus
+    * whose ids reach the default TwinOffset needs a higher offset.
     */
   private[graft] def withTwinVec(bases: DataFrame, dim: Int,
                                  idOffset: Long = TwinOffset,

@@ -132,7 +132,7 @@ object Bench {
     }
     val nRunsKnob = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_ =>
       intKnob("SPARK_GRAFT_BENCH_RUNS", 2))
-    // the ONE session factory (ScaleProbe/Verify convention since r11):
+    // the ONE session factory (Verify uses it too):
     // the bench must measure under the SAME config the engine ships — a
     // hand-rolled builder here had already drifted once and would again
     // the next time GraftSession grows a conf (r14 review)

@@ -1,9 +1,9 @@
 package graft
 
 /** JSON emission helpers shared by the artifact-writing mains (Bench,
-  * Verify, ScaleProbe): one string escaper and one decimal formatter,
-  * so the hand-rolled copies cannot drift — ScaleProbe's copy had
-  * already drifted by skipping escaping entirely for its sf field. */
+  * Verify): one string escaper and one decimal formatter, so
+  * hand-rolled copies cannot drift (an unescaped path field is one
+  * stray quote away from an unparseable artifact). */
 object JsonOut {
 
   /** Escape backslash, quote, ALL control chars (<0x20), and every

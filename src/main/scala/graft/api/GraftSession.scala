@@ -209,7 +209,7 @@ object Tables {
     * pyarrow writer emits them as of r7) surface as TIMESTAMP_NTZ, which
     * Structured Streaming rejects as an event-time column and
     * `unix_millis` rejects outright. Cast every NTZ column to TIMESTAMP:
-    * the session zone is pinned to UTC (GraftSession/Bench/ScaleProbe),
+    * the session zone is pinned to UTC (GraftSession),
     * so the cast reinterprets the same wall-clock as the same instant —
     * bit-identical values to the tz-aware files earlier rounds read.
     */

@@ -25,9 +25,9 @@ import org.apache.spark.storage.StorageLevel
 private[graft] final class LastCallCache {
   private val ref = new AtomicReference[DataFrame](null)
   // register AFTER `ref` is initialized: the registry is global, and a
-  // concurrent releaseAll() (a probe pass racing another thread's
-  // operator construction) must never observe a half-built slot and NPE
-  // on ref.getAndSet (r11 advisor)
+  // concurrent releaseAll() (racing another thread's operator
+  // construction) must never observe a half-built slot and NPE on
+  // ref.getAndSet (r11 advisor)
   LastCallCache.register(this)
 
   /** Drop this slot's pinned frame (see LastCallCache.releaseAll). */
@@ -62,12 +62,10 @@ private[graft] object LastCallCache {
   private val all = new java.util.concurrent.CopyOnWriteArrayList[LastCallCache]()
   private def register(c: LastCallCache): Unit = { all.add(c); () }
 
-  /** Release EVERY slot's pinned frame. Measurement hygiene for timing
-    * harnesses (ScaleProbe): a retime pass whose plan equals the
-    * previous pass's would otherwise be served the previous pass's
-    * persisted kernel frames and time only the tail of the pipeline —
-    * a min-of-2 built on such a pass can erase exactly the super-linear
-    * stage regression the probe exists to catch (r11 review). Normal
+  /** Release EVERY slot's pinned frame. One caller: Verify, after each
+    * query — a slot releases its frame only on the operator's NEXT
+    * call, which never comes in a one-pass run, so the pinned frame
+    * would hold executor memory through every later query. Normal
     * sessions never need this; evicted frames recompute on next use. */
   def releaseAll(): Unit = all.forEach(_.release())
 }

@@ -437,6 +437,11 @@ object Similarity {
     } finally feat0.unpersist(false)
   }
 
+  /** Default trainer-sample cap — named so the IVF-PQ path and its
+    * specs refer to the SAME boundary the trainer enforces; retuning it
+    * retunes every use. */
+  val DefaultMaxTrainRows: Int = 65536
+
   /** Train an IVF coarse quantizer on a BOUNDED deterministic sample
     * with in-memory Lloyd iterations — the standard web-scale shape
     * (quantizers are trained on ~256·k sampled vectors, not the corpus):
@@ -448,11 +453,6 @@ object Similarity {
     * it is deterministic and unbiased w.r.t. insertion order. Use
     * `trainCentroidsKMeans` when the training set itself must stay
     * distributed. */
-  /** Default trainer-sample cap — named so the trainer-cap scale probe
-    * (ScaleProbe) provably probes the SAME boundary the trainer
-    * enforces; retuning it retunes both. */
-  val DefaultMaxTrainRows: Int = 65536
-
   def trainCentroidsSampled(corpus: DataFrame, idCol: String, vecCol: String,
                             k: Int, dim: Int, maxIter: Int = 10,
                             maxTrainRows: Int = DefaultMaxTrainRows): Array[Double] = {

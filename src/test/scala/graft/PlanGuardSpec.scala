@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partial aggregation) asserted as tests, so a refactor that silently
   * degrades a plan — a lost filter pushdown, a broadcast that became a
   * shuffle join — fails the suite instead of only showing up in bench
-  * numbers. Complements the human-readable `graft.PlanAudit` dump.
+  * numbers. `graft.PlanDump` writes the full plans for diffing.
   */
 class PlanGuardSpec extends AnyFunSuite with SparkTestSession {
 

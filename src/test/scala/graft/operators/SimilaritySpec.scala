@@ -300,6 +300,23 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     // deterministic: same corpus → bit-identical centroids
     assert(Similarity.trainCentroidsSampled(corpus, "vec_id", "embedding", k = 12, dim = dim)
       .sameElements(cents))
+    // the sample cap: with maxTrainRows = n below the corpus size, rows
+    // whose xxhash64(id) sorts after the n-th sampled row never reach
+    // the sample, so adding them leaves the centroids bit-identical
+    val n = 40
+    val nth = corpus.select(xxhash64(col("vec_id")).as("h")).orderBy("h").limit(n)
+      .agg(max("h")).head.getLong(0)
+    val late = {
+      import spark.implicits._
+      val r = new scala.util.Random(5) // own stream: the shared rnd feeds later tests
+      Seq.tabulate(200)(i => (5000L + i, Seq.fill(dim)(r.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding").where(xxhash64(col("vec_id")) > nth)
+    }
+    assert(late.count() > 0)
+    val capped = Similarity.trainCentroidsSampled(corpus, "vec_id", "embedding", k = 12, dim = dim,
+      maxTrainRows = n)
+    assert(Similarity.trainCentroidsSampled(corpus.unionByName(late), "vec_id", "embedding",
+      k = 12, dim = dim, maxTrainRows = n).sameElements(capped))
   }
 
   test("IVF soft assignment: no duplicate pairs, recall >= hard assignment, scores exact") {
