@@ -146,11 +146,6 @@ object AnnRecall {
       // — Bench catches NonFatal and keeps the session alive for the
       // artifact (r16 review)
       exact.cache(); twinned.cache(); plantedTier.cache()
-      // materialize the q58-all measurement BEFORE constructing the
-      // planted probe: embeddingNearDupPairsLsh rotates the shared
-      // sign-sketch persist slot (LastCallCache), so building the
-      // augmented-corpus query first would strip approx58's sketch cache
-      // and its count would re-run the kernel pass once per consumer
       val nAll = exact.count()
       val hitAll = approx58.join(exact, Seq("pa", "pb")).count()
       val augmented = emb.unionByName(

@@ -954,12 +954,11 @@ object SparkEntry {
         .select(col("keep_id").as("doc_id"))
       // the curated intermediate feeds FOUR consumers (LSH signatures,
       // both sides of the verify join, and the final anti-join) —
-      // persist it once, as a production pipeline would checkpoint its
-      // post-gate corpus. Last-call slot, not a bare cache(): the query
-      // is lazy so there is no in-function unpersist point, and a bare
-      // cache would pin the curated corpus in executor storage for the
-      // whole session (Verify runs ~70 more queries after this one)
-      val uniq = q60UniqCache(gated.join(keep, Seq("doc_id"), "left_semi"))
+      // materialized once, as a production pipeline would checkpoint
+      // its post-gate corpus, and freed with the query (the read-shared
+      // contract on Dedup.minhashLsh), not pinned in executor storage
+      // for the rest of the session as a bare cache() would be
+      val uniq = gated.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(eager = false)
       val dropped = Dedup.clusterPairs(verifiedPairs(uniq))
         .where(col("id") =!= col("cluster_id")).select(col("id").as("doc_id"))
       uniq.join(dropped, Seq("doc_id"), "left_anti")
@@ -1007,10 +1006,6 @@ object SparkEntry {
       } finally ctx.close() // throwaway context: detach its listeners from the shared session
     })
   )
-
-  // q60's curated-corpus persist slot (see LastCallCache: each call
-  // releases the previous call's cache)
-  private val q60UniqCache = new graft.operators.LastCallCache
 
   /** ONE dialect context per session — not per (session, dir):
     * `forDir` registers SESSION-GLOBAL temp views, so a second dir in

@@ -103,15 +103,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: " +
           Option(e.getMessage).getOrElse(e.getClass.getName))
       }
-      finally {
-        // per-query hygiene, Bench's clearCache rule: operators that
-        // pin a LastCallCache slot (q60's curated corpus, q56's
-        // keep-best scan) release it on their NEXT call — which never
-        // comes in a one-pass gate run, so the pinned frame stole
-        // executor memory from every later query (r16 review)
-        try graft.operators.LastCallCache.releaseAll()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
     }
     spark.stop()
     // the exit code now REFLECTS query failures (r17 review: every

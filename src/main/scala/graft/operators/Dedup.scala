@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftKernels
@@ -17,20 +17,6 @@ import graft.functions.GraftKernels
   * the dominant cost of the whole dedup pass.
   */
 object Dedup {
-
-  /** Exact dedup: keep the first (lowest id) document per normalized-text
-    * hash. Hash-groupBy — one shuffle on the 128-bit content hash
-    * (md5 as 16-byte binary: at 10^10 docs a 64-bit hash expects ~2-3
-    * colliding pairs, each silently merging two DISTINCT documents; at
-    * 128 bits the expectation is ~10^-19 — "exact" stays exact at the
-    * 100 TB scale this file targets).
-    */
-  // one last-call persist slot per LSH-family operator (see LastCallCache)
-  private val minhashSigCache = new LastCallCache
-  private val keepBestHashCache = new LastCallCache
-  private val simhashSigCache = new LastCallCache
-  private val jaccardPairsCache = new LastCallCache
-  private val jaccardShCache = new LastCallCache
 
   /** 128-bit content hash for the exact-dedup family. A NULL text is
     * the ABSENCE of content, not content: md5(NULL)=NULL would collapse
@@ -52,6 +38,13 @@ object Dedup {
       .otherwise(unhex(md5(concat(lit("graft\u0000text\u0000"), norm))))
   }
 
+  /** Exact dedup: keep the first (lowest id) document per normalized-text
+    * hash. Hash-groupBy — one shuffle on the 128-bit content hash
+    * (md5 as 16-byte binary: at 10^10 docs a 64-bit hash expects ~2-3
+    * colliding pairs, each silently merging two DISTINCT documents; at
+    * 128 bits the expectation is ~10^-19 — "exact" stays exact at the
+    * 100 TB scale this file targets).
+    */
   def exact(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs
       .withColumn("content_hash", contentHash(textCol, idCol))
@@ -103,15 +96,16 @@ object Dedup {
       // columns through the join made a pre-existing dup_count (e.g. a
       // frame re-deduped after exact()) an ambiguous reference (r13
       // review). score is evaluated against docs BEFORE the projection.
-      // LastCallCache slot (the minhashSigCache pattern): `hashed` —
+      // read-shared frame (the contract is on minhashLsh): `hashed` —
       // a full-corpus scan + normText + md5 per row, the operator's
       // dominant cost — feeds BOTH the best-score aggregate and the
       // verify join, and the two exchanges differ so ReuseExchange
-      // cannot dedupe them; uncached, the corpus was scanned and
+      // cannot dedupe them; unmaterialized, the corpus was scanned and
       // hashed twice (r15 review)
-      val hashed = keepBestHashCache(docs
+      val hashed = docs
         .select(contentHash(textCol, idCol).as("content_hash"),
-          col(idCol).as("__graft_id"), score.as("__graft_keep_score")))
+          col(idCol).as("__graft_id"), score.as("__graft_keep_score"))
+        .localCheckpoint(eager = false)
       val best = hashed.groupBy(col("content_hash"))
         .agg(max(col("__graft_keep_score")).as("__graft_best"),
           count(lit(1)).as("dup_count"))
@@ -152,17 +146,6 @@ object Dedup {
     array(hs: _*)
   }
 
-  /** MinHash + LSH banding: signature of numBands*rowsPerBand hashes;
-    * band → bucket; docs sharing any band-bucket are candidate pairs.
-    *
-    * Output: candidate pairs (id_a < id_b) with estimated Jaccard
-    * (fraction of matching signature positions).
-    *
-    * Scale: explode-by-band (numBands rows/doc) → shuffle on
-    * (band, bucket-hash) → pairs within buckets only. Skew guard: huge
-    * buckets (> maxBucket) are dropped — they are boilerplate-cluster
-    * noise, the standard practice for web-scale dedup.
-    */
   /** Capped band-bucket SELF-JOIN pair generation shared by the LSH
     * family (codegen'd joins; no interpreted per-bucket expansion):
     * banded rows (id, sig, band, bucket) → candidate (id_a, id_b,
@@ -178,6 +161,32 @@ object Dedup {
     a.join(b, Seq("band", bucketCol)).where(col("id_a") < col("id_b"))
   }
 
+  /** MinHash + LSH banding: signature of numBands*rowsPerBand hashes;
+    * band → bucket; docs sharing any band-bucket are candidate pairs.
+    *
+    * Output: candidate pairs (id_a < id_b) with estimated Jaccard
+    * (fraction of matching signature positions).
+    *
+    * Scale: explode-by-band (numBands rows/doc) → shuffle on
+    * (band, bucket-hash) → pairs within buckets only. Skew guard: huge
+    * buckets (> maxBucket) are dropped — they are boilerplate-cluster
+    * noise, the standard practice for web-scale dedup.
+    *
+    * READ-SHARED FRAMES (the one contract; every operator whose plan
+    * fans one expensive subtree out to several consumers points here):
+    * the signature frame feeds the bucket counts AND both self-join
+    * sides, so it is `localCheckpoint(eager = false)`: computed once,
+    * inside the first job that reads it, shared by every consumer of
+    * the returned plan, and reused if the caller executes the result
+    * again (MEMORY_AND_DISK, the RDD local-checkpoint default). It
+    * enters no CacheManager, so no other call, session or clearCache
+    * can evict it, and nothing outlives the query: the ContextCleaner
+    * frees the blocks once the caller drops the result. The trade, as
+    * in `clusterPairs`: lineage is cut, so a lost block fails the job
+    * instead of recomputing (on a local master losing an executor is
+    * losing the driver, so nothing changes there), and a dropped
+    * frame's blocks wait for a driver GC rather than a fixed point.
+    */
   def minhashLsh(docs: DataFrame, textCol: String, idCol: String,
                  shingleK: Int = 3, numBands: Int = 8, rowsPerBand: Int = 2,
                  maxBucket: Int = 64): DataFrame = {
@@ -214,12 +223,13 @@ object Dedup {
     // null-text docs carry no content to near-dup: left in, they all
     // hash to ONE shared per-band bucket (xxhash64 skips a null slice)
     // and pair up with null est_jaccard — drop them up front.
-    // Persisted: the banded frame feeds bucket counts AND both self-join
-    // sides — uncached, the signature kernel (the dominant dedup cost at
-    // scale) would run once per consumer over the full corpus.
-    val sigd = minhashSigCache(docs.where(col(textCol).isNotNull)
+    // Read-shared (see scaladoc): unmaterialized, the signature kernel
+    // (the dominant dedup cost at scale) would run once per consumer
+    // over the full corpus.
+    val sigd = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        GraftKernels.minhashSigCol(col(textCol), shingleK, numHashes).as("sig")))
+        GraftKernels.minhashSigCol(col(textCol), shingleK, numHashes).as("sig"))
+      .localCheckpoint(eager = false)
 
     val banded = sigd.select(
       col("id"), col("sig"),
@@ -296,9 +306,10 @@ object Dedup {
     val sigOf: Column => Column =
       if (replayableHash) GraftKernels.simhashMd5Col else simhash
     // null-text docs excluded for the same reason as minhashLsh;
-    // persisted for the same multi-consumer reason
-    val withSig = simhashSigCache(docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), sigOf(col(textCol)).as("sig")))
+    // read-shared for the same multi-consumer reason (see minhashLsh)
+    val withSig = docs.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), sigOf(col(textCol)).as("sig"))
+      .localCheckpoint(eager = false)
     val banded = withSig.select(col("id"), col("sig"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL).as("chunk"))): _*)).as("bc"))
@@ -365,7 +376,6 @@ object Dedup {
     // skipping ~2 s/round of distributed-iteration scheduling. Above it
     // the pointer-doubling loop below runs fully distributed; callers
     // probing the distributed path pass localThreshold = 0.
-    val nEdges = edges.count()
     // the driver-local finish hard-codes LONG ids (getLong + the
     // (Long, Long) toDF): non-bigint id columns must take the
     // type-generic distributed path, or behavior (and output schema)
@@ -373,8 +383,15 @@ object Dedup {
     // ClassCastException where production-scale runs work
     val idsAreLong = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges > 0 && nEdges <= localThreshold && idsAreLong) {
-      val arr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    // ONE bounded collect decides and fetches: more than `cap` rows back
+    // means the graph is over the threshold (`limit` takes an Int, so
+    // the threshold clamps at Int.MaxValue - 1)
+    val cap = math.min(localThreshold, Int.MaxValue - 1L).toInt
+    val small =
+      if (cap > 0 && idsAreLong) edges.limit(cap + 1).collect()
+      else Array.empty[Row]
+    if (small.nonEmpty && small.length <= cap) {
+      val arr = small.map(r => (r.getLong(0), r.getLong(1)))
       // checkpoint blocks are ContextCleaner-reclaimed once `edges`
       // goes unreachable — nothing to unpersist explicitly
       val parent = scala.collection.mutable.Map[Long, Long]()
@@ -457,17 +474,14 @@ object Dedup {
     *
     * Scale shape: one explode of per-doc-distinct shingles (kernel
     * dedups within the doc, so a shingle's occurrence count IS its
-    * document frequency), persisted once; DF via a partial-aggregating
+    * document frequency), materialized once (read-shared, see
+    * minhashLsh); DF via a partial-aggregating
     * groupBy joined back on the shingle (sort-merge, AQE skew-split
     * splits a hot boilerplate span's JOIN partition — a window over the
     * shingle would funnel the hot span's whole row set through ONE
     * unsplittable task, since AQE skew handling applies to joins, not
     * windows); then a per-doc agg keyed by doc id. Linear, no all-pairs.
     */
-  // the shingle cache of the LAST duplicatedSpanStats call (see
-  // LastCallCache for the lifetime contract)
-  private val lastSpanCache = new LastCallCache
-
   def duplicatedSpanStats(docs: DataFrame, textCol: String, idCol: String,
                           k: Int = 5): DataFrame = {
     // NULL-id docs merge into ONE stats row (SQL group semantics; the
@@ -483,8 +497,8 @@ object Dedup {
     // downstream join of stats back onto the corpus (or a corpus-wide
     // avg(dup_span_frac)) must know those ids are absent, not zero
     // (r17 review: behavior unchanged, contract documented).
-    val sh = lastSpanCache(docs.select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol), k)).as("g")))
+    val sh = docs.select(col(idCol).as("doc_id"),
+      explode(shingles(col(textCol), k)).as("g")).localCheckpoint(eager = false)
     val dfCounts = sh.groupBy("g").agg(count(lit(1)).as("_df"))
     sh.join(dfCounts, Seq("g"))
       .groupBy("doc_id")
@@ -504,35 +518,29 @@ object Dedup {
     // file's documented dominant cost — over the FULL corpus once per
     // join side; the verify stage only ever needs the candidates.
     // The pairs frame is usually the LSH candidate pipeline's output
-    // and is consumed here by candIds AND the verify join — persisted
-    // so the candidate pipeline runs once, not once per consumer
-    // (measured as a 2-3× q60 regression when unpinned). A frame the
-    // CALLER already persisted is left under the caller's management —
-    // rotating it into the shared slot would let the NEXT call evict a
-    // cache the caller still holds.
-    val p = if (pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      pairs else jaccardPairsCache(pairs)
-    // single pass over p (explode, not a union of two scans): a second
-    // scan of the still-uncached p inside the same job would race the
-    // first into recomputing the candidate pipeline. No distinct — the
-    // left-semi probe below dedups build keys in its hash table anyway,
-    // and the distinct was a whole extra exchange.
+    // and is consumed here by candIds AND the verify join — read-shared
+    // (see minhashLsh) so the candidate pipeline runs once, not once
+    // per consumer (measured as a 2-3× q60 regression when unpinned).
+    val p = pairs.localCheckpoint(eager = false)
+    // single pass over p (explode, not a union of two scans). No
+    // distinct — the left-semi probe below dedups build keys in its
+    // hash table anyway, and the distinct was a whole extra exchange.
     val candIds = p.select(explode(array(col("id_a"), col("id_b"))).as("_jid"))
     // the shingled-candidates frame feeds BOTH pair-join sides (and
     // often a downstream closure that re-reads the verify output) —
-    // cached, candidates-only, tiny. ONE eager action pins the whole
+    // materialized, candidates-only, tiny. ONE eager job pins the whole
     // chain: materializing sh computes p's partitions exactly once
-    // (candIds is its only consumer in this job) and caches both, so
-    // the verify join below reads only caches.
-    val sh = jaccardShCache(docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("_jid"), col(textCol).as("_jtxt"))
-      .join(candIds, Seq("_jid"), "left_semi")
-      .select(col("_jid"), shingles(col("_jtxt"), k).as("_jsh")))
+    // (candIds is its only consumer in this job) and keeps both, so
+    // the verify join below reads only materialized blocks.
     // r17 optimization round re-measured this eager pin: REMOVING it is
     // ~0.4 s SLOWER on the q24 shape even at bench scale (the two
     // vector-fetch joins' broadcast builds each re-derive the candidate
     // chain) — keep it.
-    sh.count()
+    val sh = docs.where(col(textCol).isNotNull)
+      .select(col(idCol).as("_jid"), col(textCol).as("_jtxt"))
+      .join(candIds, Seq("_jid"), "left_semi")
+      .select(col("_jid"), shingles(col("_jtxt"), k).as("_jsh"))
+      .localCheckpoint(eager = true)
     p
       .join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_jsh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_jsh", "sh_b"), "id_b")

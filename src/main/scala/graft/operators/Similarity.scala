@@ -26,10 +26,6 @@ import graft.functions.GraftKernels
   */
 object Similarity {
 
-  // one last-call persist slot per LSH-family operator (see LastCallCache)
-  private val embedSkCache = new LastCallCache
-  private val lshCorpusSkCache = new LastCallCache
-
   /** Hard ceiling for the EXPLICIT query-side broadcast hints below —
     * well past the auto-broadcast threshold (the hint exists precisely
     * because a 100 MB query batch is still worth broadcasting when the
@@ -288,16 +284,17 @@ object Similarity {
     def banded(df: DataFrame, id: String, v: String, probe: Boolean) = {
       // null-vector rows out BEFORE sketching (the sibling
       // embeddingNearDupPairsLsh's r14 rule, same rationale): a null
-      // embedding fans out ×(bands·probes) through the persisted
+      // embedding fans out ×(bands·probes) through the materialized
       // sketch frame, the explode, and the counts aggregate before
       // join null-key semantics finally discard it (r16 review)
       val sk0 = df.where(col(vecCol).isNotNull)
         .select(col(idCol).as(id), col(vecCol).as(v),
           signSketch(col(vecCol), numBits, dim).as("sk"))
-      // corpus side feeds bucket counts AND the capped join — persist so
-      // the sketch pass over the full corpus runs once, not per consumer
-      // (query side has a single consumer; leave it lazy)
-      val sk = if (probe) sk0 else lshCorpusSkCache(sk0)
+      // corpus side feeds bucket counts AND the capped join — read-shared
+      // (see Dedup.minhashLsh) so the sketch pass over the full corpus
+      // runs once, not per consumer (query side has a single consumer;
+      // leave it lazy)
+      val sk = if (probe) sk0 else sk0.localCheckpoint(eager = false)
       val mask = (1L << bandBits) - 1
       // probe offsets: the bucket itself, plus (query side only) every
       // XOR mask of popcount ≤ probeHamming — built from bit-position
@@ -688,7 +685,7 @@ object Similarity {
     // null-vector rows carry nothing to near-dup (the minhashLsh /
     // simhashPairs rule): left in, they inflate the adaptive sizing
     // count (widening the plan for vectors that do not exist) and fan
-    // out null chunks through the persisted sketch cache and both
+    // out null chunks through the materialized sketch frame and both
     // explode sides before join-null semantics finally discard them
     // (r14 review)
     val vecs0 = corpus.where(col(vecCol).isNotNull)
@@ -698,12 +695,13 @@ object Similarity {
         val n = corpusSize.getOrElse(vecs0.select(col(idCol)).count())
         adaptiveBandPlan(n, minCos, numBands, bandBits, probeBits)
       }
-    // persisted: the sketch pass (and the vector scan under it) feeds
-    // the index side, the probe side, and both vector-fetch joins.
-    // Chunks are per-band array elements (not one long): the wide plan
-    // can exceed 64 total bits.
-    val sk = embedSkCache(vecs0.select(col(idCol).as("id"), col(vecCol).as("v"),
-      bandChunksSketch(col(vecCol), effBands, effBits, dim).as("chunks")))
+    // read-shared (see Dedup.minhashLsh): the sketch pass (and the
+    // vector scan under it) feeds the index side, the probe side, and
+    // both vector-fetch joins. Chunks are per-band array elements (not
+    // one long): the wide plan can exceed 64 total bits.
+    val sk = vecs0.select(col(idCol).as("id"), col(vecCol).as("v"),
+      bandChunksSketch(col(vecCol), effBands, effBits, dim).as("chunks"))
+      .localCheckpoint(eager = false)
     def bandChunk(b: Int): Column = element_at(col("chunks"), b + 1)
     // sketch-Hamming prefilter (r13): when the requested threshold is
     // separable from noise in sketch space, candidate pairs die on a

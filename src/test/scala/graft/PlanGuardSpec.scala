@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{Dedup, Similarity}
 
 /** Physical-plan regression guards: the scale-critical plan properties
   * (pushdown, pruning, broadcast strategy, TakeOrdered collapse,
@@ -15,6 +20,72 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestSession {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  private def runNoop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The parquet file at `path`, every row passing a counter as the scan
+    * hands it on: the counter reads how many times the file's rows were
+    * read, whichever consumer or recomputation read them. (A listener's
+    * `inputMetrics.recordsRead` cannot tell: Spark counts a read of a
+    * persisted RDD block as input records too.) */
+  private def countedParquet(path: String): (DataFrame, LongAccumulator) = {
+    val acc = spark.sparkContext.longAccumulator(path)
+    val df = spark.read.parquet(path)
+    (df.mapPartitions(_.map { r => acc.add(1); r })(Encoders.row(df.schema)), acc)
+  }
+
+  private def rowsOf(path: String): Long = spark.read.parquet(path).count()
+
+  test("dedup/ANN keys leave the CacheManager empty: a materialization lives with its query") {
+    // entries other suites left on the shared session are not this
+    // test's subject
+    spark.catalog.clearCache()
+    Seq("q24_dedup_minhash", "q25_dedup_simhash", "q26_ngram_jaccard", "q28_ann_lsh",
+      "q56_dedup_keep_best", "q57_dedup_clusters", "q58_embed_dedup_lsh", "q60_curation",
+      "q69_leakage_split", "q70_dedup_clusters_dist", "q77_dup_spans").foreach { name =>
+      runNoop(SparkEntry.queries(name)(spark, dir))
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a frame in the CacheManager")
+    }
+  }
+
+  test("two minhashLsh frames built before either runs each read their input once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-readonce").toString
+    try {
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val (pa, pb) = (s"$tmp/a", s"$tmp/b")
+      docs.where(col("doc_id") % 2 === 0).write.parquet(pa)
+      docs.where(col("doc_id") % 2 =!= 0).write.parquet(pb)
+      val ((a, readA), (b, readB)) = (countedParquet(pa), countedParquet(pb))
+      val lshA = Dedup.minhashLsh(a, "text", "doc_id")
+      val lshB = Dedup.minhashLsh(b, "text", "doc_id")
+      val (nA, nB) = (rowsOf(pa), rowsOf(pb))
+      runNoop(lshA)
+      assert(readA.value == nA, s"A read ${readA.value} rows of its $nA")
+      runNoop(lshB)
+      assert(readB.value == nB, s"B read ${readB.value} rows of its $nB")
+      assert(readA.value == nA, s"running B re-read A's input (${readA.value} rows of $nA)")
+    } finally graft.Fs.deleteRecursively(new java.io.File(tmp))
+  }
+
+  test("each LSH operator reads its (corpus) input once per query") {
+    val docsPath = s"$dir/documents.parquet"
+    val embPath = s"$dir/embeddings.parquet"
+    val nEmb = rowsOf(embPath)
+    Seq[(String, String, DataFrame => DataFrame)](
+      ("minhashLsh", docsPath, Dedup.minhashLsh(_, "text", "doc_id")),
+      ("simhashPairs", docsPath, Dedup.simhashPairs(_, "text", "doc_id")),
+      ("embeddingNearDupPairsLsh", embPath, Similarity.embeddingNearDupPairsLsh(_,
+        "vec_id", "embedding", dim = 64, corpusSize = Some(nEmb))),
+      ("lshTopK", embPath, c => Similarity.lshTopK(c,
+        spark.read.parquet(embPath).where(col("vec_id") < 5), "vec_id", "embedding", 10, 64))
+    ).foreach { case (op, path, build) =>
+      val (in, reads) = countedParquet(path)
+      runNoop(build(in))
+      val n = rowsOf(path)
+      assert(reads.value == n, s"$op read ${reads.value} rows of its $n")
+    }
+  }
 
   test("q1: lineitem scan is column-pruned and the shipdate predicate is pushed") {
     val p = plan("q1_agg")
