@@ -167,43 +167,21 @@ object SqlApp {
   private def tail(line: String, prefix: String): String =
     line.substring(prefix.length).trim
 
-  /** Parse an application file: metadata annotations (anywhere in the
-    * file), then statements split on `;` with their `-- Name:` /
-    * `-- @name:` / `-- Property: k = v` annotations attached to the
-    * NEXT statement. Missing `-- SQL Application:` header is an error
-    * (reference parity); missing version defaults to 1.0.0. */
-  /** Quote state after scanning one line of SQL text (comment-aware) —
-    * expressed as a loop over splitIndexFrom so there is exactly ONE
-    * quote/comment state machine (r14 review: the two near-identical
-    * scanners could silently diverge metadata classification from
-    * statement splitting on a future escape/comment-rule fix). A found
-    * ';' resumes scanning after it in the bare state, which is what the
-    * inline scan did by treating ';' as a plain character. */
-  @annotation.tailrec
-  private def quoteStateAfter(s: String, q0: Char): Char = {
-    val (idx, q1) = splitIndexFrom(s, q0)
-    if (idx < 0) q1 else quoteStateAfter(s.substring(idx + 1), 0)
-  }
+  /** A `--` comment that starts its line: an annotation line, dropped
+    * from the statement text. A `-- @…` inside a literal or block
+    * comment, or after code on its line, is none. */
+  private def wholeLineComment(l: VeloSqlParser.Lexeme): Boolean =
+    l.kind == VeloSqlParser.LexKind.LineComment && l.lineStart
 
-  /** The metadata pass alone (quote-aware, no name-required check) —
+  /** The metadata pass alone (no name-required check) —
     * shared with SqlValidator.validateContent so the header extraction
     * cannot drift between the loader and the pre-deploy gate. */
   private[sql] def parseMetadata(content: String,
                                  env: String => Option[String] = sys.env.get): AppMetadata = {
     var md = AppMetadata(name = "")
-    // metadata lines only OUTSIDE string literals: a multi-line literal
-    // whose content happens to start with '-- @k: v' is SQL data, and
-    // classifying it would pollute the app metadata
-    var mdQuote: Char = 0
-    content.linesIterator.map(_.trim).foreach { line =>
-      // classification uses the quote state AT THE START of the line: a
-      // line inside a multi-line literal that also CLOSES the quote
-      // (e.g. `-- @owner: x'`) is literal content for its whole prefix,
-      // and the end-of-line state must not reclassify it as metadata
-      val inLiteral = mdQuote != 0
-      def has(p: String): Boolean = !inLiteral && line.startsWith(p)
-      if (inLiteral) { mdQuote = quoteStateAfter(line, mdQuote) }
-      else if (!line.startsWith("--")) mdQuote = quoteStateAfter(line, 0)
+    VeloSqlParser.lex(content).filter(wholeLineComment).foreach { l =>
+      val line = content.substring(l.start, l.end).trim
+      def has(p: String): Boolean = line.startsWith(p)
       if (has("-- SQL Application:")) md = md.copy(name = tail(line, "-- SQL Application:"))
       else if (has("-- Version:")) md = md.copy(version = tail(line, "-- Version:"))
       else if (has("-- Description:")) md = md.copy(description = Some(tail(line, "-- Description:")))
@@ -242,7 +220,7 @@ object SqlApp {
         md = md.copy(deploymentNodeName = Some(resolvePattern(tail(line, "-- @deployment.node_name:"), env)))
       else if (has("-- @deployment.region:"))
         md = md.copy(deploymentRegion = Some(resolvePattern(tail(line, "-- @deployment.region:"), env)))
-      else if (!inLiteral && line.startsWith("-- @") && line.contains(":")
+      else if (line.startsWith("-- @") && line.contains(":")
                // exclude exactly the metric-spec forms ('@metric:' and
                // '@metric_*:') — the bare '@metric' prefix also swallowed
                // unrelated keys like '@metrics.port', which then matched
@@ -259,14 +237,17 @@ object SqlApp {
     md
   }
 
+  /** Parse an application file: metadata annotations (anywhere in the
+    * file), then statements split on `;` with their `-- Name:` /
+    * `-- @name:` / `-- Property: k = v` annotations attached to the
+    * NEXT statement. Missing `-- SQL Application:` header is an error
+    * (reference parity); missing version defaults to 1.0.0. */
   def parse(content: String, env: String => Option[String] = sys.env.get): SqlApplication = {
     val md = parseMetadata(content, env)
     if (md.name.isEmpty)
       throw new ParseException("SQL Application must have a name (-- SQL Application: <name>)")
 
     // statements with their attached Name/Property annotations
-    val metaPrefixes = Seq("-- SQL Application:", "-- Version:", "-- Description:",
-      "-- Author:", "-- Dependencies:", "-- Tag:", "-- @")
     var statements = Vector.empty[AppStatement]
     var counter = 0
     var curName: Option[String] = None
@@ -279,66 +260,33 @@ object SqlApp {
     var curBatchSize: Option[Int] = None
     var curNumPartitions: Option[Int] = None
     var curStrategy: Option[String] = None
-    val cur = new StringBuilder
-    def flush(): Unit = {
-      val sqlText = cur.toString.trim
-      cur.clear()
-      // a comment-only fragment (an inline `-- done` after the file's
-      // final ';') is not a statement: tokenize strips comments, and
-      // zero tokens means nothing to execute — emitting it would fail
-      // the whole app run on ParseException("empty statement"). A
-      // tokenizer ERROR still counts as a statement so the parse error
-      // surfaces with its text, not silently dropped here.
-      val isStatement = sqlText.nonEmpty &&
-        (try VeloSqlParser.tokenize(sqlText).nonEmpty
-         catch { case _: Exception => true })
-      if (isStatement) {
-        // reference validate_annotation: gauge/histogram need a field
-        curMetrics.foreach { m =>
-          if ((m.metricType == "gauge" || m.metricType == "histogram") && m.field.isEmpty)
-            throw new ParseException(
-              s"metric '${m.name}' of type ${m.metricType} requires @metric_field")
-        }
-        statements :+= AppStatement(s"stmt_$counter", curName,
-          resolvePattern(sqlText, env), curProps, counter,
-          curMetrics, curPartitions, curSticky,
-          curJobMode, curBatchSize, curNumPartitions, curStrategy)
-        counter += 1
-        curName = None
-        curProps = Map.empty
-        curMetrics = Vector.empty
-        curMetricDropped = false
-        curPartitions = None
-        curSticky = None
-        curJobMode = None
-        curBatchSize = None
-        curNumPartitions = None
-        curStrategy = None
+    def flush(sqlText: String): Unit = {
+      // reference validate_annotation: gauge/histogram need a field
+      curMetrics.foreach { m =>
+        if ((m.metricType == "gauge" || m.metricType == "histogram") && m.field.isEmpty)
+          throw new ParseException(
+            s"metric '${m.name}' of type ${m.metricType} requires @metric_field")
       }
+      statements :+= AppStatement(s"stmt_$counter", curName,
+        resolvePattern(sqlText, env), curProps, counter,
+        curMetrics, curPartitions, curSticky,
+        curJobMode, curBatchSize, curNumPartitions, curStrategy)
+      counter += 1
+      curName = None
+      curProps = Map.empty
+      curMetrics = Vector.empty
+      curMetricDropped = false
+      curPartitions = None
+      curSticky = None
+      curJobMode = None
+      curBatchSize = None
+      curNumPartitions = None
+      curStrategy = None
     }
-    // open-quote state carried ACROSS lines: a multi-line string literal
-    // must keep protecting its content — a line inside it that happens
-    // to start with '--' is literal text, not a comment, and a ';' in it
-    // must not split the statement
-    var openQuote: Char = 0
-    def sqlContent(raw: String): Unit = {
-      var rest = raw
-      var r = splitIndexFrom(rest, openQuote)
-      while (r._1 >= 0) {
-        cur.append(rest.substring(0, r._1)).append('\n')
-        flush()
-        rest = rest.substring(r._1 + 1)
-        r = splitIndexFrom(rest, 0)
-      }
-      openQuote = r._2
-      cur.append(rest).append('\n')
-    }
-    content.linesIterator.foreach { raw =>
-      val trimmed = raw.trim
+    def annotate(trimmed: String): Unit = {
       def intAnn(p: String): Option[Int] =
         try Some(tail(trimmed, p).toInt) catch { case _: NumberFormatException => None }
-      if (openQuote != 0) sqlContent(raw) // inside a multi-line literal
-      else if (trimmed.startsWith("-- Name:")) curName = Some(tail(trimmed, "-- Name:"))
+      if (trimmed.startsWith("-- Name:")) curName = Some(tail(trimmed, "-- Name:"))
       else if (trimmed.startsWith("-- @name:")) curName = Some(tail(trimmed, "-- @name:"))
       else if (trimmed.startsWith("-- @metric:")) {
         val m = tail(trimmed, "-- @metric:")
@@ -427,18 +375,24 @@ object SqlApp {
           case _ => None
         }
       }
-      else if (metaPrefixes.exists(trimmed.startsWith)) ()      // app metadata
       else if (trimmed.startsWith("-- Property:")) {
         tail(trimmed, "-- Property:").split("=", 2) match {
           case Array(k, v) => curProps += (k.trim -> v.trim)
           case _ =>
         }
       }
-      else if (trimmed.startsWith("--")) ()                      // plain comment
-      else if (trimmed.isEmpty) ()
-      else sqlContent(raw) // string-literal-aware ';' split within the line
     }
-    flush()
+    VeloSqlParser.fragments(content).foreach { f =>
+      f.lexemes.filter(wholeLineComment)
+        .foreach(l => annotate(content.substring(l.start, l.end).trim))
+      // a comment-only fragment (an inline `-- done` after the file's
+      // final ';') is not a statement: zero tokens means nothing to
+      // execute — emitting it would fail the whole app run on
+      // ParseException("empty statement"). An unterminated literal or
+      // block comment still counts, so its parse error surfaces with
+      // its text, not silently dropped here.
+      if (f.lexemes.exists(_.isCode)) flush(statementText(content, f))
+    }
     SqlApplication(md, statements)
   }
 
@@ -475,51 +429,33 @@ object SqlApp {
     d
   }
 
-  /** Index of the first top-level ';' — outside string literals AND
-    * outside an inline `--` comment (a ';' inside `-- keep; drop`
-    * must not split the statement). `q0` carries the OPEN-QUOTE state
-    * from the previous line: a string literal spanning lines must keep
-    * protecting its ';' and '--' content, or the splitter corrupts the
-    * statement at the line boundary. Returns (index | -1, quote state
-    * at end of line). */
-  private def splitIndexFrom(s: String, q0: Char): (Int, Char) = {
-    var i = 0
-    // 0 = bare, quote char = inside that literal, '*' = inside a
-    // /* */ BLOCK comment (which the dialect tokenizer accepts, so the
-    // splitter must track it too: a ';' or apostrophe inside one would
-    // otherwise split the statement / poison the quote state for every
-    // following line)
-    var quote: Char = q0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote == '*') {
-        if (c == '*' && i + 1 < s.length && s(i + 1) == '/') { quote = 0; i += 1 }
-      }
-      else if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '-' && i + 1 < s.length && s(i + 1) == '-'
-          // NOT a comment inside a kafka://… / file://… URI token: the
-          // dialect tokenizer consumes '-' as a URI character there
-          // ('--' is legal in Kafka topic names), so treating it as a
-          // comment here desynchronized the splitter from the tokenizer
-          // — the rest of the line (including a real ';') vanished and
-          // two statements silently merged (r15 review). The rule lives
-          // in ONE place (the tokenizer's owner) shared with
-          // VeloContext.splitStatements (r15 advice).
-          && !VeloSqlParser.insideUriToken(s, i)) return (-1, 0) // comment runs to EOL
-      // NOT a comment when the '/' sits inside a kafka://…/file://… URI
-      // token (a path ending in '/' followed by a glob-style '*'): the
-      // tokenizer consumed that '/' as a URI character, so entering
-      // block-comment state here swallows ';' and quotes to the next
-      // '*/' — the same splitter/tokenizer desync class as the r15
-      // '--'-in-URI fix one arm above, shared with
-      // VeloContext.splitStatements (r17 review)
-      else if (c == '/' && i + 1 < s.length && s(i + 1) == '*'
-          && !VeloSqlParser.insideUriToken(s, i)) { quote = '*'; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') quote = c
-      else if (c == ';') return (i, 0)
-      i += 1
+  /** A fragment's statement text: its source span with each whole-line
+    * `--` comment and each blank line dropped, line breaks as '\n',
+    * trimmed. Literals and block comments keep every line. */
+  private def statementText(content: String, f: VeloSqlParser.Fragment): String = {
+    val sb = new StringBuilder
+    var from = f.start
+    var cuts = List.empty[VeloSqlParser.Lexeme] // whole-line comments since `from`, newest first
+    // the whitespace up to `to`, each cut comment standing for a line
+    // break: a stretch with a break keeps only its ends around one '\n'
+    def gap(to: Int): Unit = {
+      val g = cuts.foldLeft(content.substring(from, to))((g, c) => g.patch(c.start - from, "\n", c.end - c.start))
+      val isBreak = (c: Char) => c == '\n' || c == '\r'
+      val first = g.indexWhere(isBreak)
+      if (first < 0) sb.append(g)
+      else sb.append(g.substring(0, first)).append('\n').append(g.substring(g.lastIndexWhere(isBreak) + 1))
     }
-    (-1, quote)
+    f.lexemes.foreach { l =>
+      if (wholeLineComment(l)) cuts ::= l
+      else {
+        gap(l.start)
+        sb.append(content.substring(l.start, l.end))
+        from = l.end
+        cuts = Nil
+      }
+    }
+    gap(f.end)
+    sb.toString.replace("\r\n", "\n").replace('\r', '\n').trim
   }
 
   /** Parse + execute an application against a context; returns each

@@ -237,7 +237,7 @@ object SqlValidator {
   /** Validate a whole application text (the StreamJobServer's
     * pre-deploy gate): every statement analyzed, INTO sinks checked
     * against declarations, application name extracted via SqlApp's
-    * quote-aware metadata parser (one parser, no drift).
+    * metadata parser (one parser, no drift).
     *
     * Statements validate against the catalog AS THE APP WOULD BUILD IT:
     * each valid CTAS/CSAS registers a zero-row placeholder view of its
@@ -249,16 +249,10 @@ object SqlValidator {
   def validateContent(ctx: VeloContext, content: String,
                       env: String => Option[String] = sys.env.get): AppValidation = {
     val appName = Option(SqlApp.parseMetadata(content, env).name).filter(_.nonEmpty)
-    // the EXECUTOR's OWN splitter + resolver (SqlApp.parse with the
-    // caller's env, exactly what run() consumes) — not a third
-    // independent quote/comment scanner: VeloContext.splitStatements
-    // was a separate hand-rolled machine over the same text, so any
-    // future statement-boundary fix in one silently reintroduced
-    // validator/executor drift, and file-level annotation errors
-    // (malformed @metric_buckets, out-of-range @metric_sample_rate)
-    // that run() throws were INVISIBLE to the gate, which only ever
-    // saw the comment-stripped statement text (r15 review; r14 advice
-    // threaded env for the same reason).
+    // the executor's own splitter and resolver (SqlApp.parse with the
+    // caller's env, exactly what run() consumes), so file-level
+    // annotation errors that run() throws (malformed @metric_buckets,
+    // out-of-range @metric_sample_rate) reach the gate too
     val app =
       try SqlApp.parse(content, env)
       catch {

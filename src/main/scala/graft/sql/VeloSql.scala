@@ -793,9 +793,8 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
   }
 
   /** Execute a multi-statement SQL application script (the reference's
-    * deployable `.sql` files): statements split on top-level semicolons
-    * (string-literal-aware), `--` comments tolerated. Returns the
-    * result of each executed statement, in order. */
+    * deployable `.sql` files), split into statements on the lexer's `;`.
+    * Returns the result of each executed statement, in order. */
   def executeScript(script: String): Seq[DataFrame] =
     VeloContext.splitStatements(script).map(sql)
 
@@ -1007,56 +1006,15 @@ object VeloContext {
     try VeloSqlParser.parseDuration(VeloSqlParser.tokenize(s.trim))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Split a script into statements on semicolons outside string
-    * literals; drops blank/comment-only fragments. */
-  def splitStatements(script: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < script.length) {
-      val c = script(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) {
-          if (i + 1 < script.length && script(i + 1) == quote) { cur.append(quote); i += 1 }
-          else quote = 0
-        }
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur.append(c)
-        case '-' if i + 1 < script.length && script(i + 1) == '-'
-            // '--' inside a kafka://…/file://… URI token is topic text,
-            // not a comment (the tokenizer consumes '-' as a URI char);
-            // the r15 fix landed only in SqlApp's splitter, so this
-            // path (runScript) kept swallowing the rest of the line and
-            // silently merging statements (r15 advice). One shared rule.
-            && !VeloSqlParser.insideUriToken(script, i) =>
-          while (i < script.length && script(i) != '\n') i += 1
-          cur.append('\n')
-        case '/' if i + 1 < script.length && script(i + 1) == '*'
-            // NOT a comment when the '/' sits inside a kafka://…/
-            // file://… URI token (a path ending in '/' followed by a
-            // glob-style '*'): the tokenizer consumed that '/' as a URI
-            // character, so treating '/*' as a comment here swallows
-            // the rest of the script — the same splitter/tokenizer
-            // desync class as the r15 '--'-in-URI fix, which guarded
-            // only the line-comment arm (r17 review)
-            && !VeloSqlParser.insideUriToken(script, i) =>
-          // block comment: the tokenizer accepts /* */, so a ';' inside
-          // one must not split the script mid-comment (the fragment
-          // would die with "unterminated block comment")
-          val close = script.indexOf("*/", i + 2)
-          val stop = if (close < 0) script.length else close + 2
-          cur.append(script.substring(i, stop))
-          i = stop - 1
-        case ';' => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
+  /** Split a script into statements at the lexer's `;` symbols. A
+    * statement runs from its first to its last lexeme that is not a
+    * closed comment; fragments with none are dropped. */
+  def splitStatements(script: String): Seq[String] =
+    VeloSqlParser.fragments(script).flatMap { f =>
+      val code = f.lexemes.filter(_.isCode)
+      code.headOption.map(h => script.substring(h.start, code.last.end))
     }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+
   /** Context over the driver's test tables in `sfDir`, with the `events`
     * table registered stream-like (system columns + headers). */
   def forDir(spark: SparkSession, sfDir: String): VeloContext = {

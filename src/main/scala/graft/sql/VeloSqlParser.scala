@@ -49,123 +49,177 @@ object VeloSqlParser {
     * r14 review removed from the deploy arm (r15 review). */
   final class UnknownJobException(msg: String) extends ParseException(msg)
 
-  /** True when the character at `s(i)` (the first '-' of a would-be
-    * '--' line comment, or the '/' of a would-be slash-star block
-    * comment) sits INSIDE a kafka://… / file://… URI token per
-    * tokenize's rule below: the tokenizer consumes '-' and '/' as URI
-    * characters there ('--' is legal in Kafka topic names; a path can
-    * end in '/' right before a glob '*'), so any statement splitter
-    * must NOT open a comment — the two boundary machines (SqlApp's
-    * line splitter and VeloContext.splitStatements) both delegate here
-    * so they cannot desync from the tokenizer again (r15 advice;
-    * block-comment arm r17 review). A URI runs from a "://" to the
-    * first non-URI character, and the "://" must be preceded by the
-    * kafka/file scheme word. */
-  def insideUriToken(s: String, i: Int): Boolean = {
-    var j = i - 1
-    while (j >= 0 && (s(j).isLetterOrDigit || "._/-".indexOf(s(j)) >= 0)) j -= 1
-    j >= 0 && s(j) == ':' && i >= j + 3 &&
-      s(j + 1) == '/' && s(j + 2) == '/' && {
-        var w = j - 1
-        while (w >= 0 && (s(w).isLetterOrDigit || s(w) == '_')) w -= 1
-        // tokenize lexes a leading digit run as its own NUMBER token and
-        // the ident starts at the first letter ('1kafka://t--x' is
-        // number 1 + scheme kafka there), so the back-scanned word must
-        // drop that digit prefix or the splitter desyncs on exactly the
-        // inputs this helper exists for (r16 review); a letter-prefixed
-        // word ('xkafka') stays whole — ONE ident ≠ kafka in tokenize
-        val word = s.substring(w + 1, j).dropWhile(_.isDigit)
-          .toLowerCase(java.util.Locale.ROOT)
-        word == "kafka" || word == "file"
+  // ============================ lexemes ============================
+
+  sealed trait LexKind
+  object LexKind {
+    case object Word extends LexKind
+    case object Uri extends LexKind          // kafka://… or file://…, scheme included
+    case object Number extends LexKind
+    case object Quoted extends LexKind       // '…', "…" or `…`, quotes included
+    case object LineComment extends LexKind  // '--' up to, not including, the '\n'
+    case object BlockComment extends LexKind
+    case object Symbol extends LexKind
+    case object Other extends LexKind        // one character the dialect has no token for
+  }
+
+  /** `sql.substring(start, end)`. `closed` is false for a quoted text or
+    * block comment that runs to the end of the input; `lineStart` when
+    * only whitespace precedes the lexeme on its line. */
+  final case class Lexeme(kind: LexKind, start: Int, end: Int, closed: Boolean, lineStart: Boolean) {
+    /** Yields a token or a tokenize error: anything but a closed comment. */
+    def isCode: Boolean = kind match {
+      case LexKind.LineComment => false
+      case LexKind.BlockComment => !closed
+      case _ => true
+    }
+  }
+
+  /** The dialect's one lexer: every non-whitespace character of `sql`
+    * lands in exactly one lexeme, in order. Never throws; `tokenize`
+    * turns the lexemes into tokens or errors, and the script and app
+    * splitters cut at its `;` symbols, so all three read the same text
+    * the same way. */
+  def lex(sql: String): Vector[Lexeme] = {
+    import LexKind._
+    val out = Vector.newBuilder[Lexeme]
+    val n = sql.length
+    var i = 0
+    var lineStart = true
+    while (i < n) {
+      val c = sql(i)
+      if (c.isWhitespace) { if (c == '\n' || c == '\r') lineStart = true; i += 1 }
+      else {
+        val s = i
+        var closed = true
+        val kind =
+          if (c == '-' && i + 1 < n && sql(i + 1) == '-') {
+            while (i < n && sql(i) != '\n') i += 1
+            LineComment
+          } else if (c.isLetter || c == '_') {
+            while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
+            val word = sql.substring(s, i)
+            // kafka://topic-name and file://path SOURCES (outside string
+            // literals only). '-' and '/' are URI characters, so '--' and
+            // '/*' inside one are topic or path text ('--' is legal in
+            // Kafka topic names; a path can end in '/' before a glob '*').
+            if ((word.equalsIgnoreCase("kafka") || word.equalsIgnoreCase("file"))
+                && sql.startsWith("://", i)) {
+              i += 3
+              while (i < n && (sql(i).isLetterOrDigit || "._/-".indexOf(sql(i)) >= 0)) i += 1
+              Uri
+            } else Word
+          } else if (c.isDigit || (c == '.' && i + 1 < n && sql(i + 1).isDigit)) {
+            while (i < n && (sql(i).isDigit || sql(i) == '.')) i += 1
+            if (i < n && (sql(i) == 'e' || sql(i) == 'E')) {
+              i += 1; if (i < n && (sql(i) == '+' || sql(i) == '-')) i += 1
+              while (i < n && sql(i).isDigit) i += 1
+            }
+            Number
+          } else if (c == '\'' || c == '"' || c == '`') {
+            // a doubled quote is the quote character itself
+            i += 1
+            closed = false
+            while (i < n && !closed) {
+              if (sql(i) != c) i += 1
+              else if (i + 1 < n && sql(i + 1) == c) i += 2
+              else { closed = true; i += 1 }
+            }
+            Quoted
+          } else if (sql.startsWith("/*", i)) {
+            // standard SQL block comment (non-nesting): without this, '/'
+            // and '*' lex as arithmetic and the comment TEXT becomes
+            // expression tokens, failing far from the cause
+            val close = sql.indexOf("*/", i + 2)
+            closed = close >= 0
+            i = if (closed) close + 2 else n
+            BlockComment
+          } else if (i + 1 < n && twoCharSymbols.contains(sql.substring(i, i + 2))) {
+            i += 2; Symbol
+          } else {
+            i += 1; if (";(),.*+-/%^=<>[]~".indexOf(c) >= 0) Symbol else Other
+          }
+        out += Lexeme(kind, s, i, closed, lineStart)
+        lineStart = false
       }
+    }
+    out.result()
+  }
+
+  private val twoCharSymbols = Set("!=", "<>", "<=", ">=", "||", "->")
+
+  /** A stretch of text between `;` symbols: its span (the `;`s
+    * excluded) and its lexemes. */
+  final case class Fragment(start: Int, end: Int, lexemes: Vector[Lexeme])
+
+  /** `sql`'s lexemes cut at every `;` symbol — the statement boundary
+    * of scripts and app files. */
+  def fragments(sql: String): Vector[Fragment] = {
+    val out = Vector.newBuilder[Fragment]
+    var start = 0
+    var cur = Vector.newBuilder[Lexeme]
+    lex(sql).foreach { l =>
+      if (l.kind == LexKind.Symbol && sql(l.start) == ';') {
+        out += Fragment(start, l.start, cur.result())
+        cur = Vector.newBuilder[Lexeme]
+        start = l.end
+      } else cur += l
+    }
+    out += Fragment(start, sql.length, cur.result())
+    out.result()
   }
 
   def tokenize(sql: String): Vector[Tok] = {
-    val out = ArrayBuffer[Tok]()
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '-' && i + 1 < n && sql(i + 1) == '-') { // line comment
-        while (i < n && sql(i) != '\n') i += 1
-      } else if (c.isLetter || c == '_') {
-        val s = i
-        while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
-        val word = sql.substring(s, i)
-        // kafka://topic-name and file://path SOURCES (outside string
-        // literals only): registered as views named after the sanitized
-        // last path segment
-        if ((word.equalsIgnoreCase("kafka") || word.equalsIgnoreCase("file"))
-            && i + 2 < n && sql(i) == ':' && sql(i + 1) == '/' && sql(i + 2) == '/') {
-          i += 3
-          val us = i
-          while (i < n && (sql(i).isLetterOrDigit || "._/-".indexOf(sql(i)) >= 0)) i += 1
-          val raw = sql.substring(us, i)
-          // a scheme with no topic/path ('kafka://' — an unsubstituted
-          // template var, say) produced an EMPTY identifier, and the
-          // empty FROM was then silently dropped at emission: the query
-          // ran as a constant SELECT, one row instead of per-record
-          // rows, no error. 'file:///' additionally hit split('/') on
-          // an all-slash string = empty array → NoSuchElementException
-          // (r17 review).
-          val segs = raw.split('/')
+    import LexKind._
+    val out = Vector.newBuilder[Tok]
+    lex(sql).foreach { l =>
+      val text = sql.substring(l.start, l.end)
+      l.kind match {
+        case LineComment =>
+        case BlockComment =>
+          if (!l.closed) throw new ParseException(s"unterminated block comment starting at ${l.start}")
+        case Word => out += Tok(TIdent, text)
+        case Uri =>
+          // registered as a view named after the sanitized last path
+          // segment. A scheme with no topic/path ('kafka://' — an
+          // unsubstituted template var, say) produced an EMPTY
+          // identifier, and the empty FROM was then silently dropped at
+          // emission: the query ran as a constant SELECT, one row
+          // instead of per-record rows, no error. 'file:///'
+          // additionally hit split('/') on an all-slash string = empty
+          // array → NoSuchElementException.
+          val sep = text.indexOf("://")
+          val segs = text.substring(sep + 3).split('/')
           if (segs.isEmpty || segs.last.isEmpty)
             throw new ParseException(
-              s"empty ${word.toLowerCase(java.util.Locale.ROOT)}:// source (missing topic/path)")
-          val seg = segs.last.replace('-', '_').replace(".", "_")
-          out += Tok(TIdent, seg)
-        } else out += Tok(TIdent, word)
-      } else if (c.isDigit || (c == '.' && i + 1 < n && sql(i + 1).isDigit)) {
-        val s = i
-        while (i < n && (sql(i).isDigit || sql(i) == '.')) i += 1
-        if (i < n && (sql(i) == 'e' || sql(i) == 'E')) {
-          i += 1; if (i < n && (sql(i) == '+' || sql(i) == '-')) i += 1
-          while (i < n && sql(i).isDigit) i += 1
-        }
-        out += Tok(TNumber, sql.substring(s, i))
-      } else if (c == '\'' || c == '"' || c == '`') {
-        val quote = c; val s = i; i += 1
-        val sb = new StringBuilder
-        var closed = false
-        while (i < n && !closed) {
-          if (sql(i) == quote) {
-            if (i + 1 < n && sql(i + 1) == quote) { sb.append(quote); i += 2 }
-            else { closed = true; i += 1 }
-          } else { sb.append(sql(i)); i += 1 }
-        }
-        if (!closed) throw new ParseException(s"unterminated string starting at $s")
-        if (quote == '\'')
-          // the dialect's ONLY string escape is '' (standard SQL; the
-          // reference's sqlparser does the same) — backslash is an
-          // ordinary character. The token is re-emitted into spark.sql()
-          // where the DEFAULT parser escape-processes backslashes, so
-          // 'C:\tmp' would silently become "C:<TAB>mp" and a trailing
-          // backslash would be a Catalyst parse error far from the
-          // dialect gate. Store the token SPARK-ESCAPED (backslashes
-          // doubled); unquoteString collapses them back when code needs
-          // the VALUE (r14 review).
-          out += Tok(TString, sql.substring(s, i).replace("\\", "\\\\"))
-        else // quoted identifier → Spark backtick form (re-escaping any
-          // interior backtick: the unescaped text would otherwise emit
-          // `a`b` — malformed Spark SQL from valid dialect input)
-          out += Tok(TIdent, "`" + sb.toString.replace("`", "``") + "`")
-      } else {
-        val two = if (i + 1 < n) sql.substring(i, i + 2) else ""
-        if (two == "/*") {
-          // standard SQL block comment (non-nesting): without this, '/'
-          // and '*' lex as arithmetic and the comment TEXT becomes
-          // expression tokens, failing far from the cause
-          val close = sql.indexOf("*/", i + 2)
-          if (close < 0) throw new ParseException(s"unterminated block comment starting at $i")
-          i = close + 2
-        }
-        else if (Set("!=", "<>", "<=", ">=", "||", "->").contains(two)) { out += Tok(TSymbol, two); i += 2 }
-        else if (";(),.*+-/%^=<>[]~".indexOf(c) >= 0) { out += Tok(TSymbol, c.toString); i += 1 }
-        else throw new ParseException(s"unexpected character '$c' at $i")
+              s"empty ${text.substring(0, sep).toLowerCase(java.util.Locale.ROOT)}:// source (missing topic/path)")
+          out += Tok(TIdent, segs.last.replace('-', '_').replace(".", "_"))
+        case Number => out += Tok(TNumber, text)
+        case Quoted =>
+          if (!l.closed) throw new ParseException(s"unterminated string starting at ${l.start}")
+          val quote = text.head
+          if (quote == '\'')
+            // the dialect's ONLY string escape is '' (standard SQL; the
+            // reference's sqlparser does the same) — backslash is an
+            // ordinary character. The token is re-emitted into spark.sql()
+            // where the DEFAULT parser escape-processes backslashes, so
+            // 'C:\tmp' would silently become "C:<TAB>mp" and a trailing
+            // backslash would be a Catalyst parse error far from the
+            // dialect gate. Store the token SPARK-ESCAPED (backslashes
+            // doubled); unquoteString collapses them back when code needs
+            // the VALUE.
+            out += Tok(TString, text.replace("\\", "\\\\"))
+          else { // quoted identifier → Spark backtick form (re-escaping any
+            // interior backtick: the unescaped text would otherwise emit
+            // `a`b` — malformed Spark SQL from valid dialect input)
+            val name = text.substring(1, text.length - 1).replace(s"$quote$quote", quote.toString)
+            out += Tok(TIdent, "`" + name.replace("`", "``") + "`")
+          }
+        case Symbol => out += Tok(TSymbol, text)
+        case Other => throw new ParseException(s"unexpected character '$text' at ${l.start}")
       }
     }
-    out.toVector
+    out.result()
   }
 
   /** Decode a tokenized single-quoted literal to its VALUE. Tokens are

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * never a hang (a truncated/garbled statement reaching a scan loop that
   * makes no progress would stall the whole driver). Every statement
   * shape the dialect supports is fuzzed by prefix-truncation and token
-  * deletion, each parse bounded by a watchdog.
+  * deletion, each parse bounded by a watchdog. Scripts joined from the
+  * shapes must split into the same statements through every reader of
+  * dialect text.
   */
 class ParserFuzzSpec extends AnyFunSuite {
 
@@ -52,8 +54,10 @@ class ParserFuzzSpec extends AnyFunSuite {
     "SELECT c, COUNT(*) FROM t GROUP BY c WINDOW SESSION(1w)"
   )
 
-  private def boundedParse(sql: String): Unit = {
-    val f = Future(try { VeloSqlParser.parse(sql); () } catch {
+  private def bounded[T](body: => T): T = Await.result(Future(body), 5.seconds)
+
+  private def boundedParse(sql: String): Unit = bounded {
+    try { VeloSqlParser.parse(sql); () } catch {
       case _: VeloSqlParser.ParseException => ()
       case _: IllegalArgumentException => ()
       case _: NumberFormatException => ()
@@ -61,8 +65,7 @@ class ParserFuzzSpec extends AnyFunSuite {
       case _: IndexOutOfBoundsException => ()
       case _: NoSuchElementException => ()
       case _: MatchError => ()
-    })
-    Await.result(f, 5.seconds)
+    }
   }
 
   test("prefix truncations terminate") {
@@ -89,6 +92,46 @@ class ParserFuzzSpec extends AnyFunSuite {
       boundedParse(s.replaceFirst("\\)", " "))
       boundedParse(s + ")")
       boundedParse(s + " (")
+    }
+  }
+
+  private def texts(sql: String): Vector[String] = VeloSqlParser.tokenize(sql).map(_.text)
+  private type Statements = Seq[Vector[String]]
+
+  /** The script's statements as three readers see them: tokenize cut at
+    * its `;` symbols (empty groups dropped), splitStatements and
+    * SqlApp.parse, each statement then tokenized. */
+  private def statementTokens(script: String): (Statements, Statements, Statements) = {
+    val cut = VeloSqlParser.tokenize(script)
+      .foldLeft(Vector(Vector.empty[String])) { (gs, t) =>
+        if (t.kind == VeloSqlParser.TSymbol && t.text == ";") gs :+ Vector.empty
+        else gs.init :+ (gs.last :+ t.text)
+      }.filter(_.nonEmpty)
+    val split = VeloContext.splitStatements(script).map(texts)
+    val app = SqlApp.parse("-- SQL Application: P\n" + script, _ => None).statements.map(s => texts(s.sql))
+    (cut, split, app)
+  }
+
+  private def assertAgree(script: String): Int = {
+    val (cut, split, app) = bounded(statementTokens(script))
+    assert(split == cut, s"splitStatements disagrees with tokenize on: $script")
+    assert(app == cut, s"SqlApp.parse disagrees with tokenize on: $script")
+    cut.length
+  }
+
+  test("scripts split into the same statements through splitStatements, SqlApp.parse and tokenize") {
+    // each join with the number of statements it leaves between two shapes
+    val joins = Seq("; " -> 2, ";\n" -> 2, "; -- c; x\n" -> 2, ";\n-- c; x\n" -> 2,
+      " /* ; ' */; " -> 2, "; SELECT ';' AS q; " -> 3, "; SELECT * FROM kafka://a--b; " -> 3)
+    for (a <- shapes; b <- shapes; (j, n) <- joins)
+      assert(assertAgree(a + j + b) == n, a + j + b)
+    // a number glued to a scheme word, and an exponent sign followed by
+    // '-': tokenize lexes these as a number then a URI (whose '--' and
+    // '/*' are path text), and as 1e- then the symbol '-'
+    Seq("SELECT * FROM 1e5kafka://t--x; SELECT 2 AS y",
+      "SELECT * FROM 1e5file://d/*; SELECT 2 AS y",
+      "SELECT 1e--5 AS x; SELECT 2 AS y").foreach { script =>
+      assert(assertAgree(script) == 2, script)
     }
   }
 }

@@ -988,4 +988,33 @@ class SqlAppSpec extends AnyFunSuite with SparkTestSession {
     val err = buf.toString
     assert(err.contains("warn_latency") && err.contains("will not be collected"), err)
   }
+
+  test("an annotation is a whole-line comment outside literals and block comments; it attaches to the next statement") {
+    def one(body: String): SqlApp.AppStatement = {
+      val app = SqlApp.parse("-- SQL Application: Ann\n" + body, lookup)
+      assert(app.statements.length == 1, app.statements.map(_.sql))
+      app.statements.head
+    }
+    // an empty fragment carries the annotation to the next statement
+    val carried = one("-- @name: first\n;\nSELECT 1 AS a;")
+    assert(carried.name.contains("first") && carried.sql == "SELECT 1 AS a")
+    // inside a block comment: no annotation, and the text keeps the comment
+    val hidden = one("/* start\n-- @name: hidden\n*/ SELECT 1 AS a;")
+    assert(hidden.name.isEmpty && hidden.sql == "/* start\n-- @name: hidden\n*/ SELECT 1 AS a")
+    // after code on its line: an inline comment, kept in the text
+    val inline = one("SELECT 1 AS a -- @name: inline\n;")
+    assert(inline.name.isEmpty && inline.sql == "SELECT 1 AS a -- @name: inline")
+    // mid-statement: it names that statement and leaves its text
+    val mid = one("SELECT 1 AS a\n-- @name: mid\nFROM t;")
+    assert(mid.name.contains("mid") && mid.sql == "SELECT 1 AS a\nFROM t")
+    // an unterminated literal or block comment runs to the end of the
+    // file and stays a statement, so its parse error shows with its text
+    val open = SqlApp.parse("-- SQL Application: Ann\nSELECT 1 AS a;\nSELECT 'x;\n-- @name: y\nSELECT 2;", lookup)
+    assert(open.statements.map(_.sql) == Seq("SELECT 1 AS a", "SELECT 'x;\n-- @name: y\nSELECT 2;"))
+    assert(open.statements(1).name.isEmpty)
+    assert(intercept[ParseException](VeloSqlParser.parse(open.statements(1).sql))
+      .getMessage.contains("unterminated string"))
+    val openBlock = one("SELECT 1 AS a /* c; -- @name: z\n")
+    assert(openBlock.name.isEmpty && openBlock.sql == "SELECT 1 AS a /* c; -- @name: z")
+  }
 }
