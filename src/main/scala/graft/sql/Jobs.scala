@@ -2,7 +2,7 @@ package graft.sql
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
@@ -188,6 +188,9 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     // highest micro-batch id supervision has credited as a breaker
     // success — liveness alone is NOT success (see superviseOnce)
     var lastSeenBatch: Long = -1L
+    // the unlabeled `@metric` specs the running query observes, in the
+    // order of its observed row; set with `handle`
+    var observed: Vector[SqlApp.MetricSpec] = Vector.empty
   }
 
   private val jobs = scala.collection.mutable.LinkedHashMap[String, Job]()
@@ -195,17 +198,32 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
 
   // ---- streaming @metric collection (reference: metrics emitted per
   //      batch from running jobs, observability/metrics.rs) ----
-  // Unlabeled counters/gauges ride the job's own micro-batches as an
-  // `observe()` CollectMetrics node — NO extra pass over the data; a
-  // query listener accumulates the per-batch values into the registry.
-  // (Labeled series need a groupBy, which observe() cannot express —
-  // those stay batch-collected in SqlApp.run.)
-  // ALL metric state (specs + accumulators) synchronizes on metricSpecs:
-  // writers/readers span the caller's thread (attachMetrics, launch), the
-  // listener-bus thread (onQueryProgress), and foreachBatch threads
-  // (collectLabeled) — one lock, no mixed-lock races.
+  // Two collectors apply SqlApp's one metric rule and feed one
+  // accumulator. Unlabeled specs ride the job's own micro-batches as an
+  // `observe()` CollectMetrics node (no extra pass over the data), read
+  // by the progress listener after the batch commits. Labeled specs
+  // need a groupBy, which observe() cannot express: a changelog job's
+  // foreachBatch hook collects them before the batch commits.
+  // ALL metric state (specs, totals, marks, resources) synchronizes on
+  // metricSpecs: writers/readers span the caller's thread (attachMetrics,
+  // launch), the listener-bus thread (onQueryProgress), and foreachBatch
+  // threads (collectChangelog) — one lock, no mixed-lock races.
   private val metricSpecs = scala.collection.mutable.Map[String, Vector[SqlApp.MetricSpec]]()
-  private val counterState = scala.collection.mutable.Map[(String, String), Double]()
+
+  /** Streaming totals keyed (job, metric name, sample suffix, labels),
+    * from both collectors: counter and histogram samples add up; a
+    * gauge takes a batch's value only when the batch has one. Insertion
+    * order keeps a histogram's buckets in `le` order. */
+  private val metricTotals =
+    scala.collection.mutable.LinkedHashMap[(String, String, String, Map[String, String]), Double]()
+
+  /** Last micro-batch id accumulated per (job, collector): a crash
+    * between a batch's side effects and its checkpoint commit makes
+    * Spark re-run the batch on relaunch, and adding its values again
+    * would drift totals above the exactly-once sink (r14 review). The
+    * changelog hook runs before the commit and the listener after it,
+    * so each keeps its own mark. */
+  private val metricSeenBatch = scala.collection.mutable.Map[(String, String), Long]()
 
   /** Attach `@metric` specs to a job name BEFORE it starts; the next
     * launch observes them on the streaming plan. */
@@ -260,38 +278,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     if (config) { jobConfigs.remove(name); () }
   }
 
-  private def observable(m: SqlApp.MetricSpec): Boolean =
-    m.labels.isEmpty && (m.metricType match {
-      case "counter" => true
-      case "gauge" => m.field.isDefined
-      case _ => false
-    })
-
-  /** A labeled spec the changelog sink's per-batch hook collects: a
-    * counter or a field-bearing gauge (a labeled gauge collected by
-    * nothing was accepted and then silently never appeared; r12/r14
-    * review). */
-  private def labeledCollectable(m: SqlApp.MetricSpec): Boolean =
-    m.labels.nonEmpty && (m.metricType == "counter" || (m.metricType == "gauge" && m.field.isDefined))
-
-  /** LABELED streaming counters: observe() cannot express a groupBy, so
-    * these are aggregated per micro-batch inside a changelog job's
-    * own foreachBatch (one extra agg on the already-materialized batch
-    * — only label-combo totals reach the driver) and accumulated across
-    * batches. Final-row jobs keep the exactly-once file sink and
-    * collect only unlabeled metrics via observe(). */
-  private val labeledState = scala.collection.mutable.Map[(String, String, Map[String, String]), Double]()
-
-  // last micro-batch id ACCUMULATED per job, one map per collection
-  // path: a crash between the batch's side effects and the checkpoint
-  // commit makes Spark RE-RUN the batch on relaunch, and re-adding its
-  // counter values would drift totals above the exactly-once sink —
-  // the same re-credit hazard lastSeenBatch guards for breaker
-  // successes (r14 review). Epoch-scoped like all metric state
-  // (batchIds restart at 0 on an epoch bump); guarded by metricSpecs.
-  private val labeledSeenBatch = scala.collection.mutable.Map[String, Long]()
-  private val observedSeenBatch = scala.collection.mutable.Map[String, Long]()
-
   // ---- resource tracking (reference: sql/execution/resource_manager.rs —
   //      named resources with limits, peak/violation tracking, hard
   //      enforcement). Usage feeds from StreamingQueryProgress, so the
@@ -300,118 +286,50 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
   //      job "*". Guarded by the metricSpecs lock like all metric state. ----
   private val resourceState = scala.collection.mutable.Map[(String, String), Resources.Usage]()
 
-  private def collectLabeled(jobName: String, batch: DataFrame, batchId: Long): Unit = {
-    // replayed batch (crash-loop relaunch re-runs the uncommitted
-    // batch): its values are already in the totals — skip, like the
-    // idempotent sink write effectively does (r14 review)
-    val seen = metricSpecs.synchronized(labeledSeenBatch.getOrElse(jobName, -1L))
-    if (batchId <= seen) return
-    // counters AND field-bearing gauges (labeledCollectable); gauge
-    // semantics are last-write-wins per label combo
-    val specs = metricSpecs.synchronized(metricSpecs.getOrElse(jobName, Vector.empty))
-      .filter(labeledCollectable)
-    // PHASE 1 — every Spark action runs BEFORE any state mutates: a
-    // transient collect() failure (executor loss) aborts with the
-    // high-water mark UNMOVED and the totals untouched, so Spark's
-    // replay of this batchId accumulates cleanly. Marking first lost
-    // the batch forever (undercount); accumulating spec-by-spec would
-    // double-count the earlier specs on the replay (r14 review
-    // follow-up).
-    val collected = specs.map { m =>
-      val agg =
-        // ignoreNulls, like the observe path's gauge: a group whose last
-        // record carries a null field must RETAIN the gauge's prior
-        // value, not report null (which the row handler below skips)
-        if (m.metricType == "gauge") last(col(m.field.get).cast("double"), ignoreNulls = true)
-        else m.field.map(f => sum(col(f).cast("double"))).getOrElse(count(lit(1)).cast("double"))
-      m -> SqlApp.metricInput(batch, m)
-        .groupBy(m.labels.map(col): _*).agg(agg.as("_v")).collect()
-    }
-    // PHASE 2 — commit all mutations and the high-water mark in ONE
-    // lock acquisition (pure in-memory; nothing here can fail partway).
-    // Series snapshots across ALL jobs (not this job's slice: the sink
-    // REPLACES the named series wholesale, so a one-job push would
-    // erase every other job's same-named counter); the sink is invoked
-    // OUTSIDE the metricSpecs lock — the documented order is
-    // JobManager → metricSpecs, and an external sink that touches the
-    // manager from under metricSpecs would be an AB/BA deadlock
-    val pushes = metricSpecs.synchronized {
-      // re-check under the lock: foreachBatch calls for ONE query are
-      // serial, but a concurrent epoch reset must not be overwritten
-      if (batchId <= labeledSeenBatch.getOrElse(jobName, -1L)) Vector.empty
-      else {
-        labeledSeenBatch(jobName) = batchId
-        collected.map { case (m, rows) =>
-          rows.foreach { r =>
-            val labels = m.labels.map(l => l -> String.valueOf(r.getAs[Any](l))).toMap + ("job" -> jobName)
-            val key = (jobName, m.name, labels)
-            val raw = r.get(m.labels.length)
-            // an all-null gauge group keeps its last REAL value (the
-            // observe path's rule) — writing 0.0 reset the gauge on any
-            // batch whose group carried only null fields (r14 review)
-            if (!(raw == null && m.metricType == "gauge")) {
-              val v = raw match {
-                case null => 0.0
-                case n: java.lang.Number => n.doubleValue()
-                case other => other.toString.toDouble
-              }
-              // counters ACCUMULATE across micro-batches; gauges overwrite
-              labeledState(key) =
-                if (m.metricType == "gauge") v
-                else labeledState.getOrElse(key, 0.0) + v
-            }
-          }
-          val series = labeledState.collect {
-            case ((_, n, ls), v) if n == m.name => (("", ls, v))
-          }.toVector
-          (m.name, m.metricType, m.help, series)
+  /** Add one batch's samples to the totals unless `collector` already
+    * counted this batch id. Returns what to push: each name's series
+    * across all jobs and both collectors, as the sink replaces the
+    * name's streaming slice wholesale. The caller pushes outside the
+    * lock (order JobManager → metricSpecs; a sink must never run under
+    * metricSpecs). */
+  private def accumulate(job: String, collector: String, batchId: Long,
+                         collected: Seq[(SqlApp.MetricSpec, Vector[SqlApp.Sample])])
+      : Seq[(String, String, Option[String], Vector[SqlApp.Sample])] = metricSpecs.synchronized {
+    if (batchId <= metricSeenBatch.getOrElse((job, collector), -1L)) Nil
+    else {
+      metricSeenBatch((job, collector)) = batchId
+      collected.foreach { case (m, samples) =>
+        samples.foreach { case (sfx, ls, v) =>
+          val k = (job, m.name, sfx, ls)
+          metricTotals(k) = if (m.metricType == "gauge") v else metricTotals.getOrElse(k, 0.0) + v
         }
       }
+      collected.map { case (m, _) =>
+        (m.name, m.metricType, m.help,
+          metricTotals.collect { case ((_, n, sfx, ls), v) if n == m.name => (sfx, ls, v) }.toVector)
+      }
     }
-    pushes.foreach { case (n, t, h, s) => metricSink(n, t, h, s) }
   }
 
-  private def observedDf(jobName: String, df: DataFrame): DataFrame = {
-    val specs = metricSpecs.synchronized(metricSpecs.getOrElse(jobName, Vector.empty))
-      .filter(observable)
+  /** A changelog job's per-batch hook for its labeled specs. Every Spark
+    * action runs before any state changes: a failed collect leaves the
+    * mark unmoved and the totals untouched, so Spark's replay of this
+    * batch id accumulates cleanly (r14 review). */
+  private def collectChangelog(jobName: String, specs: Vector[SqlApp.MetricSpec],
+                               batch: DataFrame, batchId: Long): Unit =
+    if (batchId > metricSpecs.synchronized(metricSeenBatch.getOrElse((jobName, "changelog"), -1L))) {
+      val collected = specs.map(m => m -> SqlApp.collectMetric(batch, m, Map("job" -> jobName)))
+      accumulate(jobName, "changelog", batchId, collected).foreach(metricSink.tupled)
+    }
+
+  /** `df` observing each of `specs` (unlabeled) on its own
+    * micro-batches, one aggregate struct per spec in order. */
+  private def observed(jobName: String, df: DataFrame, specs: Vector[SqlApp.MetricSpec]): DataFrame =
     if (specs.isEmpty) df
     else {
-      val aggs = specs.map { m =>
-        // @metric_condition / @metric_sample_rate gate WHICH records feed
-        // the metric. Both are expressible INSIDE the CollectMetrics
-        // aggregate — the condition as a when(), the sampling as the same
-        // deterministic full-row-hash test SqlApp.metricInput uses (a
-        // deterministic expression, so it is legal in an aggregate where
-        // rand() would not be) — so gated metrics still ride the job's
-        // own micro-batches with zero extra passes.
-        val gate: Option[Column] = {
-          val cond = m.condition.map(expr)
-          val samp = if (m.sampleRate < 1.0)
-            // sampleHashCols, not every column: xxhash64 over a MapType
-            // (the _headers map) fails analysis and would kill the
-            // whole launch (r14 review; same formula as metricInput)
-            Some(pmod(xxhash64(SqlApp.sampleHashCols(df): _*), lit(1000000L))
-              < lit((m.sampleRate * 1000000L).toLong))
-          else None
-          (cond, samp) match {
-            case (Some(c), Some(s)) => Some(c && s)
-            case (c, s) => c.orElse(s)
-          }
-        }
-        m.metricType match {
-          case "counter" =>
-            val inc = m.field.map(f => col(f).cast("double")).getOrElse(lit(1.0))
-            sum(gate.map(g => when(g, inc).otherwise(lit(0.0))).getOrElse(inc)).as(m.name)
-          case _ =>
-            val v = col(m.field.get).cast("double")
-            // gauge: a non-matching record contributes null, which
-            // last(ignoreNulls) skips — the gauge retains its value
-            last(gate.map(g => when(g, v)).getOrElse(v), ignoreNulls = true).as(m.name)
-        }
-      }
+      val aggs = specs.map(m => SqlApp.metricAggregate(m, SqlApp.metricGate(df, m)))
       df.observe(s"graft-metrics-$jobName", aggs.head, aggs.tail: _*)
     }
-  }
 
   /** A job's accumulated metric state is scoped to its checkpoint epoch:
     * DEPLOY/ROLLBACK/START-with-new-body reprocesses the source from
@@ -419,13 +337,11 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     * count every re-read record (old total + full re-count) while the
     * sink holds exactly one copy. Called wherever `epoch` is bumped. */
   private def resetMetricState(jobName: String): Unit = metricSpecs.synchronized {
-    counterState.filterInPlace { case ((j, _), _) => j != jobName }
-    labeledState.filterInPlace { case ((j, _, _), _) => j != jobName }
+    metricTotals.filterInPlace { case ((j, _, _, _), _) => j != jobName }
     // the replay guards are batchId high-water marks — a fresh epoch
     // restarts batchIds at 0, so a stale mark would silently drop the
     // whole new epoch's accumulation
-    labeledSeenBatch.remove(jobName)
-    observedSeenBatch.remove(jobName)
+    metricSeenBatch.filterInPlace { case ((j, _), _) => j != jobName }
     // resource usage is epoch-scoped for the same reason: a fresh epoch's
     // query rebuilds state from scratch, so the old current/peak describe
     // a query that no longer exists
@@ -443,7 +359,6 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       recordResources(e.progress)
-      val om = e.progress.observedMetrics
       // Scope to queries THIS manager launched: several managers can
       // share one session (one listener bus), and a same-named job in
       // another manager would otherwise double-count into our state.
@@ -454,65 +369,20 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       // review); runId is unique per run. Captured BEFORE the
       // metricSpecs lock — lock order is JobManager → metricSpecs,
       // never the reverse.
-      val owned: Set[String] = JobManager.this.synchronized {
-        jobs.collect { case (n, j) if j.handle.exists(_.runId == e.progress.runId) => n }.toSet
+      val owned = JobManager.this.synchronized {
+        jobs.collect { case (n, j) if j.handle.exists(_.runId == e.progress.runId) => (n, j.observed) }.toVector
       }
-      owned.foreach(recordBatchSpan(_, e.progress))
-      // pushes buffered under the lock, sink invoked OUTSIDE it (lock
-      // order JobManager → metricSpecs; an external sink must never run
-      // under metricSpecs), and each push carries the COMPLETE per-name
-      // series across jobs — the sink replaces the named series
-      // wholesale, so a one-job slice would erase the other jobs'
-      // same-named metrics on every micro-batch
-      val pushes = scala.collection.mutable.ArrayBuffer[
-        (String, String, Option[String], Vector[(String, Map[String, String], Double)])]()
-      metricSpecs.synchronized {
-        metricSpecs.foreach { case (jobName, specs) =>
-          // a replayed micro-batch (crash-loop relaunch) fires its
-          // progress event AGAIN — its observed values are already in
-          // the totals, so re-crediting would drift counters above the
-          // exactly-once sink (r14 review; same high-water rule as
-          // lastSeenBatch for breaker successes)
-          val batchId = e.progress.batchId
-          val fresh = owned(jobName) && {
-            val seen = observedSeenBatch.getOrElse(jobName, -1L)
-            if (batchId <= seen) false
-            else { observedSeenBatch(jobName) = batchId; true }
-          }
-          Option(om.get(s"graft-metrics-$jobName")).filter(_ => fresh).foreach { row =>
-            // the observed row reflects the specs the RUNNING query was
-            // built with — a spec attached after launch is absent until
-            // relaunch; fieldIndex on it would throw inside the listener
-            // and silently kill accumulation for the whole job
-            specs.filter(observable)
-              .filter(m => row.schema.fieldNames.contains(m.name)).foreach { m =>
-              val idx = row.schema.fieldIndex(m.name)
-              val isNull = row.isNullAt(idx)
-              // Empty micro-batch → null observed value. A counter adds
-              // nothing; a GAUGE must RETAIN its last real value, not be
-              // reset to 0 by a batch that carried no data.
-              if (!(isNull && m.metricType != "counter")) {
-                val v = if (isNull) 0.0
-                        else row.get(idx) match {
-                          case n: java.lang.Number => n.doubleValue()
-                          case other => other.toString.toDouble
-                        }
-                val key = (jobName, m.name)
-                val total = m.metricType match {
-                  case "counter" => counterState.getOrElse(key, 0.0) + v
-                  case _ => v // gauge: last batch's last value wins
-                }
-                counterState(key) = total
-                val series = counterState.collect {
-                  case ((j2, n2), v2) if n2 == m.name => ("", Map("job" -> j2), v2)
-                }.toVector
-                pushes += ((m.name, m.metricType, m.help, series))
-              }
-            }
-          }
+      owned.foreach { case (n, specs) =>
+        recordBatchSpan(n, e.progress)
+        // the observed row holds one struct per spec the RUNNING query
+        // was built with; a replayed batch fires its progress event
+        // again and `accumulate` skips it
+        Option(e.progress.observedMetrics.get(s"graft-metrics-$n")).foreach { row =>
+          val collected = specs.indices.map(i =>
+            specs(i) -> SqlApp.metricSamples(specs(i), Map("job" -> n), row.getStruct(i)))
+          accumulate(n, "observe", e.progress.batchId, collected).foreach(metricSink.tupled)
         }
       }
-      pushes.foreach { case (n, t, h, s) => metricSink(n, t, h, s) }
     }
   }
 
@@ -730,7 +600,9 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
     * materialization registered as view `<job>_out`. */
   private def launch(j: Job, v: Version): Unit = {
     val df0 = exec(v.body)
-    val df1 = if (df0.isStreaming) observedDf(j.name, df0) else df0
+    val specs = metricSpecs.synchronized(metricSpecs.getOrElse(j.name, Vector.empty))
+    val (labeled, unlabeled) = specs.partition(_.labels.nonEmpty)
+    val df1 = if (df0.isStreaming) observed(j.name, df0, unlabeled) else df0
     // partitioning applies AFTER observe so metrics see every record
     val df = jobConfigs.get(j.name).map(applyPartitioning(df1, v.body, _)).getOrElse(df1)
     if (df.isStreaming) {
@@ -814,22 +686,19 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
       val emission = graft.streaming.StreamOps.emission(df, emitOf(v.body))
       val changelog = emission == graft.streaming.StreamOps.Changelog
       // labeled specs are collected by the changelog sink's per-batch
-      // hook; histograms exist only on the batch-collection path. A
-      // spec NO streaming path collects must be named, not silently
-      // dropped: accepted by attachMetrics, it would never appear in
+      // hook; a final-row job has none, so its labeled specs are the one
+      // shape nothing collects. Name them rather than drop them
+      // silently: accepted by attachMetrics, they would never appear in
       // /metrics with no signal (r17 review)
-      val specs = metricSpecs.synchronized(metricSpecs.getOrElse(j.name, Vector.empty))
-      val uncollected = specs.filterNot(m => observable(m) || (changelog && labeledCollectable(m)))
-      if (uncollected.nonEmpty)
+      if (!changelog && labeled.nonEmpty)
         System.err.println(s"[jobs] WARNING: metric spec(s) " +
-          s"${uncollected.map(_.name).mkString(", ")} on streaming job '${j.name}' " +
-          "will not be collected: histograms are batch-only, and labeled " +
-          "counters/gauges require a changelog emission (final-row jobs collect " +
-          "only unlabeled counter / field-gauge specs via observe())")
+          s"${labeled.map(_.name).mkString(", ")} on streaming job '${j.name}' " +
+          "will not be collected: labeled specs require a changelog emission " +
+          "(EMIT CHANGES); final-row jobs collect only unlabeled specs via observe()")
       val jobName = j.name
       val onBatch =
-        if (changelog && specs.exists(labeledCollectable))
-          Some((batch: DataFrame, batchId: Long) => collectLabeled(jobName, batch, batchId))
+        if (changelog && labeled.nonEmpty)
+          Some((batch: DataFrame, batchId: Long) => collectChangelog(jobName, labeled, batch, batchId))
         else None
       val q = graft.streaming.StreamOps
         .sinkWriter(df, emission, sinkLoc, sinkFmt, sinkOpts, console, onBatch)
@@ -837,6 +706,7 @@ final class JobManager(spark: SparkSession, exec: VeloStatement => DataFrame,
         .queryName(s"graft-job-${j.name}")
         .start()
       j.handle = Some(q)
+      j.observed = unlabeled
       // the launch is known-good: commit the declared-sink reset (the
       // stash was only insurance against a failed start — see
       // stashSinkDir), or bind the epoch to the internal dir

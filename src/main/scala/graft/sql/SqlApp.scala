@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 import VeloSqlParser.ParseException
 
@@ -76,11 +76,95 @@ object SqlApp {
                               condition: Option[String] = None,
                               sampleRate: Double = 1.0)
 
+  /** One Prometheus sample: (name suffix, labels, value). The suffix is
+    * `_bucket`, `_sum` or `_count` for a histogram and empty otherwise. */
+  type Sample = (String, Map[String, String], Double)
+
+  // ---- the one `@metric` rule (docs/DIALECT.md "`@metric`
+  //      annotations"): a batch statement, a streaming job's observe()
+  //      and its changelog hook all gate, aggregate and decode here ----
+
+  /** Which records feed `m`: its `@metric_condition` and its
+    * deterministic sample, a full-row xxhash64 mod 10⁶ against
+    * rate·10⁶, so a replayed batch samples the identical subset.
+    * Applied as a `where` before a `groupBy`, so a label group with no
+    * matching rows stays absent, and as `when` inside an `observe`
+    * aggregate, where a `where` cannot go. */
+  private[sql] def metricGate(df: DataFrame, m: MetricSpec): Option[Column] = {
+    import org.apache.spark.sql.functions.{expr, lit, pmod, xxhash64}
+    val sample =
+      if (m.sampleRate < 1.0)
+        Some(pmod(xxhash64(sampleHashCols(df): _*), lit(1000000L)) < lit((m.sampleRate * 1000000L).toLong))
+      else None
+    (m.condition.map(expr) ++ sample).reduceOption(_ && _)
+  }
+
+  /** The columns the sampling hash covers: every column whose type
+    * xxhash64 can hash. A MapType (the `_headers` map registerStreamLike
+    * attaches) fails analysis outright; an all-map row degrades to a
+    * constant hash, all-or-nothing sampling rather than a crash. Names
+    * are backtick-quoted, as a bare `col("a.b")` reads nested access. */
+  private def sampleHashCols(df: DataFrame): Seq[Column] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val cs = df.schema.fields.filter(f => graft.operators.Cols.hashable(f.dataType))
+      .map(f => col(s"`${f.name.replace("`", "``")}`")).toSeq
+    if (cs.nonEmpty) cs else Seq(lit(1))
+  }
+
+  /** `m`'s aggregates over its gated records, as one struct column:
+    *  - counter: the sum of `@metric_field`, or the row count;
+    *  - gauge: the last non-null `@metric_field` ("last" follows
+    *    partition order, so order or single-partition the input when
+    *    the exact value matters);
+    *  - histogram: count, sum, then one count per `le` boundary. */
+  private[sql] def metricAggregate(m: MetricSpec, gate: Option[Column]): Column = {
+    import org.apache.spark.sql.functions.{col, count, last, lit, struct, sum, when}
+    val raw = m.field.fold(lit(1.0))(f => col(f).cast("double"))
+    val v = gate.fold(raw)(when(_, raw))
+    val aggs = m.metricType match {
+      case "counter" => Seq(if (m.field.isDefined) sum(v) else count(v))
+      case "gauge" => Seq(last(v, ignoreNulls = true))
+      case _ => Seq(count(v), sum(v)) ++ m.buckets.map(b => sum(when(v <= b, 1L).otherwise(0L)))
+    }
+    struct(aggs: _*)
+  }
+
+  /** A [[metricAggregate]] value as samples: a null gauge emits nothing
+    * (it keeps its last real value, never a fabricated 0), a count or
+    * sum of nothing is 0, and a histogram expands to cumulative
+    * `_bucket`s, `le="+Inf"`, `_sum` and `_count`. */
+  private[sql] def metricSamples(m: MetricSpec, labels: Map[String, String], agg: Row): Vector[Sample] = {
+    def num(i: Int): Option[Double] = if (agg.isNullAt(i)) None else Some(agg.getAs[Number](i).doubleValue)
+    def orZero(i: Int): Double = num(i).getOrElse(0.0)
+    def le(b: String) = labels + ("le" -> b)
+    m.metricType match {
+      case "counter" => Vector(("", labels, orZero(0)))
+      case "gauge" => num(0).map(("", labels, _)).toVector
+      case _ =>
+        m.buckets.zipWithIndex.map { case (b, i) =>
+          ("_bucket", le(if (b.isWhole) b.toLong.toString else b.toString), orZero(2 + i))
+        } ++ Vector(("_bucket", le("+Inf"), orZero(0)), ("_sum", labels, orZero(1)), ("_count", labels, orZero(0)))
+    }
+  }
+
+  /** `m` over a batch frame in one `groupBy(labels).agg` pass, each
+    * group's labels plus `extra`. Label values are read by position: a
+    * `@metric_labels` casing variant resolves in `groupBy`, but the
+    * output column keeps its defined name. */
+  private[sql] def collectMetric(df: DataFrame, m: MetricSpec,
+                                 extra: Map[String, String] = Map.empty): Vector[Sample] = {
+    import org.apache.spark.sql.functions.col
+    metricGate(df, m).fold(df)(df.where).groupBy(m.labels.map(col): _*)
+      .agg(metricAggregate(m, None)).collect().toVector.flatMap { r =>
+        val labels = m.labels.indices.map(i => m.labels(i) -> String.valueOf(r.get(i))).toMap ++ extra
+        metricSamples(m, labels, r.getStruct(m.labels.length))
+      }
+  }
+
   /** One statement with its attached annotations:
-    *  - `-- @metric…` — see [[MetricSpec]]; counters are COLLECTED by
-    *    `run` (a labeled count over the statement's result lands in the
-    *    context's metrics registry — executor-side aggregation, only
-    *    label-combo counts reach the driver).
+    *  - `-- @metric…` — see [[MetricSpec]]; which collector serves
+    *    which statement is set out once in docs/DIALECT.md, "`@metric`
+    *    annotations".
     *  - `-- @partition-count: n` — the statement's parallelism hint;
     *    `run` applies it as `repartition(n)` on the result (the Spark
     *    realization of the reference's V2 partition count). Invalid
@@ -396,39 +480,6 @@ object SqlApp {
     SqlApplication(md, statements)
   }
 
-  /** A metric's record stream: `df` narrowed by the spec's
-    * `@metric_condition`, then deterministically sampled at
-    * `@metric_sample_rate` — a stable full-row hash (xxhash64 mod 10⁶)
-    * against rate·10⁶, so a replayed batch samples the identical subset
-    * (the reference samples randomly for overhead; determinism is
-    * strictly stronger and keeps the count oracle-able). */
-  /** The columns the deterministic sampling hash covers: every column
-    * whose type xxhash64 CAN hash — MapType (e.g. the `_headers` map
-    * registerStreamLike attaches) fails analysis outright, so a result
-    * carrying one would abort the whole run at metric time (r14
-    * review). Excluding maps keeps the hash deterministic on the
-    * remaining columns; an (improbable) all-map row set degrades to a
-    * constant hash — all-or-nothing sampling, never a crash. Shared
-    * with JobManager's observe-gate, which embeds the same test. */
-  private[sql] def sampleHashCols(df: DataFrame): Seq[org.apache.spark.sql.Column] = {
-    // backtick-quoted: a bare col("a.b") parses as nested access and
-    // dies (or mis-resolves) for column names carrying dots (r15 review)
-    val cs = df.schema.fields.filter(f => graft.operators.Cols.hashable(f.dataType))
-      .map(f => org.apache.spark.sql.functions.col(
-        s"`${f.name.replace("`", "``")}`")).toSeq
-    if (cs.nonEmpty) cs else Seq(org.apache.spark.sql.functions.lit(1))
-  }
-
-  private[sql] def metricInput(df: DataFrame, m: MetricSpec): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit, pmod, xxhash64}
-    var d = df
-    m.condition.foreach(c => d = d.where(expr(c)))
-    if (m.sampleRate < 1.0)
-      d = d.where(pmod(xxhash64(sampleHashCols(df): _*), lit(1000000L))
-        < lit((m.sampleRate * 1000000L).toLong))
-    d
-  }
-
   /** A fragment's statement text: its source span with each whole-line
     * `--` comment and each blank line dropped, line breaks as '\n',
     * trimmed. Literals and block comments keep every line. */
@@ -455,29 +506,19 @@ object SqlApp {
       }
     }
     gap(f.end)
-    sb.toString.replace("\r\n", "\n").replace('\r', '\n').trim
+    sb.toString.trim
   }
 
   /** Parse + execute an application against a context; returns each
     * statement's result in order. `@partition-count: n` becomes a
-    * `repartition(n)` on the statement's (batch) result; `@metric`s of
-    * every type are collected into the context's metrics registry over
-    * the statement's result (executor-side aggregation — only
-    * label-combo aggregates reach the driver):
-    *  - counter — row count, or sum of `@metric_field` when set;
-    *  - gauge — the latest `@metric_field` value per label series
-    *    (the reference's last-write-wins scrape semantics; "latest"
-    *    follows partition evaluation order — a gauge over an unordered
-    *    multi-partition result is inherently scrape-order semantics,
-    *    not a deterministic aggregate; order or single-partition the
-    *    statement when exactness matters);
-    *  - histogram — cumulative `le`-bucket counts + `_sum`/`_count`
-    *    per label series, one aggregation pass for ALL buckets. */
+    * `repartition(n)` on the statement's (batch) result; a batch
+    * statement's `@metric`s are collected over its result by
+    * [[collectMetric]] into the statement's own registry slice
+    * (executor-side aggregation: only label-group aggregates reach the
+    * driver). */
   def run(ctx: VeloContext, content: String,
           env: String => Option[String] = sys.env.get,
           onWave: (Int, Seq[String]) => Unit = (_, _) => ()): (SqlApplication, Seq[DataFrame]) = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{col, count, last, lit, sum, when}
     val app = parse(content, env)
     def execOne(s: AppStatement, idx: Int): DataFrame = {
       // metrics on a JOB statement belong to the job's data, not to the
@@ -544,7 +585,6 @@ object SqlApp {
           s"non-job statement are not collected (${s.metrics.map(_.name).mkString(", ")}); " +
           "wrap the statement in START JOB / DEPLOY JOB for streaming metrics")
       target.withFilter(_ => s.metrics.nonEmpty).foreach { df =>
-        val specs = s.metrics
         // The statement plan executes ONCE into the cache; every metric
         // (and label series) is then a cheap scan of the cached result
         // instead of a full re-execution per metric. A df that is
@@ -555,80 +595,12 @@ object SqlApp {
         // every later reader (r11 review).
         val preCached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
         if (!preCached) df.persist()
-        try specs.foreach { m =>
-          // Option, not a null→0.0 coercion: an unlabeled GAUGE whose
-          // input has zero rows (or an all-null field) must emit NO
-          // series, not a fabricated 0 that was never in the data — the
-          // streaming listener states the same rule ('a GAUGE must
-          // RETAIN its last real value, not be reset to 0'). Counters
-          // and histogram counts keep 0 (a count of nothing IS 0)
-          // (r17 review).
-          def num(v: Any): Option[Double] = v match {
-            case null => None
-            case n: java.lang.Number => Some(n.doubleValue())
-            case other => Some(other.toString.toDouble)
-          }
-          // the metric's input: the (cached) result narrowed by its
-          // @metric_condition, then deterministically sampled — a
-          // stable full-row hash against the rate, so replays and the
-          // oracle see the identical subset
-          val in = SqlApp.metricInput(df, m)
-          // one aggregation pass per metric, grouped by its label columns
-          def collectAgg(aggs: Seq[Column]): Vector[(Map[String, String], Seq[Option[Double]])] =
-            if (m.labels.isEmpty)
-              in.agg(aggs.head, aggs.tail: _*).collect().toVector
-                .map(r => Map.empty[String, String] -> aggs.indices.map(i => num(r.get(i))))
-            else {
-              val out = in.groupBy(m.labels.map(col): _*).agg(aggs.head, aggs.tail: _*)
-              // label values read by POSITION, not getAs: groupBy
-              // resolves a @metric_labels casing variant fine, but the
-              // output field keeps the column's DEFINED name and the
-              // case-sensitive getAs then crashed a statement whose
-              // aggregation had already succeeded (r14 review)
-              out.collect().toVector.map { r =>
-                m.labels.zipWithIndex.map { case (l, ix) =>
-                  l -> String.valueOf(r.get(ix)) }.toMap ->
-                  aggs.indices.map(i => num(r.get(m.labels.length + i)))
-              }
-            }
-          def fmtLe(b: Double): String =
-            if (b.isWhole) b.toLong.toString else b.toString
-          // each statement pushes into its OWN registry slice: the
-          // registry replaces per slice, so two statements (or a
-          // statement and a streaming job) declaring the same metric
-          // name no longer erase each other's series (r17 review)
-          val slice = s"stmt$idx"
-          m.metricType match {
-            case "counter" =>
-              val agg = m.field.map(f => sum(col(f).cast("double"))).getOrElse(count(lit(1)))
-              ctx.recordMetricSlice(m.name, slice, m.metricType, m.help,
-                // a count of nothing IS 0; a field-sum over zero rows
-                // likewise honestly reports 0 increments
-                collectAgg(Seq(agg)).map { case (ls, vs) => ("", ls, vs.head.getOrElse(0.0)) })
-            case "gauge" =>
-              val agg = last(col(m.field.get).cast("double"), ignoreNulls = true)
-              ctx.recordMetricSlice(m.name, slice, m.metricType, m.help,
-                // a null aggregate (zero rows / all-null field) emits NO
-                // series — never a fabricated 0 (see num)
-                collectAgg(Seq(agg)).flatMap { case (ls, vs) =>
-                  vs.head.map(v => ("", ls, v)) })
-            case "histogram" =>
-              val f = col(m.field.get).cast("double")
-              val aggs = Seq(count(f), sum(f)) ++
-                m.buckets.map(b => sum(when(f <= b, 1L).otherwise(0L)))
-              val series = collectAgg(aggs).flatMap { case (ls, vs) =>
-                val cnt = vs(0).getOrElse(0.0)
-                val total = vs(1).getOrElse(0.0)
-                m.buckets.zipWithIndex.map { case (b, i) =>
-                  ("_bucket", ls + ("le" -> fmtLe(b)), vs(2 + i).getOrElse(0.0))
-                } ++ Vector(
-                  ("_bucket", ls + ("le" -> "+Inf"), cnt),
-                  ("_sum", ls, total), ("_count", ls, cnt))
-              }
-              ctx.recordMetricSlice(m.name, slice, m.metricType, m.help, series)
-            case _ => // unknown type already filtered at parse
-          }
-        } finally { if (!preCached) df.unpersist(); () }
+        // each statement pushes into its OWN registry slice, so two
+        // statements (or a statement and a streaming job) declaring the
+        // same metric name keep each other's series (r17 review)
+        try s.metrics.foreach(m => ctx.recordMetricSlice(m.name, s"stmt$idx", m.metricType, m.help,
+          collectMetric(df, m)))
+        finally { if (!preCached) df.unpersist(); () }
       }
       s.partitionCount match {
         case Some(n) if !df.isStreaming => df.repartition(n)

@@ -182,8 +182,8 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
     * Job bodies pass SqlValidator's analyzer gate before launching. */
   val jobManager = new JobManager(spark, execStatement,
     body => SqlValidator.validateParsed(this, body).errors,
-    // the listener's own slice: its pushes carry the complete per-name
-    // series ACROSS JOBS (Jobs.scala builds them that way), but a batch
+    // the streaming collectors' own slice: each push carries the
+    // complete per-name series across jobs and both collectors, but a batch
     // statement's same-named series lives in a different slice and must
     // survive every micro-batch push (r17 review)
     (n, t, h, s) => recordMetricSlice(n, "streaming", t, h, s),
@@ -283,18 +283,14 @@ final class VeloContext(val spark: SparkSession, val defaultTimeCol: String = "t
     * on every micro-batch of a same-named streaming-job metric —
     * Jobs.scala's listener documents exactly this erase hazard and
     * guards it across jobs, but cross-DOMAIN pushes still collided).
-    * Populated by `SqlApp.run` and the job listener; rendered by
+    * Populated by `SqlApp.run` and JobManager's streaming collectors
+    * (docs/DIALECT.md, "`@metric` annotations"); rendered by
     * `prometheusText` in the exposition format the reference's /metrics
     * endpoint serves. */
   val metricsRegistry: scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.LinkedHashMap[String, Vector[(String, Map[String, String], Double)]]] =
     scala.collection.mutable.LinkedHashMap.empty
   private val metricsHelp = scala.collection.mutable.Map[String, (String, String)]()
-
-  def recordMetric(name: String, metricType: String, help: Option[String],
-                   series: Vector[(Map[String, String], Long)]): Unit =
-    recordMetricSeries(name, metricType, help,
-      series.map { case (labels, v) => ("", labels, v.toDouble) })
 
   /** Record into the DEFAULT slice — callers that own their metric name
     * outright (the wave loader's load gauges, ad-hoc recorders). */

@@ -57,7 +57,7 @@ object VeloSqlParser {
     case object Uri extends LexKind          // kafka://… or file://…, scheme included
     case object Number extends LexKind
     case object Quoted extends LexKind       // '…', "…" or `…`, quotes included
-    case object LineComment extends LexKind  // '--' up to, not including, the '\n'
+    case object LineComment extends LexKind  // '--' up to, not including, a '\r' or '\n'
     case object BlockComment extends LexKind
     case object Symbol extends LexKind
     case object Other extends LexKind        // one character the dialect has no token for
@@ -94,7 +94,8 @@ object VeloSqlParser {
         var closed = true
         val kind =
           if (c == '-' && i + 1 < n && sql(i + 1) == '-') {
-            while (i < n && sql(i) != '\n') i += 1
+            // ends at '\r' or '\n', as in Spark's own grammar
+            while (i < n && sql(i) != '\n' && sql(i) != '\r') i += 1
             LineComment
           } else if (c.isLetter || c == '_') {
             while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1

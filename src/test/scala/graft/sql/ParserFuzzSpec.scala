@@ -127,10 +127,12 @@ class ParserFuzzSpec extends AnyFunSuite {
       assert(assertAgree(a + j + b) == n, a + j + b)
     // a number glued to a scheme word, and an exponent sign followed by
     // '-': tokenize lexes these as a number then a URI (whose '--' and
-    // '/*' are path text), and as 1e- then the symbol '-'
+    // '/*' are path text), and as 1e- then the symbol '-'; a '--'
+    // comment ends at a lone '\r', so the ';' after it is a symbol
     Seq("SELECT * FROM 1e5kafka://t--x; SELECT 2 AS y",
       "SELECT * FROM 1e5file://d/*; SELECT 2 AS y",
-      "SELECT 1e--5 AS x; SELECT 2 AS y").foreach { script =>
+      "SELECT 1e--5 AS x; SELECT 2 AS y",
+      "SELECT 1 AS x -- c\r; SELECT 2 AS y").foreach { script =>
       assert(assertAgree(script) == 2, script)
     }
   }

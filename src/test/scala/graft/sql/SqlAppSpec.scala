@@ -970,17 +970,17 @@ class SqlAppSpec extends AnyFunSuite with SparkTestSession {
     in.addData(Seq((1L, 10.0)))
     val buf = new java.io.ByteArrayOutputStream()
     val prev = System.err
-    // a histogram on a STREAMING job is collected by nothing (observe()
-    // and the foreachBatch path both exclude it) — pre-fix it was
-    // accepted silently and never appeared in /metrics
+    // a labeled spec on a final-row STREAMING job is collected by
+    // nothing (observe() cannot group, and only a changelog sink has a
+    // per-batch hook) — pre-fix such a spec was accepted silently and
+    // never appeared in /metrics
     try {
       System.setErr(new java.io.PrintStream(buf, true))
       SqlApp.run(ctx,
-        """-- SQL Application: WarnHist
+        """-- SQL Application: WarnLabeled
           |-- @metric: warn_latency
-          |-- @metric_type: histogram
-          |-- @metric_field: ms
-          |-- @metric_buckets: 100, 500
+          |-- @metric_type: counter
+          |-- @metric_labels: id
           |START JOB warnjob AS SELECT id, ms FROM warn_events
           |""".stripMargin, lookup)
     } finally System.setErr(prev)
@@ -1016,5 +1016,110 @@ class SqlAppSpec extends AnyFunSuite with SparkTestSession {
       .getMessage.contains("unterminated string"))
     val openBlock = one("SELECT 1 AS a /* c; -- @name: z\n")
     assert(openBlock.name.isEmpty && openBlock.sql == "SELECT 1 AS a /* c; -- @name: z")
+  }
+
+  /** Poll `ctx`'s exposition text until it holds every line of `expect`
+    * (listener events arrive asynchronously), then assert it does. */
+  private def awaitLines(ctx: VeloContext, jobs: Seq[String], expect: Set[String]): Unit = {
+    jobs.foreach(ctx.jobManager.awaitIdle)
+    def missing = expect -- ctx.prometheusText.linesIterator.toSet
+    val deadline = System.nanoTime() + 15L * 1000000000L
+    while (missing.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(missing.isEmpty, s"missing $missing in:\n${ctx.prometheusText}")
+  }
+
+  test("a labeled changelog job and an unlabeled final-row job sharing a metric name both keep their series") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val a = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Double)]
+    val b = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
+    val ctx = new VeloContext(spark)
+    ctx.register("shared_a", a.toDF().toDF("symbol", "amount"))
+    ctx.register("shared_b", b.toDF().toDF("id", "amount"))
+    a.addData(Seq(("AAPL", 1.0), ("MSFT", 2.0), ("AAPL", 3.0)))
+    b.addData(Seq((1L, 1.0), (2L, 2.0)))
+    // both collectors push the name into the one streaming registry
+    // slice; pre-fix each replaced it with only its own jobs' series
+    SqlApp.run(ctx,
+      """-- SQL Application: SharedName
+        |-- @metric: shared_total
+        |-- @metric_labels: symbol
+        |START JOB ajob AS SELECT symbol, amount FROM shared_a EMIT CHANGES;
+        |
+        |-- @metric: shared_total
+        |START JOB bjob AS SELECT id, amount FROM shared_b;
+        |""".stripMargin, lookup)
+    val jobs = Seq("ajob", "bjob")
+    awaitLines(ctx, jobs, Set("""shared_total{job="ajob",symbol="AAPL"} 2""",
+      """shared_total{job="ajob",symbol="MSFT"} 1""", """shared_total{job="bjob"} 2"""))
+    b.addData(Seq((3L, 3.0)))
+    awaitLines(ctx, jobs, Set("""shared_total{job="ajob",symbol="AAPL"} 2""",
+      """shared_total{job="ajob",symbol="MSFT"} 1""", """shared_total{job="bjob"} 3"""))
+    a.addData(Seq(("MSFT", 4.0)))
+    awaitLines(ctx, jobs, Set("""shared_total{job="ajob",symbol="AAPL"} 2""",
+      """shared_total{job="ajob",symbol="MSFT"} 2""", """shared_total{job="bjob"} 3"""))
+    ctx.sql("STOP JOB ajob")
+    ctx.sql("STOP JOB bjob")
+  }
+
+  test("streaming histograms: unlabeled through observe() on a final-row job, labeled per label on a changelog job") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val fin = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Double)]
+    val chg = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Double)]
+    val ctx = new VeloContext(spark)
+    ctx.register("hist_final", fin.toDF().toDF("symbol", "ms"))
+    ctx.register("hist_changes", chg.toDF().toDF("symbol", "ms"))
+    fin.addData(Seq(("AAPL", 50.0), ("MSFT", 300.0)))
+    chg.addData(Seq(("AAPL", 50.0), ("MSFT", 300.0)))
+    SqlApp.run(ctx,
+      """-- SQL Application: StreamHist
+        |-- @metric: lat_ms
+        |-- @metric_type: histogram
+        |-- @metric_field: ms
+        |-- @metric_buckets: 100, 500
+        |START JOB histfinal AS SELECT symbol, ms FROM hist_final;
+        |
+        |-- @metric: lat_by_symbol_ms
+        |-- @metric_type: histogram
+        |-- @metric_field: ms
+        |-- @metric_labels: symbol
+        |-- @metric_buckets: 100, 500
+        |START JOB histchanges AS SELECT symbol, ms FROM hist_changes EMIT CHANGES;
+        |""".stripMargin, lookup)
+    val jobs = Seq("histfinal", "histchanges")
+    awaitLines(ctx, jobs, Set(
+      """lat_ms_bucket{job="histfinal",le="100"} 1""", """lat_ms_bucket{job="histfinal",le="500"} 2""",
+      """lat_ms_bucket{job="histfinal",le="+Inf"} 2""",
+      """lat_ms_sum{job="histfinal"} 350""", """lat_ms_count{job="histfinal"} 2""",
+      """lat_by_symbol_ms_bucket{job="histchanges",le="100",symbol="AAPL"} 1""",
+      """lat_by_symbol_ms_bucket{job="histchanges",le="100",symbol="MSFT"} 0""",
+      """lat_by_symbol_ms_bucket{job="histchanges",le="500",symbol="MSFT"} 1""",
+      """lat_by_symbol_ms_sum{job="histchanges",symbol="MSFT"} 300""",
+      """lat_by_symbol_ms_count{job="histchanges",symbol="AAPL"} 1"""))
+    assert(ctx.prometheusText.contains("# TYPE lat_ms histogram"))
+    // a second batch adds to every sample of its series
+    fin.addData(Seq(("AAPL", 700.0)))
+    chg.addData(Seq(("AAPL", 700.0)))
+    awaitLines(ctx, jobs, Set(
+      """lat_ms_bucket{job="histfinal",le="100"} 1""", """lat_ms_bucket{job="histfinal",le="500"} 2""",
+      """lat_ms_bucket{job="histfinal",le="+Inf"} 3""",
+      """lat_ms_sum{job="histfinal"} 1050""", """lat_ms_count{job="histfinal"} 3""",
+      """lat_by_symbol_ms_bucket{job="histchanges",le="500",symbol="AAPL"} 1""",
+      """lat_by_symbol_ms_bucket{job="histchanges",le="+Inf",symbol="AAPL"} 2""",
+      """lat_by_symbol_ms_sum{job="histchanges",symbol="AAPL"} 750""",
+      """lat_by_symbol_ms_count{job="histchanges",symbol="MSFT"} 1"""))
+    ctx.sql("STOP JOB histfinal")
+    ctx.sql("STOP JOB histchanges")
+  }
+
+  test("a multi-line literal reads the same value through SqlApp.run and executeScript") {
+    val ctx = new VeloContext(spark)
+    val viaApp = SqlApp.run(ctx, "-- SQL Application: Crlf\r\nSELECT 'a\r\nb' AS s;\r\n", lookup)
+      ._2.head.collect().head.getString(0)
+    val viaScript = ctx.executeScript("SELECT 'a\r\nb' AS s;\r\n").head.collect().head.getString(0)
+    assert(viaApp == "a\r\nb" && viaScript == viaApp, (viaApp, viaScript))
   }
 }

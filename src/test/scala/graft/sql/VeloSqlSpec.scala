@@ -1042,6 +1042,10 @@ class VeloSqlSpec extends AnyFunSuite with SparkTestSession {
     assert(x.length == 1, x.toString)
   }
 
+  test("a '--' comment ends at a lone '\\r' as well as at '\\n', as in Spark's grammar") {
+    assert(VeloSqlParser.tokenize("SELECT 1 -- c\rFROM t").map(_.text) == Vector("SELECT", "1", "FROM", "t"))
+  }
+
   test("r16 review: a WITH() on an earlier UNION branch reaches START JOB props") {
     // the trailing-clause loop attaches the WITH to the branch it just
     // read; liftProps read only the LAST branch and silently dropped
